@@ -50,7 +50,7 @@ object Graft {
     * compiled under AQE captures UnknownPartitioning (the AQE plan is
     * per-stage; the RDD's partitioning never reaches the LogicalRDD), so
     * consumers silently RE-EXCHANGE the relation every iteration —
-    * tools/PartProbe, r10.
+    * PartitionedCheckpointSpec's control case, r10.
     *
     * Two passes, so the partition count stays SCALE-ADAPTIVE (guide §2 —
     * a constant tuned for either local mode or the cluster is wrong at
@@ -59,46 +59,26 @@ object Graft {
     *     result from actual bytes (1 partition at spec scale, thousands
     *     at 100 TB);
     *  2. re-shuffle the MATERIALIZED rows to hashpartitioning(key, p) at
-    *     exactly that count, with only this checkpoint compiled AQE-off
-    *     so the LogicalRDD keeps the partitioning — honored even by
-    *     consumers that run WITH AQE on.
+    *     exactly that count as a [[stampedCheckpoint]], so the LogicalRDD
+    *     keeps the partitioning — honored even by consumers that run
+    *     WITH AQE on.
     * Pass 2 re-exchanges the relation once from memory — metadata-grain
     * here (edges/labels/ranks, never payloads) and bought back many
     * times over by the per-iteration exchanges it removes. A hot key
     * costs partition imbalance bounded by that key's rows (iteration
     * joins keep full AQE, including skew split on their other inputs).
+    * Pass 2 is LAZY (r11): the stamp is fixed at compile time, so the
+    * first consumer action doubles as its materialization job (one
+    * driver barrier fewer per iterative-operator invocation); the staged
+    * pass stays eager because it must run to learn p.
     */
   def partitionedCheckpoint(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val spark = df.sparkSession
     val staged = df.localCheckpoint()
     // floor 2: a 1→1-partition shuffle is elided by planning, leaving the
     // checkpoint with UnknownPartitioning — exactly the defect this
     // helper removes (observed: the spec's control case)
     val p = math.max(2, staged.rdd.getNumPartitions)
-    // the AQE flip is session-global, and compositions overlap
-    // independent legs on threads (core.Par, guide §2.6): the lock keeps
-    // two concurrent flips from saving each other's flipped value and
-    // leaving AQE off for the session. A leg that merely COMPILES a plan
-    // during another leg's off-window can lose AQE coalescing for that
-    // one intermediate — benign (plan shape of an eager checkpoint, never
-    // results; the stamped checkpoint itself always compiles under its
-    // own thread's flip).
-    aqeFlipLock.synchronized {
-      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // LAZY pass 2 (r11): the stamp's LogicalRDD partitioning is fixed at
-      // COMPILE time (here, AQE-off), not at materialization — so the
-      // first consumer action doubles as the stamp's materialization job
-      // and one driver barrier per iterative-operator invocation
-      // disappears (CC's init aggregate, bfsHops' root MIN, pageRank's
-      // first lineage cut). The staged pass stays eager: it must run to
-      // learn the scale-adaptive count p. A first action referencing the
-      // stamp twice merely risks computing a partition twice FROM THE
-      // MATERIALIZED staged rows (deterministic hash repartition) — no
-      // correctness exposure.
-      try staged.repartition(p, key).localCheckpoint(false)
-      finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    }
+    stampedCheckpoint(staged.repartition(p, key), p)
   }
 
   /** Checkpoint a plan whose FINAL shuffle is keyed the way consumers
@@ -111,27 +91,19 @@ object Graft {
     * hoist the partial agg above it and shuffle pre-aggregation rows).
     * `p` comes from an already-stamped sibling relation (the CC loop
     * passes sym's count), so the count stays scale-adaptive — AQE sized
-    * the sibling from actual bytes. Trade-off (same as
-    * [[partitionedCheckpoint]] pass 2): this one compiled-off query
-    * skips AQE coalescing/skew handling; callers use it for plans whose
-    * per-key volume is already collapsed by a partial aggregate.
+    * the sibling from actual bytes. Trade-off: this one query skips AQE
+    * coalescing/skew handling; callers use it for plans whose per-key
+    * volume is already collapsed by a partial aggregate.
+    *
+    * The compile happens in a cloned session (graftshims
+    * ClonedCheckpoint), so the caller's session keeps AQE and its
+    * partition count throughout — a `core.Par` leg compiling alongside
+    * sees the session unchanged (PartitionedCheckpointSpec).
     */
-  def stampedCheckpoint(df: DataFrame, p: Int, eager: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    aqeFlipLock.synchronized {
-      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-      val spWas = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-      try df.localCheckpoint(eager)
-      finally {
-        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        spark.conf.set("spark.sql.shuffle.partitions", spWas)
-      }
-    }
-  }
-
-  private val aqeFlipLock = new Object
+  def stampedCheckpoint(df: DataFrame, p: Int, eager: Boolean = false): DataFrame =
+    org.apache.spark.sql.graftshims.ClonedCheckpoint.localCheckpoint(df,
+      Map("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> p.toString), eager)
 
   def local(cores: Int = 32): SparkSession = configure(
     SparkSession.builder()

@@ -27,14 +27,6 @@ object TextFunctions {
   def hash32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** Second independent 32-bit hash (hex chars 9-16), forced odd — the
-    * multiplier of the 2-universal family h_i(x) = (a + i·b) mod 2^32 used
-    * to derive k MinHash functions from one md5 (Broder's construction:
-    * one digest per shingle, k cheap linear combinations).
-    */
-  def hash32b(c: Column): Column =
-    conv(substring(md5(c), 9, 8), 16, 10).cast("long").bitwiseOR(lit(1L))
-
   /** i-th derived hash of the (a,b) pair: (a + i·b) mod 2^32. */
   def derivedHash(a: Column, b: Column, i: Int): Column =
     (a + lit(i.toLong) * b) % lit(4294967296L)

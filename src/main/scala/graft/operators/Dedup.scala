@@ -243,7 +243,7 @@ object Dedup {
   /** [[incrementalCandidatesIndexed]] with the SHARD side's band relation
     * ALSO pre-materialized — for compositions that maintain the band
     * index (q609's shape: the same shard bands feed BOTH the probe and
-    * the index append via [[appendBandsPre]]), so the shard band pass
+    * the index append via [[appendBands]]), so the shard band pass
     * materializes once per ingest instead of once per consumer. It IS
     * the back half of [[incrementalCandidatesIndexed]] (which delegates
     * here — identity is by construction, and the maintained-index oracle
@@ -302,27 +302,19 @@ object Dedup {
 
   /** Band-index MAINTENANCE — the fourth leg of continuous ingestion
     * (admit → verify → merge labels → UPDATE the index): the admitted
-    * shard's band rows append to the persisted band relation. Bands are
-    * per-document, so the appended relation is EXACTLY `lshBands` over
-    * index ∪ shard signatures — probing it with the next shard is
-    * identical to probing a from-scratch rebuild, which
-    * MaterializedIndexSpec proves through a disk round-trip (in
-    * production the append is a partition-local parquet append: new
-    * files land in matched band partitions, existing files are never
-    * rewritten — the spec asserts that too). q609 chains two shards
-    * through the maintained index end-to-end.
+    * shard's band rows (`lshBands` of its signatures) append to the
+    * persisted band relation. Bands are per-document, so the appended
+    * relation is EXACTLY `lshBands` over index ∪ shard signatures —
+    * probing it with the next shard is identical to probing a
+    * from-scratch rebuild, which MaterializedIndexSpec proves through a
+    * disk round-trip (in production the append is a partition-local
+    * parquet append: new files land in matched band partitions, existing
+    * files are never rewritten — the spec asserts that too). q609 chains
+    * two shards through the maintained index end-to-end, materializing
+    * the shard bands once for both the probe
+    * ([[incrementalCandidatesBandedBoth]]) and this append.
     */
-  def appendBands(indexBands: DataFrame, shardSig: DataFrame,
-      numHashes: Int = 8, rowsPerBand: Int = 2): DataFrame =
-    appendBandsPre(indexBands, lshBands(shardSig, numHashes, rowsPerBand))
-
-  /** [[appendBands]] over an ALREADY-DERIVED shard band relation — the
-    * maintenance leg for compositions that materialize the shard bands
-    * once and feed both the probe ([[incrementalCandidatesBandedBoth]])
-    * and the append (q609). Identical rows by construction
-    * ([[appendBands]] delegates here).
-    */
-  def appendBandsPre(indexBands: DataFrame, shardBands: DataFrame): DataFrame =
+  def appendBands(indexBands: DataFrame, shardBands: DataFrame): DataFrame =
     indexBands.select("doc_id", "band", "bucket")
       .unionAll(shardBands.select("doc_id", "band", "bucket"))
 
@@ -497,16 +489,16 @@ object Dedup {
   def connectedComponentsCounted(pairs: DataFrame, maxIter: Int = 50): (DataFrame, Long) = {
     // sym is checkpointed partitioning-preserving (r10,
     // Graft.partitionedCheckpoint): under a plain AQE-compiled checkpoint
-    // the LogicalRDD reports UnknownPartitioning — the probe
-    // (tools/PartProbe) shows every round's propagation join then
-    // RE-EXCHANGES the edge-sized sym relation, i.e. the "partitioned
-    // once, reused every round" design had been silently broken since
-    // AQE became the engine default. With the partitioning preserved,
-    // every consumer — the init aggregate and each round's join — reads
-    // sym exchange-free even though the rounds themselves run WITH AQE
-    // on (PartProbe's mixed case; plans/r10/cc_round_after.txt shows the
-    // round join's sym side as a bare Sort over the ExistingRDD, and a
-    // hot src key costs partition imbalance bounded by that key's
+    // the LogicalRDD reports UnknownPartitioning — every round's
+    // propagation join then RE-EXCHANGES the edge-sized sym relation,
+    // i.e. the "partitioned once, reused every round" design had been
+    // silently broken since AQE became the engine default. With the
+    // partitioning preserved, every consumer — the init aggregate and
+    // each round's join — reads sym exchange-free even though the rounds
+    // themselves run WITH AQE on (PartitionedCheckpointSpec pins both
+    // this mixed case and the control; plans/r10/cc_round_after.txt shows
+    // the round join's sym side as a bare Sort over the ExistingRDD, and
+    // a hot src key costs partition imbalance bounded by that key's
     // distinct neighbors — the pre-AQE behavior this loop always had;
     // round-side AQE skew splitting on the lbl key stays active).
     // countless repartition: AQE sizes the construction shuffle from

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Iterative graph computations as dataframe joins — the Pregel-style
@@ -29,10 +30,11 @@ object Graphs {
     // base tables by every post-cut segment (a full scan per 3
     // supersteps at scale), and a plain AQE-compiled checkpoint would be
     // re-EXCHANGED by every superstep (UnknownPartitioning; the
-    // connectedComponents finding, tools/PartProbe). For iters ≤ 3 the
-    // whole loop is ONE job in which ReusedExchange already dedups the
-    // e subtree — a checkpoint there only adds two driver barriers
-    // (measured on q128: ~+1 s at sf0.1 for zero plan benefit).
+    // connectedComponents finding, PartitionedCheckpointSpec). For
+    // iters ≤ 3 the whole loop is ONE job in which ReusedExchange
+    // already dedups the e subtree — a checkpoint there only adds two
+    // driver barriers (measured on q128: ~+1 s at sf0.1 for zero plan
+    // benefit).
     val e0 = edges.select(col("src"), col("dst"))
     val e = if (iters > 3) graft.core.Graft.partitionedCheckpoint(e0, col("src")) else e0
     // one explode pass, not a two-branch union: the union scanned the
@@ -78,12 +80,17 @@ object Graphs {
     * this replaces let one high-id hub vertex own Σ indeg·outdeg wedges
     * (the skew blowup at web scale). The oriented relation is
     * materialized once (it feeds both wedge sides and the closing join);
-    * the input is materialized too so the degree aggregate and the
-    * orientation join don't re-derive the caller's (often join+aggregate)
-    * edge pipeline. Returns one row (n_triangles).
+    * the input is materialized too (unless it already is a checkpoint)
+    * so the degree aggregate and the orientation join don't re-derive
+    * the caller's (often join+aggregate) edge pipeline. Returns one row
+    * (n_triangles).
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("u"), col("v")).localCheckpoint(true)
+    // an edge list that is already a checkpoint (q159 materializes it
+    // for its own edge count) is read as is, not copied a second time
+    val uv = edges.select(col("u"), col("v"))
+    val e = if (edges.queryExecution.analyzed.isInstanceOf[LogicalRDD]) uv
+      else uv.localCheckpoint(true)
     val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val lowFirst = col("du") < col("dv") ||

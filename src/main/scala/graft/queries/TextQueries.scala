@@ -704,7 +704,7 @@ object TextQueries {
         Dedup.connectedComponents(Dedup.minhashCandidatesBanded(bands0))) {
         val sb1 = Dedup.lshBands(s1Sig).localCheckpoint(true)
         (Dedup.incrementalCandidatesBandedBoth(bands0, sb1),
-          Dedup.appendBandsPre(bands0, sb1).localCheckpoint(true))
+          Dedup.appendBands(bands0, sb1).localCheckpoint(true))
       }
       idxSig.unpersist(false); s1Sig.unpersist(false)
       // shard1's label merge ∥ shard2's probe of the MAINTAINED index —

@@ -1,7 +1,10 @@
 package graft.core
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -12,11 +15,13 @@ import graft.SparkSpec
   * which silently re-shuffled the edge relation in EVERY round of
   * connectedComponents / pageRank / bfsHopsFrom since AQE became the
   * engine default. Graft.partitionedCheckpoint compiles just the
-  * checkpoint with AQE off, preserving the partitioning for consumers
-  * that themselves run WITH AQE on. These tests fail if a Spark upgrade
-  * or a conf change breaks that mechanism.
+  * checkpoint with AQE off (in a cloned session), preserving the
+  * partitioning for consumers that themselves run WITH AQE on. These
+  * tests fail if a Spark upgrade or a conf change breaks that mechanism,
+  * or if the AQE-off compile leaks into the caller's session.
   */
 class PartitionedCheckpointSpec extends SparkSpec {
+  import PartitionedCheckpointSpec._
 
   /** Exchange count in the FINAL (post-AQE) plan tree only — the
     * formatted explain of an executed adaptive plan also prints the
@@ -35,8 +40,6 @@ class PartitionedCheckpointSpec extends SparkSpec {
       .select((col("id") % 97).as("src"), col("id").as("dst"))
     val e = Graft.partitionedCheckpoint(
       base.repartition(col("src")).dropDuplicates(Seq("src", "dst")), col("src"))
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
-      "AQE flag must be restored after the checkpoint")
 
     // groupBy on the preserved key: zero exchanges
     assert(exchanges(e.groupBy("src").agg(min("dst"))) == 0)
@@ -81,8 +84,6 @@ class PartitionedCheckpointSpec extends SparkSpec {
     // init: groupBy rides sym's stamp — compiled stamped, ZERO exchanges
     val init = Graft.stampedCheckpoint(
       sym.groupBy(col("src").as("v")).agg(min("dst").as("lbl")), p)
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
-      "flags must be restored after stampedCheckpoint")
     assert(init.rdd.getNumPartitions == p)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -104,6 +105,31 @@ class PartitionedCheckpointSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
+  test("a stamped checkpoint in flight leaves the session conf to a concurrent Par leg") {
+    val (aqe, parts) = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val sessionParts = spark.conf.get(parts)
+    // leg A's tasks park inside the eager checkpoint until leg B is done
+    val park = udf { (x: Long) =>
+      inTask.countDown()
+      release.await(60, TimeUnit.SECONDS)
+      x
+    }
+    val (_, (aqeSeen, partsSeen, plan)) = Par.two {
+      Graft.stampedCheckpoint(
+        spark.range(8).select(park(col("id")).as("id")), 3, eager = true)
+    } {
+      try {
+        assert(inTask.await(60, TimeUnit.SECONDS), "leg A never reached its task")
+        val other = spark.range(100).groupBy((col("id") % 7).as("k")).count()
+        (spark.conf.get(aqe), spark.conf.get(parts), other.queryExecution.executedPlan)
+      } finally release.countDown()
+    }
+    assert(aqeSeen == "true", "AQE was off for the session while leg A compiled")
+    assert(partsSeen == sessionParts, "leg A's partition count leaked into the session")
+    assert(plan.isInstanceOf[AdaptiveSparkPlanExec],
+      s"leg B's plan was compiled without AQE:\n$plan")
+  }
+
   test("partitionedCheckpoint preserves rows exactly") {
     val base = spark.range(5000)
       .select((col("id") % 37).as("src"), (col("id") % 211).as("dst"))
@@ -114,4 +140,10 @@ class PartitionedCheckpointSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want)
   }
+}
+
+object PartitionedCheckpointSpec {
+  // latches live in an object so the UDF closure reaches them statically
+  val inTask = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
 }

@@ -135,8 +135,8 @@ class LshBucketCapSpec extends SparkSpec {
       assert(both.exceptAll(sigLevel).count() == 0L &&
         sigLevel.exceptAll(both).count() == 0L, s"cap=$cap")
     }
-    val pre = Dedup.appendBandsPre(idxBands, shdBands)
-    val sig = Dedup.appendBands(idxBands, shard)
+    val pre = Dedup.appendBands(idxBands, shdBands)
+    val sig = Dedup.appendBands(idxBands, Dedup.lshBands(shard))
     assert(pre.exceptAll(sig).count() == 0L && sig.exceptAll(pre).count() == 0L)
   }
 

@@ -94,7 +94,7 @@ class MaterializedIndexSpec extends SparkSpec {
     val viaHelper = Dedup.incrementalCandidatesIndexed(
         Dedup.appendBands(
           Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text")),
-          Dedup.minhashSignatures(shard1, "doc_id", "text")),
+          Dedup.lshBands(Dedup.minhashSignatures(shard1, "doc_id", "text"))),
         Dedup.minhashSignatures(shard2, "doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaHelper == rebuilt)
