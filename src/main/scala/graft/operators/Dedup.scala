@@ -74,30 +74,62 @@ object Dedup {
         (1 until numHashes).map(i => min(derivedHash(col("a"), col("b"), i)).as(s"m$i")): _*)
   }
 
-  /** LSH band explosion: signature rows → (doc_id, band, bucket_key).
-    * The bucket key is a single long — rowsPerBand 32-bit lanes packed
-    * with a mixing multiplier — so the band self-join hashes/compares one
-    * primitive instead of building per-row strings.
+  /** LSH band state: signature rows → (doc_id, band, bucket), the one
+    * constructor of the relation both band-pair kernels
+    * ([[minhashCandidatesBanded]], [[incrementalCandidates]]) consume and
+    * [[appendBands]] maintains. The bucket key is a single long —
+    * rowsPerBand 32-bit lanes packed by shift-and-xor — so the band
+    * self-join hashes/compares one primitive instead of building per-row
+    * strings.
+    *
+    * Returns the band relation MATERIALIZED (eager `localCheckpoint`):
+    * planning a join whose keys are expression-derived pushes an
+    * isnotnull(key) filter below the projection, INLINING the full
+    * shingle→minhash pipeline into the Filter — evaluated 2× there + 1×
+    * in the projection, per row, per branch, per join side, and
+    * filter-context evaluation of the HOF subtree is ~100× a
+    * projection-context pass (measured: two 30 KB docs, 0.16 s projected
+    * vs 44.5 s filtered; q618's candidate step 33 s → ~1 s with the
+    * barrier). The ExistingRDD barrier leaves join planning nothing to
+    * inline, so callers feed the result to any number of band joins (and
+    * the index append) without adding a barrier of their own.
     */
   def lshBands(sig: DataFrame, numHashes: Int = 8, rowsPerBand: Int = 2): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    val bands = (0 until numBands).map { bIdx =>
-      // cast defensively: on an INT lane, shiftleft(_, 32) would be a
-      // silent no-op (Java shifts wrap mod the width) and the bucket key
-      // would degrade to a collision-prone plain XOR
-      val lanes = (0 until rowsPerBand)
-        .map(r => col(s"m${bIdx * rowsPerBand + r}").cast("long"))
-      // (k0 << 32) ^ k1 packs two 32-bit lanes injectively into one long
-      // (shifts don't throw under ANSI). Only exact for rowsPerBand ≤ 2 —
-      // more lanes would shift the first out of the word.
-      require(rowsPerBand <= 2, "long-packed bucket keys support ≤2 rows/band")
-      val bucket = lanes.reduceLeft((a, b) => shiftleft(a, 32).bitwiseXOR(b))
-      sig.select(col("doc_id"), lit(bIdx).as("band"), bucket.as("bucket"))
+    // (k0 << 32) ^ k1 packs two 32-bit lanes injectively into one long
+    // (shifts don't throw under ANSI). Only exact for rowsPerBand ≤ 2 —
+    // more lanes would shift the first out of the word.
+    require(rowsPerBand <= 2, "long-packed bucket keys support ≤2 rows/band")
+    // the band union references the signature relation once per band —
+    // cache it for the call or the whole shingle→md5→min pipeline
+    // recomputes per branch (uncached index measured 153 s at 1M docs)
+    withCallScopedCache(sig) {
+      (0 until numHashes / rowsPerBand).map { bIdx =>
+        // cast defensively: on an INT lane, shiftleft(_, 32) would be a
+        // silent no-op (Java shifts wrap mod the width) and the bucket key
+        // would degrade to a collision-prone plain XOR
+        val lanes = (0 until rowsPerBand)
+          .map(r => col(s"m${bIdx * rowsPerBand + r}").cast("long"))
+        val bucket = lanes.reduceLeft((a, b) => shiftleft(a, 32).bitwiseXOR(b))
+        sig.select(col("doc_id"), lit(bIdx).as("band"), bucket.as("bucket"))
+      }.reduce(_ unionAll _).localCheckpoint(true)
     }
-    bands.reduce(_ unionAll _)
   }
 
-  /** Candidate near-dup pairs: docs sharing any LSH band bucket.
+  /** Call-scoped cache contract (the kmeansAssignments pattern): inputs
+    * not already persisted are cached for the call and released in the
+    * finally, so library callers don't leak session caches — the body
+    * must materialize whatever it returns (an eager localCheckpoint)
+    * before the cache goes. An input the CALLER already cached is left
+    * alone (both the cache and its lifetime stay the caller's).
+    */
+  private def withCallScopedCache[T](dfs: DataFrame*)(body: => T): T = {
+    val mine = dfs.filter(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    mine.foreach(_.cache())
+    try body finally mine.foreach(_.unpersist(false))
+  }
+
+  /** Candidate near-dup pairs: docs sharing any LSH band bucket —
+    * [[minhashCandidatesBanded]] over [[lshBands]] of `sig`.
     *
     * `maxBucket` is the 100 TB safety valve: a degenerate bucket of B
     * docs (empty pages, shared boilerplate — common in web corpora)
@@ -110,90 +142,74 @@ object Dedup {
     * still screens each star edge. Default None preserves the exact
     * all-pairs semantics.
     */
-  /** Call-scoped cache contract (the kmeansAssignments pattern): inputs
-    * not already persisted are cached for the call and released in the
-    * finally, with the result materialized under the cache by an eager
-    * localCheckpoint — library callers don't leak session caches. An
-    * input the CALLER already cached is left alone (both the cache and
-    * its lifetime stay the caller's), which is what lets a composition
-    * like q605 share one signature relation across
-    * [[minhashCandidates]] and [[incrementalCandidates]] instead of
-    * recomputing the shingle→md5→min pipeline per operator.
-    */
-  private def withCallScopedCache[T](dfs: DataFrame*)(body: => T): T = {
-    val mine = dfs.filter(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    mine.foreach(_.cache())
-    try body finally mine.foreach(_.unpersist(false))
-  }
-
   def minhashCandidates(sig: DataFrame, numHashes: Int = 8, rowsPerBand: Int = 2,
       maxBucket: Option[Int] = None): DataFrame =
-    // the band union references the signature relation 2·bands times —
-    // cache it or the whole shingle→md5→min pipeline recomputes per branch
-    withCallScopedCache(sig) {
-      // materialize the (metadata-sized) band relation BEFORE the
-      // self-join: planning a join whose keys are expression-derived
-      // pushes an isnotnull(key) filter below the projection, INLINING
-      // the full shingle→minhash pipeline into the Filter — evaluated
-      // 2× there + 1× in the projection, per row, per branch, per join
-      // side, and filter-context evaluation of the HOF subtree is ~100×
-      // a projection-context pass (measured: two 30 KB docs, 0.16 s
-      // projected vs 44.5 s filtered; q618's candidate step 33 s → ~1 s
-      // with the barrier). An ExistingRDD barrier leaves planning
-      // nothing to inline.
-      minhashCandidatesBanded(
-        lshBands(sig, numHashes, rowsPerBand).localCheckpoint(true), maxBucket)
-    }
+    minhashCandidatesBanded(lshBands(sig, numHashes, rowsPerBand), maxBucket)
 
-  /** [[minhashCandidates]] over a PRE-MATERIALIZED band relation — the
-    * full-corpus twin of [[incrementalCandidatesIndexed]]: a composition
-    * that also probes the same index (q604/q605/q609's shape: corpus CC
-    * from the full pair set, THEN a shard admission against the same
-    * bands) builds `lshBands(sig).localCheckpoint(true)` ONCE and feeds
-    * both operators, instead of each operator re-materializing the
-    * corpus-sized band pass internally. Identical output to
-    * [[minhashCandidates]] (it IS its back half — DedupSpec pins the
-    * equality); `bands` must already be materialized (the expression
-    * barrier is the caller's job when bands come from a lazy plan — from
-    * disk in production it is already a plain scan).
+  /** (d1, d2), d1 < d2, for every two docs sharing a (band, bucket). */
+  private def allPairs(b: DataFrame): DataFrame = b.as("x").join(b.as("y"),
+      col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+        col("x.doc_id") < col("y.doc_id"))
+    .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
+
+  /** Shard-touching pairs: shard×index probe + shard×shard intra. */
+  private def probeIntra(shd: DataFrame, idx: DataFrame): DataFrame =
+    shd.as("s").join(idx.as("i"),
+        col("s.band") === col("i.band") && col("s.bucket") === col("i.bucket"))
+      .select(least(col("s.doc_id"), col("i.doc_id")).as("d1"),
+        greatest(col("s.doc_id"), col("i.doc_id")).as("d2"))
+      .unionAll(allPairs(shd))
+
+  /** The FULL-CORPUS band-pair kernel over any (doc_id, band, bucket)
+    * relation — [[lshBands]] output, or the banded-Hamming lane bands of
+    * [[bandedHammingPairs]]: distinct (d1, d2) pairs sharing a bucket,
+    * `maxBucket`-capped as documented on [[minhashCandidates]],
+    * materialized by an eager localCheckpoint. A composition that also
+    * probes the same index (q604/q605/q609's shape: corpus CC from the
+    * full pair set, THEN a shard admission against the same bands) builds
+    * `lshBands(sig)` ONCE and feeds both kernels. `bands` must not carry
+    * an expression-derived key over an expensive lazy plan — [[lshBands]]
+    * output is materialized, and a persisted index is a plain scan.
     */
   def minhashCandidatesBanded(bands: DataFrame,
       maxBucket: Option[Int] = None): DataFrame = {
-      def allPairs(b: DataFrame) = b.as("x").join(b.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      val pairs = maxBucket match {
-        case None => allPairs(bands).distinct()
-        case Some(cap) =>
-          // one aggregate sizes every bucket and picks its hub; the size
-          // rides back as a column so the split is a filter, not a rescan
-          val stats = bands.groupBy("band", "bucket")
-            .agg(count(lit(1)).as("bsz"), min("doc_id").as("hub"))
-          val sized = bands.join(stats, Seq("band", "bucket"))
-          val dense = allPairs(sized.where(col("bsz") <= cap).select("doc_id", "band", "bucket"))
-          val star = sized.where(col("bsz") > cap && col("doc_id") =!= col("hub"))
-            .select(col("hub").as("d1"), col("doc_id").as("d2"))
-          dense.unionAll(star).distinct()
-      }
-      pairs.localCheckpoint(true)
+    val pairs = maxBucket match {
+      case None => allPairs(bands)
+      case Some(cap) =>
+        // one aggregate sizes every bucket and picks its hub; the size
+        // rides back as a column so the split is a filter, not a rescan
+        val stats = bands.groupBy("band", "bucket")
+          .agg(count(lit(1)).as("bsz"), min("doc_id").as("hub"))
+        val sized = bands.join(stats, Seq("band", "bucket"))
+        val dense = allPairs(sized.where(col("bsz") <= cap).select("doc_id", "band", "bucket"))
+        val star = sized.where(col("bsz") > cap && col("doc_id") =!= col("hub"))
+          .select(col("hub").as("d1"), col("doc_id").as("d2"))
+        dense.unionAll(star)
+    }
+    pairs.distinct().localCheckpoint(true)
   }
 
-  /** Incremental LSH dedup: candidate pairs for a NEW shard against an
-    * existing corpus whose band-bucket index is already materialized —
-    * the shape that keeps continuous ingestion tractable at 100 TB. The
-    * full-corpus candidate join re-pairs index×index on every run
-    * (O(corpus) work to admit O(shard) rows); here the index side joins
-    * only where a shard bucket probes it, and the one self-join is
-    * shard×shard — total cost follows |shard| + |matched buckets|, never
-    * |corpus|². In production the index side is a bucket-partitioned
-    * table written once per corpus version (`lshBands` output persisted);
-    * the probe is then a co-located join on (band, bucket).
+  /** The INCREMENTAL band-pair kernel: candidate pairs for a NEW shard
+    * against an existing corpus whose band-bucket index is already
+    * materialized — the shape that keeps continuous ingestion tractable
+    * at 100 TB, and the index-probe pattern of incremental top-k
+    * similarity search. The full-corpus candidate join re-pairs
+    * index×index on every run (O(corpus) work to admit O(shard) rows);
+    * here the index side joins only where a shard bucket probes it, and
+    * the one self-join is shard×shard — total cost follows
+    * |shard| + |matched buckets|, never |corpus|². In production
+    * `indexBands` is a bucket-partitioned table written once per corpus
+    * version (persisted [[lshBands]] output, maintained by
+    * [[appendBands]]) and the probe is a co-located join on
+    * (band, bucket); MaterializedIndexSpec proves probe-from-disk
+    * candidate identity. Both sides are any (doc_id, band, bucket)
+    * relations — [[lshBands]] output for MinHash, lane bands for
+    * [[bandedHammingIncremental]].
     *
     * Exactly equivalent to `minhashCandidates(index ∪ shard)` restricted
-    * to pairs touching the shard (signatures are per-doc), which
-    * DedupSpec/q601 pin. Returns (d1, d2) with d1 < d2 across the union
-    * id space; doc_ids must be disjoint between the two sides.
+    * to pairs touching the shard (bands are per-doc), which
+    * LshBucketCapSpec and q601 pin. Returns (d1, d2) with d1 < d2 across
+    * the union id space; doc_ids must be disjoint between the two sides.
     *
     * `maxBucket` caps a degenerate bucket exactly like
     * [[minhashCandidates]]: bucket sizes are measured over index ∪ shard
@@ -203,106 +219,49 @@ object Dedup {
     * capped full-corpus candidates restricted to shard-touching pairs,
     * which LshBucketCapSpec pins.
     */
-  def incrementalCandidates(indexSig: DataFrame, shardSig: DataFrame,
-      numHashes: Int = 8, rowsPerBand: Int = 2,
-      maxBucket: Option[Int] = None): DataFrame =
-    // the index band union references its signature relation once per
-    // band — cache it or the corpus-sized shingle→md5→min pipeline
-    // recomputes per branch (uncached index measured 153 s at 1M docs)
-    withCallScopedCache(indexSig) {
-      // same expression-barrier as minhashCandidates: the index bands
-      // feed joins keyed on the expression-derived bucket — checkpoint
-      // the metadata-sized relation so no minhash expression reaches
-      // join planning (the persisted-index production path is already a
-      // plain scan; this aligns the in-memory convenience arm with it)
-      incrementalCandidatesIndexed(
-        lshBands(indexSig, numHashes, rowsPerBand).localCheckpoint(true),
-        shardSig, numHashes, rowsPerBand, maxBucket)
-    }
-
-  /** [[incrementalCandidates]] against a PRE-MATERIALIZED band index —
-    * the LSH twin of
-    * [[graft.operators.Similarity.ivfIncrementalPairsIndexed]]: the
-    * (doc_id, band, bucket) relation comes in as a relation (the
-    * persisted `lshBands` output in production — corpus text is never
-    * re-read), only the shard's signatures compute fresh.
-    * MaterializedIndexSpec proves probe-from-disk candidate identity.
-    */
-  def incrementalCandidatesIndexed(indexBands: DataFrame, shardSig: DataFrame,
-      numHashes: Int = 8, rowsPerBand: Int = 2,
-      maxBucket: Option[Int] = None): DataFrame =
-    withCallScopedCache(shardSig) {
-      // shard bands hit three joins keyed on the expression-derived
-      // bucket — checkpoint (shard-sized) for the same filter-inlining
-      // barrier as minhashCandidates
-      incrementalCandidatesBandedBoth(indexBands,
-        lshBands(shardSig, numHashes, rowsPerBand).localCheckpoint(true),
-        maxBucket)
-    }
-
-  /** [[incrementalCandidatesIndexed]] with the SHARD side's band relation
-    * ALSO pre-materialized — for compositions that maintain the band
-    * index (q609's shape: the same shard bands feed BOTH the probe and
-    * the index append via [[appendBands]]), so the shard band pass
-    * materializes once per ingest instead of once per consumer. It IS
-    * the back half of [[incrementalCandidatesIndexed]] (which delegates
-    * here — identity is by construction, and the maintained-index oracle
-    * q609 checks it end-to-end).
-    */
-  def incrementalCandidatesBandedBoth(indexBands: DataFrame, shardBands: DataFrame,
+  def incrementalCandidates(indexBands: DataFrame, shardBands: DataFrame,
       maxBucket: Option[Int] = None): DataFrame = {
-      def probeIntra(shd: DataFrame, idx: DataFrame): DataFrame = {
-        val probe = shd.as("s").join(idx.as("i"),
-            col("s.band") === col("i.band") && col("s.bucket") === col("i.bucket"))
-          .select(least(col("s.doc_id"), col("i.doc_id")).as("d1"),
-            greatest(col("s.doc_id"), col("i.doc_id")).as("d2"))
-        val intra = shd.as("x").join(shd.as("y"),
-            col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        probe.unionAll(intra)
-      }
-      val pairs = maxBucket match {
-        case None => probeIntra(shardBands, indexBands)
-        case Some(cap) =>
-          // bucket size + hub over index ∪ shard — the IVF incremental
-          // arm's recipe (ivfIncrementalPairsIndexed): at scale the index
-          // side's counts are ONE aggregate over the persisted band
-          // relation (index metadata, no corpus text). doc_ids are
-          // disjoint, so min struct(doc_id, side) = the union's min id
-          // with its side riding along for the hub-ownership test.
-          val tagged = indexBands.select("doc_id", "band", "bucket")
-            .withColumn("side", lit(0))
-            .unionAll(shardBands.select("doc_id", "band", "bucket")
-              .withColumn("side", lit(1)))
-          // eager cut: O(buckets) rows, and an aggregate feeding three
-          // aliased joins below would otherwise recompute per branch
-          val stats = tagged.groupBy("band", "bucket")
-            .agg(count(lit(1)).as("bsz"),
-              min(struct(col("doc_id"), col("side"))).as("mh"))
-            .select(col("band"), col("bucket"), col("bsz"),
-              col("mh.doc_id").as("hub"), col("mh.side").as("hub_side"))
-            .localCheckpoint(true)
-          val denseKeys = stats.where(col("bsz") <= cap).select("band", "bucket")
-          val dense = probeIntra(
-            shardBands.join(denseKeys, Seq("band", "bucket")),
-            indexBands.join(denseKeys, Seq("band", "bucket")))
-          // oversized: hub-star restricted to pairs touching the shard —
-          // (hub, member) survives iff the member is a shard doc OR the
-          // hub itself is (then every star edge touches the shard); hub
-          // is the union min, so d1 < d2 holds by construction
-          val star = tagged.join(stats.where(col("bsz") > cap), Seq("band", "bucket"))
-            .where(col("doc_id") =!= col("hub") &&
-              (col("side") === 1 || col("hub_side") === 1))
-            .select(col("hub").as("d1"), col("doc_id").as("d2"))
-          dense.unionAll(star)
-      }
-      pairs.distinct().localCheckpoint(true)
+    val pairs = maxBucket match {
+      case None => probeIntra(shardBands, indexBands)
+      case Some(cap) =>
+        // bucket size + hub over index ∪ shard — the IVF incremental
+        // arm's recipe (ivfIncrementalPairsIndexed): at scale the index
+        // side's counts are ONE aggregate over the persisted band
+        // relation (index metadata, no corpus text). doc_ids are
+        // disjoint, so min struct(doc_id, side) = the union's min id
+        // with its side riding along for the hub-ownership test.
+        val tagged = indexBands.select("doc_id", "band", "bucket")
+          .withColumn("side", lit(0))
+          .unionAll(shardBands.select("doc_id", "band", "bucket")
+            .withColumn("side", lit(1)))
+        // eager cut: O(buckets) rows, and an aggregate feeding three
+        // aliased joins below would otherwise recompute per branch
+        val stats = tagged.groupBy("band", "bucket")
+          .agg(count(lit(1)).as("bsz"),
+            min(struct(col("doc_id"), col("side"))).as("mh"))
+          .select(col("band"), col("bucket"), col("bsz"),
+            col("mh.doc_id").as("hub"), col("mh.side").as("hub_side"))
+          .localCheckpoint(true)
+        val denseKeys = stats.where(col("bsz") <= cap).select("band", "bucket")
+        val dense = probeIntra(
+          shardBands.join(denseKeys, Seq("band", "bucket")),
+          indexBands.join(denseKeys, Seq("band", "bucket")))
+        // oversized: hub-star restricted to pairs touching the shard —
+        // (hub, member) survives iff the member is a shard doc OR the
+        // hub itself is (then every star edge touches the shard); hub
+        // is the union min, so d1 < d2 holds by construction
+        val star = tagged.join(stats.where(col("bsz") > cap), Seq("band", "bucket"))
+          .where(col("doc_id") =!= col("hub") &&
+            (col("side") === 1 || col("hub_side") === 1))
+          .select(col("hub").as("d1"), col("doc_id").as("d2"))
+        dense.unionAll(star)
     }
+    pairs.distinct().localCheckpoint(true)
+  }
 
   /** Band-index MAINTENANCE — the fourth leg of continuous ingestion
     * (admit → verify → merge labels → UPDATE the index): the admitted
-    * shard's band rows (`lshBands` of its signatures) append to the
+    * shard's band rows ([[lshBands]] of its signatures) append to the
     * persisted band relation. Bands are per-document, so the appended
     * relation is EXACTLY `lshBands` over index ∪ shard signatures —
     * probing it with the next shard is identical to probing a
@@ -311,8 +270,8 @@ object Dedup {
     * parquet append: new files land in matched band partitions, existing
     * files are never rewritten — the spec asserts that too). q609 chains
     * two shards through the maintained index end-to-end, materializing
-    * the shard bands once for both the probe
-    * ([[incrementalCandidatesBandedBoth]]) and this append.
+    * the shard bands once for both the probe ([[incrementalCandidates]])
+    * and this append.
     */
   def appendBands(indexBands: DataFrame, shardBands: DataFrame): DataFrame =
     indexBands.select("doc_id", "band", "bucket")
@@ -757,21 +716,6 @@ object Dedup {
         pmod(newComp, lit(nParts.toLong)).as(partCol))
   }
 
-  /** SimHash near-dup pairs: Hamming distance ≤ maxDist. Blocked by the
-    * top byte of the fingerprint before pairing so the join is bucketed,
-    * not n² (near-dups share high bits with probability ∝ similarity).
-    *
-    * `maxBlock` closes this operator's member of the degenerate-locality
-    * class: simhash blocks CONCENTRATE on real text (a 5k-doc fixture
-    * already grows a 237-member natural block — statistically similar
-    * documents share sign patterns), and exact dups share one block
-    * outright. A block over the cap restricts the pairing's x-side to
-    * its hub (min doc_id) — hub-anchored pairs only, still
-    * Hamming-VERIFIED, a subset of the exact output; blocks at or under
-    * the cap keep exact all-pairs (LshBucketCapSpec pins it). One
-    * aliased join against the witness-restricted x-side, no unioned
-    * self-join branches.
-    */
   /** Near-dup pairs over a MULTI-LANE fingerprint (perceptual image
     * hashes, or any 64-bit signature emitted as 16-bit lanes): candidates
     * are docs agreeing on ANY lane, verified by exact Hamming distance
@@ -784,7 +728,9 @@ object Dedup {
     * which is probabilistic). That is the multi-index Hamming trick
     * (Norouzi et al., "Fast Search in Hamming Space with Multi-Index
     * Hashing") — the same band-decomposition LSH uses, made exact by
-    * the distance bound. Pair cost follows lane collisions, never n².
+    * the distance bound, so the candidates come from the LSH full-corpus
+    * kernel [[minhashCandidatesBanded]] over one band per lane. Pair cost
+    * follows lane collisions, never n².
     *
     * `maxBand` is this operator's degenerate-locality valve (the
     * [[minhashCandidates]] recipe): exact duplicates share ALL lanes, so
@@ -796,26 +742,7 @@ object Dedup {
   def bandedHammingPairs(sig: DataFrame, idCol: String, laneCols: Seq[String],
       maxDist: Int = 3, maxBand: Option[Int] = None): DataFrame =
     withCallScopedCache(sig) {
-      val bands = laneCols.zipWithIndex.map { case (c, i) =>
-        sig.select(col(idCol).as("doc_id"), lit(i).as("band"),
-          col(c).cast("long").as("bucket"))
-      }.reduce(_ unionAll _)
-      def allPairs(b: DataFrame) = b.as("x").join(b.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      val cand = (maxBand match {
-        case None => allPairs(bands)
-        case Some(cap) =>
-          val stats = bands.groupBy("band", "bucket")
-            .agg(count(lit(1)).as("bsz"), min("doc_id").as("hub"))
-          val sized = bands.join(stats, Seq("band", "bucket"))
-          val dense = allPairs(
-            sized.where(col("bsz") <= cap).select("doc_id", "band", "bucket"))
-          val star = sized.where(col("bsz") > cap && col("doc_id") =!= col("hub"))
-            .select(col("hub").as("d1"), col("doc_id").as("d2"))
-          dense.unionAll(star)
-      }).distinct().localCheckpoint(true)
+      val cand = minhashCandidatesBanded(laneBands(sig, idCol, laneCols), maxBand)
       // verification joins mirror jaccardVerify's ReusedExchange shape:
       // both sides shuffle the identical lane subplan on doc_id. Pair
       // columns resolve through cand(...) — a lane literally named "d1"
@@ -830,13 +757,24 @@ object Dedup {
         .where(col("hamming") <= maxDist)
     }
 
+  /** One (doc_id, band = lane index, bucket = lane value) row per lane —
+    * left lazy: the lanes are plain columns of the (cached) signature
+    * relation, so there is no expression pipeline for a join filter to
+    * inline.
+    */
+  private def laneBands(sig: DataFrame, idCol: String, laneCols: Seq[String]): DataFrame =
+    laneCols.zipWithIndex.map { case (c, i) =>
+      sig.select(col(idCol).as("doc_id"), lit(i).as("band"),
+        col(c).cast("long").as("bucket"))
+    }.reduce(_ unionAll _)
+
   /** Incremental banded-Hamming dedup — the perceptual families'
-    * [[incrementalCandidatesIndexed]]: a media shard's hash lanes probe
-    * the PERSISTED hash relation (for image/audio/video hashes the
-    * lane row IS the index — id + four 16-bit lanes, ~40 bytes/doc, and
-    * maintenance is a plain row append: the relation is per-document,
-    * so append ≡ rebuild holds trivially, unlike the LSH band
-    * decomposition). Emits exactly the capped full run
+    * [[incrementalCandidates]], run over lane bands: a media shard's
+    * hash lanes probe the PERSISTED hash relation (for image/audio/video
+    * hashes the lane row IS the index — id + four 16-bit lanes,
+    * ~40 bytes/doc, and maintenance is a plain row append: the relation
+    * is per-document, so append ≡ rebuild holds trivially, unlike the LSH
+    * band decomposition). Emits exactly the capped full run
     * ([[bandedHammingPairs]] over index ∪ shard) RESTRICTED to pairs
     * touching the shard: dense buckets (union size ≤ cap) contribute
     * probe (shard×index) + intra (shard×shard) pairs; oversized buckets
@@ -852,60 +790,35 @@ object Dedup {
   def bandedHammingIncremental(indexSig: DataFrame, shardSig: DataFrame,
       idCol: String, laneCols: Seq[String],
       maxDist: Int = 3, maxBand: Option[Int] = None): DataFrame =
-    withCallScopedCache(indexSig) {
-      withCallScopedCache(shardSig) {
-        def bandsOf(sig: DataFrame): DataFrame = laneCols.zipWithIndex.map {
-          case (c, i) =>
-            sig.select(col(idCol).as("doc_id"), lit(i).as("band"),
-              col(c).cast("long").as("bucket"))
-        }.reduce(_ unionAll _)
-        val idxBands = bandsOf(indexSig)
-        val shdBands = bandsOf(shardSig)
-        def probeIntra(shd: DataFrame, idx: DataFrame): DataFrame = {
-          val probe = shd.as("s").join(idx.as("i"),
-              col("s.band") === col("i.band") && col("s.bucket") === col("i.bucket"))
-            .select(least(col("s.doc_id"), col("i.doc_id")).as("d1"),
-              greatest(col("s.doc_id"), col("i.doc_id")).as("d2"))
-          val intra = shd.as("x").join(shd.as("y"),
-              col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-                col("x.doc_id") < col("y.doc_id"))
-            .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-          probe.unionAll(intra)
-        }
-        val pairs = maxBand match {
-          case None => probeIntra(shdBands, idxBands)
-          case Some(cap) =>
-            val tagged = idxBands.withColumn("side", lit(0))
-              .unionAll(shdBands.withColumn("side", lit(1)))
-            val stats = tagged.groupBy("band", "bucket")
-              .agg(count(lit(1)).as("bsz"),
-                min(struct(col("doc_id"), col("side"))).as("mh"))
-              .select(col("band"), col("bucket"), col("bsz"),
-                col("mh.doc_id").as("hub"), col("mh.side").as("hub_side"))
-              .localCheckpoint(true)
-            val denseKeys = stats.where(col("bsz") <= cap).select("band", "bucket")
-            val dense = probeIntra(
-              shdBands.join(denseKeys, Seq("band", "bucket")),
-              idxBands.join(denseKeys, Seq("band", "bucket")))
-            val star = tagged.join(stats.where(col("bsz") > cap), Seq("band", "bucket"))
-              .where(col("doc_id") =!= col("hub") &&
-                (col("side") === 1 || col("hub_side") === 1))
-              .select(col("hub").as("d1"), col("doc_id").as("d2"))
-            dense.unionAll(star)
-        }
-        val cand = pairs.distinct().localCheckpoint(true)
-        val sigAll = indexSig.select(col(idCol) +: laneCols.map(col): _*)
-          .unionAll(shardSig.select(col(idCol) +: laneCols.map(col): _*))
-        val a = sigAll.as("a")
-        val b = sigAll.as("b")
-        val ham = laneCols.map(c => expr(s"bit_count(a.$c ^ b.$c)")).reduce(_ + _)
-        cand.join(a, col(s"a.$idCol") === cand("d1"))
-          .join(b, col(s"b.$idCol") === cand("d2"))
-          .select(cand("d1"), cand("d2"), ham.cast("long").as("hamming"))
-          .where(col("hamming") <= maxDist)
-      }
+    withCallScopedCache(indexSig, shardSig) {
+      val cand = incrementalCandidates(laneBands(indexSig, idCol, laneCols),
+        laneBands(shardSig, idCol, laneCols), maxBand)
+      val sigAll = indexSig.select(col(idCol) +: laneCols.map(col): _*)
+        .unionAll(shardSig.select(col(idCol) +: laneCols.map(col): _*))
+      val a = sigAll.as("a")
+      val b = sigAll.as("b")
+      val ham = laneCols.map(c => expr(s"bit_count(a.$c ^ b.$c)")).reduce(_ + _)
+      cand.join(a, col(s"a.$idCol") === cand("d1"))
+        .join(b, col(s"b.$idCol") === cand("d2"))
+        .select(cand("d1"), cand("d2"), ham.cast("long").as("hamming"))
+        .where(col("hamming") <= maxDist)
     }
 
+  /** SimHash near-dup pairs: Hamming distance ≤ maxDist. Blocked by the
+    * top byte of the fingerprint before pairing so the join is bucketed,
+    * not n² (near-dups share high bits with probability ∝ similarity).
+    *
+    * `maxBlock` closes this operator's member of the degenerate-locality
+    * class: simhash blocks CONCENTRATE on real text (a 5k-doc fixture
+    * already grows a 237-member natural block — statistically similar
+    * documents share sign patterns), and exact dups share one block
+    * outright. A block over the cap restricts the pairing's x-side to
+    * its hub (min doc_id) — hub-anchored pairs only, still
+    * Hamming-VERIFIED, a subset of the exact output; blocks at or under
+    * the cap keep exact all-pairs (LshBucketCapSpec pins it). One
+    * aliased join against the witness-restricted x-side, no unioned
+    * self-join branches.
+    */
   def simhashPairs(sim: DataFrame, maxDist: Int = 3,
       maxBlock: Option[Int] = None): DataFrame = {
     // same expression barrier as the band relations: if `sim` arrives as
@@ -931,30 +844,6 @@ object Dedup {
       .where(col("hamming") <= maxDist)
   }
 
-  /** ExactSubstr-style duplicated spans (Lee et al., "Deduplicating
-    * Training Data Makes Language Models Better", ACL 2022): a word
-    * position is DUPLICATED when the n-gram opening there occurs at
-    * least `minCount` times anywhere in the corpus (including within one
-    * document); overlapping/adjacent duplicated n-gram intervals
-    * [i, i+n-1] merge into per-document MAXIMAL spans — the
-    * word-resolution analog of the paper's repeated-substring intervals
-    * (spans shorter than n words are invisible; that is the standard
-    * n-gram-seeded approximation of the suffix-array method).
-    *
-    * Returns (doc_id, span_start, span_end), 1-based inclusive word
-    * positions, each span ≥ n words.
-    *
-    * 100 TB shape: the gram relation is corpus-TOKEN-sized — the honest
-    * ExactSubstr cost (the suffix array it approximates is also
-    * corpus-sized). Every step is linear: the occurrence count is one
-    * map-side-combined aggregation; the duplicated-position filter is a
-    * left-semi join on the gram key (a boilerplate gram repeated 10⁷
-    * times skews exactly one join key — AQE's skew-join split applies,
-    * and no pair blowup exists anywhere since positions never join
-    * positions); the island merge runs inside per-DOCUMENT windows
-    * (bounded by document length, the q357 gaps-and-islands class,
-    * never a global window).
-    */
   /** (doc_id, i, gram): every 1-based n-gram start of every document with
     * at least n words — the corpus-token-sized relation all the
     * duplicated-span operators share.
@@ -985,6 +874,30 @@ object Dedup {
       .select("doc_id", "span_start", "span_end")
   }
 
+  /** ExactSubstr-style duplicated spans (Lee et al., "Deduplicating
+    * Training Data Makes Language Models Better", ACL 2022): a word
+    * position is DUPLICATED when the n-gram opening there occurs at
+    * least `minCount` times anywhere in the corpus (including within one
+    * document); overlapping/adjacent duplicated n-gram intervals
+    * [i, i+n-1] merge into per-document MAXIMAL spans — the
+    * word-resolution analog of the paper's repeated-substring intervals
+    * (spans shorter than n words are invisible; that is the standard
+    * n-gram-seeded approximation of the suffix-array method).
+    *
+    * Returns (doc_id, span_start, span_end), 1-based inclusive word
+    * positions, each span ≥ n words.
+    *
+    * 100 TB shape: the gram relation is corpus-TOKEN-sized — the honest
+    * ExactSubstr cost (the suffix array it approximates is also
+    * corpus-sized). Every step is linear: the occurrence count is one
+    * map-side-combined aggregation; the duplicated-position filter is a
+    * left-semi join on the gram key (a boilerplate gram repeated 10⁷
+    * times skews exactly one join key — AQE's skew-join split applies,
+    * and no pair blowup exists anywhere since positions never join
+    * positions); the island merge runs inside per-DOCUMENT windows
+    * (bounded by document length, the q357 gaps-and-islands class,
+    * never a global window).
+    */
   def duplicateSpans(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 8, minCount: Long = 2): DataFrame = {
     val sp = gramPositions(docs, idCol, textCol, n)

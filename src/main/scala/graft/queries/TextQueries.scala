@@ -403,8 +403,8 @@ object TextQueries {
         .select((col("doc_id") + 100000).as("doc_id"),
           expr("substring(text, 21)").as("text"))
       Dedup.incrementalCandidates(
-        Dedup.minhashSignatures(index, "doc_id", "text"),
-        Dedup.minhashSignatures(shard, "doc_id", "text"))
+        Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text")),
+        Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")))
         .orderBy("d1", "d2")
     },
 
@@ -465,8 +465,8 @@ object TextQueries {
           expr("substring(text, 21)").as("text"))
         .unionAll(shdClones)
       Dedup.incrementalCandidates(
-        Dedup.minhashSignatures(index, "doc_id", "text"),
-        Dedup.minhashSignatures(shard, "doc_id", "text"),
+        Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text")),
+        Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")),
         maxBucket = Some(12))
         .orderBy("d1", "d2")
     },
@@ -517,23 +517,17 @@ object TextQueries {
       val shard = base.where(col("doc_id") % 29 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
           expr("substring(text, 21)").as("text"))
-      // caller-held cache: both operators read the SAME signature
-      // relation (their call-scoped management defers to an input the
-      // caller already persisted), so the shingle→md5→min pipeline runs
-      // once across the composition — and the BAND relation materializes
-      // once too (r10 optimization): minhashCandidatesBanded and the
-      // indexed shard probe share one lshBands pass instead of each
-      // operator re-deriving the corpus-sized band relation internally
-      val idxSig = Dedup.minhashSignatures(index, "doc_id", "text").cache()
-      val bands0 = Dedup.lshBands(idxSig).localCheckpoint(true)
+      // the corpus BAND relation materializes once (r10 optimization):
+      // the full pairing and the shard probe share one lshBands pass
+      // instead of each re-deriving the corpus-sized band relation
+      val bands0 = Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text"))
       // corpus CC ∥ shard probe — independent until the merge (core.Par,
       // guide §2.6; q605's composition note)
       val (labels, newPairs) = graft.core.Par.two(
         Dedup.connectedComponents(Dedup.minhashCandidatesBanded(bands0))) {
-        Dedup.incrementalCandidatesIndexed(bands0,
-          Dedup.minhashSignatures(shard, "doc_id", "text"))
+        Dedup.incrementalCandidates(bands0,
+          Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")))
       }
-      idxSig.unpersist(false)
       Dedup.incrementalComponents(labels, newPairs).orderBy("doc_id")
     },
 
@@ -598,10 +592,8 @@ object TextQueries {
         .select((col("doc_id") + 100000).as("doc_id"),
           expr("substring(text, 21)").as("text"))
       val union = index.unionAll(shard)
-      // caller-held cache shared across both candidate operators, and ONE
-      // shared band materialization (q604's composition note)
-      val idxSig = Dedup.minhashSignatures(index, "doc_id", "text").cache()
-      val bands0 = Dedup.lshBands(idxSig).localCheckpoint(true)
+      // ONE shared band materialization (q604's composition note)
+      val bands0 = Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text"))
       // corpus CC and the shard probe/verify are data-independent until
       // the cluster merge — overlap them (core.Par, guide §2.6): both
       // legs are chains of small sequential jobs whose barriers leave
@@ -611,13 +603,12 @@ object TextQueries {
       // intersect work, not just the candidate probe.
       val (labels, verified) = graft.core.Par.two(
         Dedup.connectedComponents(Dedup.minhashCandidatesBanded(bands0))) {
-        val cand = Dedup.incrementalCandidatesIndexed(bands0,
-          Dedup.minhashSignatures(shard, "doc_id", "text"))
+        val cand = Dedup.incrementalCandidates(bands0,
+          Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")))
         Dedup.jaccardVerify(cand, union, "doc_id", "text")
           .where(col("jaccard_scaled") >= 50000).select("d1", "d2")
           .localCheckpoint(true)
       }
-      idxSig.unpersist(false)
       val updated = Dedup.incrementalComponents(labels, verified)
       val clus = updated.groupBy("component").agg(count(lit(1)).as("sz"))
       val singles = union.select("doc_id")
@@ -686,33 +677,28 @@ object TextQueries {
       val shard2 = base.where(col("doc_id") % 29 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
           expr("substring(text, 21)").as("text"))
-      // the persisted state: band index + labels (caller-held sig cache
-      // shares the shingle pipeline across the index's two consumers, and
-      // the corpus band relation materializes ONCE for the full pairing
-      // and both shard probes)
-      val idxSig = Dedup.minhashSignatures(index, "doc_id", "text").cache()
-      val bands0 = Dedup.lshBands(idxSig).localCheckpoint(true)
-      val s1Sig = Dedup.minhashSignatures(shard1, "doc_id", "text").cache()
+      // the persisted state: band index + labels (the corpus band
+      // relation materializes ONCE for the full pairing and both shard
+      // probes)
+      val bands0 = Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text"))
       // corpus CC ∥ (shard1 admit + index APPEND) — independent until the
       // first merge (core.Par, guide §2.6): the persisted state between
       // ingests (labels + appended bands) materializes as before, in
       // production both are on-disk relations. r11: shard1's band
       // relation materializes ONCE and feeds both the probe and the
-      // append (before, incrementalCandidatesIndexed and appendBands
-      // each derived it internally — one shard band pass per consumer).
+      // append — one shard band pass, not one per consumer.
       val (labels0, (cand1, bands1)) = graft.core.Par.two(
         Dedup.connectedComponents(Dedup.minhashCandidatesBanded(bands0))) {
-        val sb1 = Dedup.lshBands(s1Sig).localCheckpoint(true)
-        (Dedup.incrementalCandidatesBandedBoth(bands0, sb1),
+        val sb1 = Dedup.lshBands(Dedup.minhashSignatures(shard1, "doc_id", "text"))
+        (Dedup.incrementalCandidates(bands0, sb1),
           Dedup.appendBands(bands0, sb1).localCheckpoint(true))
       }
-      idxSig.unpersist(false); s1Sig.unpersist(false)
       // shard1's label merge ∥ shard2's probe of the MAINTAINED index —
       // the merge needs (labels0, cand1), the probe needs bands1 only
       val (labels1, cand2) = graft.core.Par.two(
         Dedup.incrementalComponents(labels0, cand1).localCheckpoint(true)) {
-        Dedup.incrementalCandidatesIndexed(bands1,
-          Dedup.minhashSignatures(shard2, "doc_id", "text"))
+        Dedup.incrementalCandidates(bands1,
+          Dedup.lshBands(Dedup.minhashSignatures(shard2, "doc_id", "text")))
       }
       val labels2 = Dedup.incrementalComponents(labels1, cand2)
       val sizes = labels2.groupBy("component").agg(count(lit(1)).as("n_members"))

@@ -266,8 +266,9 @@ object IngestRehearsal {
       docs.write.mode("overwrite").parquet(dirs.docs)
       emb.write.mode("overwrite").parquet(dirs.emb)
       val sig = Dedup.minhashSignatures(spark.read.parquet(dirs.docs), "doc_id", "text")
-      Dedup.lshBands(sig).write.mode("overwrite").partitionBy("band").parquet(dirs.bands)
-      val cand = Dedup.minhashCandidates(sig, maxBucket = Some(Cap))
+      val bands = Dedup.lshBands(sig)
+      bands.write.mode("overwrite").partitionBy("band").parquet(dirs.bands)
+      val cand = Dedup.minhashCandidatesBanded(bands, maxBucket = Some(Cap))
       val edges = verifiedEdges(cand, spark.read.parquet(dirs.docs))
       Dedup.connectedComponents(edges)
         .withColumn("lblpart", pmod(col("component"), lit(P.toLong)))
@@ -298,8 +299,8 @@ object IngestRehearsal {
 
       // 1. admit: probe the persisted band index (no corpus text read)
       val (edges, admitSec) = timed {
-        val cand = Dedup.incrementalCandidatesIndexed(
-          spark.read.parquet(dirs.bands), sig, maxBucket = Some(Cap))
+        val cand = Dedup.incrementalCandidates(
+          spark.read.parquet(dirs.bands), Dedup.lshBands(sig), maxBucket = Some(Cap))
         // verify: candidate-restricted text lookups against the corpus
         // STORE ∪ shard (broadcast semi-join inside jaccardVerify keeps
         // the read candidate-sized at the row level)

@@ -148,8 +148,10 @@ object ScaleCheck {
         lit("the same boilerplate page text body").as("text"))
       val t8f = System.nanoTime()
       val cappedInc = graft.operators.Dedup.incrementalCandidates(
-        graft.operators.Dedup.minhashSignatures(hotDocs, "doc_id", "text"),
-        graft.operators.Dedup.minhashSignatures(hotShard, "doc_id", "text"),
+        graft.operators.Dedup.lshBands(
+          graft.operators.Dedup.minhashSignatures(hotDocs, "doc_id", "text")),
+        graft.operators.Dedup.lshBands(
+          graft.operators.Dedup.minhashSignatures(hotShard, "doc_id", "text")),
         maxBucket = Some(64))
       val nCapInc = cappedInc.count()
       val starInc = cappedInc
@@ -223,8 +225,10 @@ object ScaleCheck {
       val shard = clones.unionAll(fresh)
       val t8d = System.nanoTime()
       val inc = graft.operators.Dedup.incrementalCandidates(
-        graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text"),
-        graft.operators.Dedup.minhashSignatures(shard, "doc_id", "text"))
+        graft.operators.Dedup.lshBands(
+          graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text")),
+        graft.operators.Dedup.lshBands(
+          graft.operators.Dedup.minhashSignatures(shard, "doc_id", "text")))
       val nInc = inc.count()
       val t8e = System.nanoTime()
       val clusterHits = inc

@@ -42,7 +42,8 @@ class CapPropertySpec extends SparkSpec {
       val index = sigDf(idx.zipWithIndex.map { case (m, i) => (i.toLong + 1, m) })
       val shard = sigDf(shd.zipWithIndex.map { case (m, i) => (i.toLong + 1001, m) })
       val shardIds = (1001L until 1001L + shd.size).toSet
-      val inc = prs(Dedup.incrementalCandidates(index, shard, maxBucket = Some(cap)), "d1", "d2")
+      val inc = prs(Dedup.incrementalCandidates(Dedup.lshBands(index), Dedup.lshBands(shard),
+        maxBucket = Some(cap)), "d1", "d2")
       val full = prs(Dedup.minhashCandidates(index.unionAll(shard), maxBucket = Some(cap)), "d1", "d2")
         .filter { case (a, b) => shardIds(a) || shardIds(b) }
       assert(inc == full,

@@ -44,10 +44,32 @@ class LshBucketCapSpec extends SparkSpec {
     assert(none.exceptAll(all).count() == 0L && all.exceptAll(none).count() == 0L)
   }
 
+  test("lshBands returns a materialized barrier and releases only its own signature cache") {
+    def cached(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).nonEmpty
+    // the returned relation is an ExistingRDD: no minhash expression is
+    // left for band-join planning to inline into a pushed-down filter
+    val uncached = sigs
+    val bands = Dedup.lshBands(uncached)
+    assert(bands.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      s"lshBands must return a checkpointed relation:\n${bands.queryExecution.analyzed}")
+    assert(bands.count() == 4L * 43)
+    // an uncached signature input is cached for the call only
+    assert(!cached(uncached),
+      "lshBands must release the signature cache it took")
+    // a caller-cached input keeps its cache (and its lifetime)
+    val held = sigs.cache()
+    Dedup.lshBands(held)
+    assert(cached(held),
+      "lshBands must leave a caller-held cache in place")
+    held.unpersist()
+  }
+
   test("pre-banded candidates == signature-level candidates (capped and not)") {
     // the r10 shared-band-relation path (q604/q605/q609 build lshBands once
     // and feed both the full pairing and the shard probe)
-    val bands = Dedup.lshBands(sigs).localCheckpoint(true)
+    val bands = Dedup.lshBands(sigs)
     for (cap <- Seq(None, Some(10))) {
       val banded = Dedup.minhashCandidatesBanded(bands, cap)
       val direct = Dedup.minhashCandidates(sigs, maxBucket = cap)
@@ -72,7 +94,7 @@ class LshBucketCapSpec extends SparkSpec {
       .toDF("doc_id", "m0", "m1", "m2", "m3", "m4", "m5", "m6", "m7")
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val inc = pairs(Dedup.incrementalCandidates(index, shard))
+    val inc = pairs(Dedup.incrementalCandidates(Dedup.lshBands(index), Dedup.lshBands(shard)))
     val shardIds = Set(1000L, 1001L, 2000L)
     val full = pairs(Dedup.minhashCandidates(index.unionAll(shard)))
       .filter { case (a, b) => shardIds(a) || shardIds(b) }
@@ -100,7 +122,8 @@ class LshBucketCapSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cap = 12
-    val inc = pairs(Dedup.incrementalCandidates(index, shard, maxBucket = Some(cap)))
+    val inc = pairs(Dedup.incrementalCandidates(Dedup.lshBands(index), Dedup.lshBands(shard),
+      maxBucket = Some(cap)))
     val full = pairs(Dedup.minhashCandidates(index.unionAll(shard), maxBucket = Some(cap)))
       .filter { case (a, b) => shardIds(a) || shardIds(b) }
     assert(inc == full, s"inc-only=${(inc -- full).take(5)} full-only=${(full -- inc).take(5)}")
@@ -111,14 +134,16 @@ class LshBucketCapSpec extends SparkSpec {
     // the dense (≤ cap) bucket keeps its exact probe pair
     assert(inc.contains((50L, 2000L)) && inc.contains((51L, 2000L)))
     // cap ignored ⇒ strictly more pairs (the valve engaged)
-    assert(pairs(Dedup.incrementalCandidates(index, shard)).size > inc.size)
+    assert(pairs(Dedup.incrementalCandidates(Dedup.lshBands(index), Dedup.lshBands(shard)))
+      .size > inc.size)
   }
 
   test("pre-banded-both-sides probe and pre-banded append == the signature-level paths") {
     val s = spark
     import s.implicits._
     // the r11 shared shard-band path (q609 materializes the shard bands
-    // once and feeds both the probe and the index append)
+    // once and feeds both the probe and the index append); the probe
+    // has a single path, so only the append's two forms are compared
     val index = Seq(
       (1L, 7, 7, 3, 4, 5, 6, 7, 8), (2L, 7, 7, 9, 9, 5, 6, 1, 2),
       (100L, 20, 21, 22, 23, 24, 25, 26, 27))
@@ -127,14 +152,8 @@ class LshBucketCapSpec extends SparkSpec {
       (1000L, 7, 7, 30, 31, 32, 33, 34, 35),
       (2000L, 90, 91, 92, 93, 94, 95, 96, 97))
       .toDF("doc_id", "m0", "m1", "m2", "m3", "m4", "m5", "m6", "m7")
-    val idxBands = Dedup.lshBands(index).localCheckpoint(true)
-    val shdBands = Dedup.lshBands(shard).localCheckpoint(true)
-    for (cap <- Seq(None, Some(2))) {
-      val both = Dedup.incrementalCandidatesBandedBoth(idxBands, shdBands, cap)
-      val sigLevel = Dedup.incrementalCandidatesIndexed(idxBands, shard, maxBucket = cap)
-      assert(both.exceptAll(sigLevel).count() == 0L &&
-        sigLevel.exceptAll(both).count() == 0L, s"cap=$cap")
-    }
+    val idxBands = Dedup.lshBands(index)
+    val shdBands = Dedup.lshBands(shard)
     val pre = Dedup.appendBands(idxBands, shdBands)
     val sig = Dedup.appendBands(idxBands, Dedup.lshBands(shard))
     assert(pre.exceptAll(sig).count() == 0L && sig.exceptAll(pre).count() == 0L)

@@ -31,13 +31,13 @@ class MaterializedIndexSpec extends SparkSpec {
 
     // probe the on-disk index through the public API — only the shard's
     // signatures compute fresh
-    val viaDisk = Dedup.incrementalCandidatesIndexed(onDisk,
-        Dedup.minhashSignatures(shard, "doc_id", "text"))
+    val viaDisk = Dedup.incrementalCandidates(onDisk,
+        Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val inMemory = Dedup.incrementalCandidates(
-        Dedup.minhashSignatures(index, "doc_id", "text"),
-        Dedup.minhashSignatures(shard, "doc_id", "text"))
+        Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text")),
+        Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     assert(viaDisk == inMemory,
@@ -76,26 +76,26 @@ class MaterializedIndexSpec extends SparkSpec {
       "a partition-local append must leave every existing index file in place")
 
     // the next shard probes the MAINTAINED on-disk index…
-    val maintained = Dedup.incrementalCandidatesIndexed(spark.read.parquet(dir),
-        Dedup.minhashSignatures(shard2, "doc_id", "text"))
+    val maintained = Dedup.incrementalCandidates(spark.read.parquet(dir),
+        Dedup.lshBands(Dedup.minhashSignatures(shard2, "doc_id", "text")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // …and must see exactly what a from-scratch rebuild over
     // index ∪ shard1 would serve (bands are per-doc, so appendBands'
     // relation form is the same statement in memory)
     val rebuilt = Dedup.incrementalCandidates(
-        Dedup.minhashSignatures(index.unionAll(shard1), "doc_id", "text"),
-        Dedup.minhashSignatures(shard2, "doc_id", "text"))
+        Dedup.lshBands(Dedup.minhashSignatures(index.unionAll(shard1), "doc_id", "text")),
+        Dedup.lshBands(Dedup.minhashSignatures(shard2, "doc_id", "text")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(maintained == rebuilt,
       s"maint-only=${(maintained -- rebuilt).take(5)} rebuild-only=${(rebuilt -- maintained).take(5)}")
     assert(maintained.nonEmpty)
 
     // the relation-form helper matches the disk path
-    val viaHelper = Dedup.incrementalCandidatesIndexed(
+    val viaHelper = Dedup.incrementalCandidates(
         Dedup.appendBands(
           Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text")),
           Dedup.lshBands(Dedup.minhashSignatures(shard1, "doc_id", "text"))),
-        Dedup.minhashSignatures(shard2, "doc_id", "text"))
+        Dedup.lshBands(Dedup.minhashSignatures(shard2, "doc_id", "text")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaHelper == rebuilt)
   }

@@ -26,6 +26,9 @@ def norm(v):
     return str(v)
 
 fails = 0
+# a requested name with no oracle (a typo) must fail, not check nothing
+for name in sorted(only - oracles.keys()):
+    print(f"FAIL {name}: not in oracle_sql.json"); fails += 1
 for name, sql in sorted(oracles.items()):
     if only and name not in only: continue
     resdir = os.path.join(outdir, name)
