@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{Graft, Tables}
 
@@ -130,7 +130,9 @@ object Bench {
       heavyCutoff: Double = 5.0, maxExtra: Int = 1)(run: () => Unit): Seq[Double] = {
     def sample(): Option[Double] = {
       val t0 = System.nanoTime()
-      val ok = try { run(); true } catch { case _: Throwable => false }
+      // a failed rep says why on stderr; stdout keeps only the JSON line
+      val ok = try { run(); true } catch { case e: Throwable =>
+        Console.err.println(s"[bench] rep failed: $e"); false }
       val dt = (System.nanoTime() - t0) / 1e9
       // release per-query caches OUTSIDE the timed window: each rep is
       // measured cold-cache (its own cache population is inside its own
@@ -147,6 +149,23 @@ object Bench {
     samples
   }
 
+  /** Samples per query unless SPARK_GRAFT_BENCH_REPS overrides it. */
+  private[graft] val defaultReps = 2
+
+  /** The twins' action: every column of every row computes. */
+  private[graft] def noopSink(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Warm-up (not timed): JIT + codegen + parquet footers + FS metadata,
+    * so the first measured query isn't charged the session cold-start.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    val t = Tables(spark, sfDir)
+    Seq(t.lineitem, t.orders, t.customer, t.events, t.documents, t.embeddings)
+      .foreach(_.count())
+    spark.range(1000000).selectExpr("sum(id)").collect()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the bench contract runs local[32]; SPARK_GRAFT_CPUS only overrides
@@ -157,22 +176,11 @@ object Bench {
     // would mostly measure the bench's own 32-thread load)
     val load = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.local(cpus.toInt)
     // ERROR, not WARN: r6's stdout tail was flooded by WindowExec WARNs,
     // crowding the JSON line out of the driver's ~2 KB tail capture window
     spark.sparkContext.setLogLevel("ERROR")
-    Graft.configure(spark)
-
-    // Warm-up (not timed): JIT + codegen + parquet footers + FS metadata,
-    // so the first measured query isn't charged the session cold-start.
-    val t = Tables(spark, sfDir)
-    Seq(t.lineitem, t.orders, t.customer, t.events, t.documents, t.embeddings)
-      .foreach(_.count())
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    warmUp(spark, sfDir)
 
     val benchAll = sys.env.get("SPARK_GRAFT_BENCH_ALL").exists(_ == "1")
     val coh =
@@ -182,7 +190,8 @@ object Bench {
     val names =
       if (benchAll) SparkEntry.queries.keys.toSeq.sorted
       else headline.filter(SparkEntry.queries.contains) ++ coh
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(2).max(1)
+    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption)
+      .getOrElse(defaultReps).max(1)
     val sampled = names.map(name =>
       name -> measureSamples(spark, reps)(() => SparkEntry.queries(name)(spark, sfDir).count()))
     // Noop-sink TWIN entries (guide §1.4, additions-only — the count()
@@ -199,8 +208,7 @@ object Bench {
       "q618t_jaccard_capped_noop" -> "q618_jaccard_capped")
     val twinSampled = twins.map { case (twin, base) =>
       twin -> measureSamples(spark, reps)(() =>
-        SparkEntry.queries(base)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save())
+        noopSink(SparkEntry.queries(base)(spark, sfDir)))
     }
     val results = (sampled ++ twinSampled).map { case (n, ss) =>
       n -> (if (ss.nonEmpty) ss.min else -1.0)

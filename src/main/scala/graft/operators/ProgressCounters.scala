@@ -15,6 +15,7 @@ final class ProgressCounters private () extends SparkListener {
   private val rowsRead      = new LongAdder
   private val rowsWritten   = new LongAdder
   private val shuffleBytes  = new LongAdder
+  private val shuffleRecordsWritten = new LongAdder
   private val tasksFinished = new LongAdder
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -23,14 +24,17 @@ final class ProgressCounters private () extends SparkListener {
       rowsRead.add(m.inputMetrics.recordsRead)
       rowsWritten.add(m.outputMetrics.recordsWritten)
       shuffleBytes.add(m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
+      shuffleRecordsWritten.add(m.shuffleWriteMetrics.recordsWritten)
       tasksFinished.increment()
     }
   }
 
-  final case class Snapshot(rowsRead: Long, rowsWritten: Long, shuffleBytes: Long, tasks: Long)
+  final case class Snapshot(rowsRead: Long, rowsWritten: Long, shuffleBytes: Long,
+      shuffleRecordsWritten: Long, tasks: Long)
 
   def snapshot(): Snapshot =
-    Snapshot(rowsRead.sum(), rowsWritten.sum(), shuffleBytes.sum(), tasksFinished.sum())
+    Snapshot(rowsRead.sum(), rowsWritten.sum(), shuffleBytes.sum(),
+      shuffleRecordsWritten.sum(), tasksFinished.sum())
 }
 
 object ProgressCounters {

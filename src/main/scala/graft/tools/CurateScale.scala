@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 1M-document certification for the incremental curation-state operators
@@ -17,13 +16,8 @@ object CurateScale {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nShard = math.max(nDocs / 100, 1000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Graft.local(32)
     spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.configure(spark)
     import graft.operators.Curate
 
     def timed[T](body: => T): (T, Double) = {

@@ -86,13 +86,8 @@ object IngestRehearsal {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nShard = args.drop(1).headOption.map(_.toLong).getOrElse(10000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Graft.local(32)
     spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.configure(spark)
     run(spark, nDocs, nShard,
       java.nio.file.Files.createTempDirectory("ingest_rehearsal").toString)
     spark.stop()

@@ -1,14 +1,15 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graftshims.ListenerShim
 import org.apache.spark.sql.functions._
+
+import graft.operators.ProgressCounters
 
 /** 1M-vector certification for the iterative/ANN vector path (VERDICT r5
   * #8): runs `Similarity.kmeansAssignments` and
   * `Similarity.ivfCandidatePairs` on deterministic 64-dim
   * pseudo-embeddings at the LSH-dedup corpus scale, measuring wall time
-  * AND actual shuffle-write records (SparkListener) so the "rows shuffled
+  * AND actual shuffle-write records (ProgressCounters) so the "rows shuffled
   * per round" claim in BASELINE.md is measured, not derived.
   *
   * `sbt "runMain graft.tools.VectorScale 1000000"` (vector count arg,
@@ -24,32 +25,22 @@ object VectorScale {
     val only: Set[String] = args.drop(1).headOption
       .map(_.split(",").toSet)
       .getOrElse(Set("kmeans", "pairs", "hotcell", "semdedup", "recall"))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Graft.local(32)
     spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.configure(spark)
 
-    @volatile var shuffleRecords = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) synchronized {
-          shuffleRecords += m.shuffleWriteMetrics.recordsWritten
-        }
-      }
-    })
+    val pc = ProgressCounters.attach(spark)
+    // listener events are async — drain the bus before each read so the
+    // task-end deltas land in the right scenario
+    def shuffleRecords(): Long = {
+      ListenerShim.waitUntilEmpty(spark.sparkContext, 30000)
+      pc.snapshot().shuffleRecordsWritten
+    }
     def measure[T](body: => T): (T, Double, Long) = {
-      // listener events are async (no public drain) — settle before and
-      // after so the stage-completion deltas land in the right bucket
-      Thread.sleep(2000); val s0 = shuffleRecords
+      val s0 = shuffleRecords()
       val t0 = System.nanoTime()
       val r = body
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000)
-      (r, sec, shuffleRecords - s0)
+      (r, sec, shuffleRecords() - s0)
     }
 
     // deterministic 64-dim embeddings, no RNG: element (id, j) mixes both

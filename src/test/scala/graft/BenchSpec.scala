@@ -13,6 +13,14 @@ class BenchSpec extends SparkSpec {
     assert(v == -1.0)
   }
 
+  test("a failed rep prints its exception to stderr") {
+    val err = new java.io.ByteArrayOutputStream
+    Console.withErr(err) {
+      Bench.measure(spark, 2)(() => throw new RuntimeException("boom"))
+    }
+    assert(err.toString.contains("RuntimeException: boom"), s"stderr was: $err")
+  }
+
   test("a flaky query that succeeds once reports the successful floor") {
     var calls = 0
     val v = Bench.measure(spark, reps = 3) { () =>
@@ -48,6 +56,10 @@ class BenchSpec extends SparkSpec {
     val keys = Bench.headline.map(_.takeWhile(_ != '_'))
     assert(keys.size == keys.distinct.size,
       s"duplicate prefixes: ${keys.diff(keys.distinct).distinct.mkString(",")}")
+    // SparkEntry.queries is a toMap: a duplicate name would drop an entry
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == names.distinct.size,
+      s"duplicate registry names: ${names.diff(names.distinct).distinct.mkString(",")}")
   }
 
   test("rotating cohort: seeded, non-headline, disjoint, registry-keyed") {

@@ -18,7 +18,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   /** Registry queries whose logical plan carries an unpartitioned Window
-    * over a BOUNDED relation — frozen by the round-7 WindowSweep audit.
+    * over a BOUNDED relation — frozen by the registry sweep test below.
     * Every entry's window input is sketch-sized by construction, not
     * corpus-sized: calendar days/months (q199, q202, q270, q321, q382,
     * q480, q542...), deciles/quantile grids/buckets (q115, q172, q374,
