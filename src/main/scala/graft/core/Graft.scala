@@ -105,6 +105,20 @@ object Graft {
       Map("spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> p.toString), eager)
 
+  /** Runs `body` with `name` as the calling thread's Spark job
+    * description, so every job it starts is named after the operator in
+    * listeners and `Prof jobs` — AQE stage jobs too, which copy the
+    * caller's local properties. The prior description is restored; job
+    * groups and other local properties are left alone.
+    */
+  def span[T](name: String)(body: => T): T = {
+    val sc = SparkSession.active.sparkContext
+    val key = "spark.job.description"
+    val prior = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, name)
+    try body finally sc.setLocalProperty(key, prior)
+  }
+
   def local(cores: Int = 32): SparkSession = configure(
     SparkSession.builder()
       .master(s"local[$cores]")

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -366,11 +367,12 @@ object Dedup {
       .join(broadcast(candIds), Seq(idCol), "left_semi")
       .select(col(idCol).as("doc_id"), normText(col(textCol)).as("__nt"))
       .select(col("doc_id"), shsExpr.as("shs"))
-    // Both joins below shuffle the IDENTICAL `sets` subplan hash-partitioned
-    // on doc_id — keeping the plan byte-identical (same aliases, join
-    // conditions instead of per-side renames) lets Spark reuse the first
-    // join's exchange for the second (ReusedExchange), so the shingle-set
-    // computation runs once, not twice.
+    // Both joins below shuffle the same `sets` subplan hash-partitioned on
+    // doc_id, but Spark does NOT reuse the first join's exchange for the
+    // second: each join side builds its own sets (plans/r11/
+    // q27t_smj_probe.txt shows two identical, unreused ShuffleQueryStages),
+    // so the per-doc set build is paid twice — see the native-build note
+    // above.
     val a = sets.as("a")
     val b = sets.as("b")
     candidates
@@ -416,17 +418,156 @@ object Dedup {
   /** Connected components over an undirected pair list (d1, d2) — the
     * clustering step of corpus dedup: near-dup PAIRS become duplicate
     * GROUPS, each labeled by its minimum member id (the canonical
-    * keeper).
+    * keeper). Returns (doc_id, component) for every vertex, in the ids'
+    * own integral type (d1 and d2 widened to one type).
     *
-    * Min-label propagation: every vertex starts as its own label; each
-    * round pulls the minimum label across neighbors; fixpoint after
-    * diameter rounds (LSH clusters are near-cliques, so 2-3 rounds in
-    * practice). `localCheckpoint` cuts the growing lineage so round N's
-    * plan does not replay rounds 1..N-1 — the standard iterative-
-    * DataFrame shape.
+    * Contract, don't propagate — a graph under the gate costs two jobs,
+    * never a round loop:
+    *  1. contract: a `mapPartitions` runs union-find (union-by-min, path
+    *     halving) over each partition's pairs, with no shuffle, and emits
+    *     (v, local root) for every vertex it saw — a root or a
+    *     self-loop-only vertex emits (v, v). The union of the
+    *     partitions' forests has the input's connectivity;
+    *  2. count: the forest is a lazy localCheckpoint whose first action
+    *     is its row count, so counting is the materialization job;
+    *  3. finish: at or under [[CcFinishMaxRows]] rows the forest is read
+    *     by ONE task whose union-find labels every vertex with its
+    *     component's least id; the vertex count is the first action of
+    *     that labeling's lazy checkpoint.
+    * Above the gate the forest goes to [[propagate]], the distributed
+    * min-label propagation loop — the forest rather than the raw pairs,
+    * because it is never larger than the symmetrized pair list and the
+    * edges of a component that share a partition arrive collapsed into
+    * one star, which cuts the loop's diameter-bound rounds.
     *
-    * Shuffle accounting (this loop sits inside every heavy composition —
-    * q68/q604/q605/q609): `sym` is hash-partitioned on `src` ONCE, which
+    * A NULL endpoint keeps the loop's semantics on both paths
+    * (ConnectedComponentsSpec pins them): NULL is one pseudo-vertex that
+    * never links its neighbors, labeled with the least component among
+    * them (NULL when it has none), and an edge list whose only vertex is
+    * NULL fails with an IllegalStateException.
+    */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
+    connectedComponentsCounted(pairs, maxIter)._1
+
+  /** [[connectedComponents]] plus the VERTEX COUNT of the labeling, for
+    * free: it is the first action that materializes the labels, so
+    * callers that would otherwise run a separate count() barrier to size
+    * a broadcast (labelDelta's meta-fit gate) fuse it away.
+    */
+  def connectedComponentsCounted(pairs: DataFrame, maxIter: Int = 50): (DataFrame, Long) =
+    connectedComponentsGated(pairs, maxIter, CcFinishMaxRows)
+
+  /** The finish gate: the most forest rows one task labels. A forest has
+    * no more vertices than rows, and the task's [[LongUnionFind]] keeps
+    * its table at most half full at 17 B a slot (8 B id, 8 B parent, 1 B
+    * occupancy): 4M vertices fit 2^23 slots = 143 MB, plus the 2^22-slot
+    * table it grew from = 214 MB at the peak, about a fifth of Spark's
+    * default 1 GiB executor heap. The rows stream in; nothing else is
+    * held.
+    */
+  private val CcFinishMaxRows = 4000000L
+
+  /** The most vertices one contraction table holds before the partition
+    * starts a new one (2^21 slots = 36 MB, so 32 concurrent tasks stay
+    * near 1 GB): a partition's chunk forests together keep its
+    * connectivity, so a huge partition costs a larger forest, not memory.
+    */
+  private val CcContractMaxVertices = 1 << 20
+
+  /** [[connectedComponentsCounted]] with the finish gate as an argument:
+    * a negative gate forces the distributed fallback (ConnectedComponentsSpec
+    * and CcBench compare the two paths).
+    */
+  private[graft] def connectedComponentsGated(pairs: DataFrame, maxIter: Int,
+      finishMaxRows: Long): (DataFrame, Long) =
+    graft.core.Graft.span("Dedup.connectedComponents") {
+      import org.apache.spark.sql.types._
+      val integral: Seq[DataType] = Seq(ByteType, ShortType, IntegerType, LongType)
+      val types = Seq("d1", "d2").map(pairs.schema(_).dataType)
+      require(types.forall(integral.contains),
+        s"connectedComponents needs integral ids, got ${types.mkString(", ")}")
+      val idType = integral(types.map(integral.indexOf).max)
+      val nullable = Seq("d1", "d2").exists(pairs.schema(_).nullable)
+      def schema(v: String, c: String, cNullable: Boolean) = StructType(Seq(
+        StructField(v, LongType, nullable), StructField(c, LongType, cNullable)))
+      val spark = pairs.sparkSession
+      // lazy checkpoints (compact UnsafeRows) counted straight off their
+      // rows: the count is the materialization job, with no aggregate
+      // exchange, so each step costs exactly one job
+      def materialize(rows: RDD[Row], schema: StructType): (DataFrame, Long) = {
+        val df = spark.createDataFrame(rows, schema).localCheckpoint(false)
+        (df, df.queryExecution.toRdd.count())
+      }
+      val (forest, nForest) = materialize(
+        pairs.select(col("d1").cast(LongType), col("d2").cast(LongType)).rdd
+          .mapPartitions(contract(CcContractMaxVertices)),
+        schema("d1", "d2", nullable))
+      val (labels, nVerts) =
+        // coalesce without a shuffle: the one task reads the checkpointed
+        // forest blocks where they are
+        if (nForest <= finishMaxRows)
+          materialize(forest.rdd.coalesce(1).mapPartitions(finish),
+            schema("doc_id", "component", cNullable = true))
+        else propagate(forest, maxIter)
+      (labels.select(col("doc_id").cast(idType).as("doc_id"),
+        col("component").cast(idType).as("component")), nVerts)
+    }
+
+  /** Unions a pair into `uf`; a pair with a NULL endpoint only registers
+    * its other endpoint, and the result says whether it had one.
+    */
+  private def absorb(uf: LongUnionFind, e: Row): Boolean = {
+    val (n1, n2) = (e.isNullAt(0), e.isNullAt(1))
+    if (!n1 && !n2) uf.union(e.getLong(0), e.getLong(1))
+    else {
+      if (!n1) uf.add(e.getLong(0))
+      if (!n2) uf.add(e.getLong(1))
+    }
+    n1 || n2
+  }
+
+  /** Step 1 over one partition: (v, local root) for every vertex, one
+    * table of at most `maxVertices` vertices at a time; pairs with a NULL
+    * endpoint pass through unchanged.
+    */
+  private[operators] def contract(maxVertices: Int)(pairs: Iterator[Row]): Iterator[Row] =
+    Iterator.continually(pairs.hasNext).takeWhile(identity).flatMap { _ =>
+      val uf = new LongUnionFind
+      val nullPairs = scala.collection.mutable.ArrayBuffer.empty[Row]
+      while (pairs.hasNext && uf.size < maxVertices) {
+        val e = pairs.next()
+        if (absorb(uf, e)) nullPairs += e
+      }
+      uf.labels.map { case (v, r) => Row(v, r) } ++ nullPairs
+    }
+
+  /** Step 3: the whole forest's labeling, (doc_id, component). */
+  private def finish(forest: Iterator[Row]): Iterator[Row] = {
+    val uf = new LongUnionFind
+    val nullNeighbors = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var nullVertex = false
+    forest.foreach { e =>
+      if (absorb(uf, e)) {
+        nullVertex = true
+        Seq(0, 1).filterNot(e.isNullAt).foreach(i => nullNeighbors += e.getLong(i))
+      }
+    }
+    if (nullVertex && uf.size == 0)
+      throw new IllegalStateException("connectedComponents: NULL is the only vertex")
+    val nullRow = Option.when(nullVertex)(Row(null,
+      if (nullNeighbors.isEmpty) null else nullNeighbors.map(uf.find).min))
+    uf.labels.map { case (v, c) => Row(v, c) } ++ nullRow
+  }
+
+  /** The distributed fallback: min-label propagation over a (d1, d2) pair
+    * list, returning (doc_id, component) and the vertex count. Every
+    * vertex starts as its own label; each round pulls the minimum label
+    * across neighbors, and from round 3 on also follows one
+    * label-of-label hop, so it converges in O(log diameter) rounds.
+    * `localCheckpoint` cuts the growing lineage so round N's plan does
+    * not replay rounds 1..N-1.
+    *
+    * Shuffle accounting: `sym` is hash-partitioned on `src` ONCE, which
     * the dedup aggregate (ClusteredDistribution on (src,dst) is satisfied
     * by the src clustering), the init aggregate (groupBy src), and every
     * round's propagation join all reuse — so a round's only exchange is
@@ -436,16 +577,7 @@ object Dedup {
     * ~1e38) strictly decreases iff any label changed; equal sums ⇒
     * fixpoint.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
-    connectedComponentsCounted(pairs, maxIter)._1
-
-  /** [[connectedComponents]] plus the VERTEX COUNT of the labeling, for
-    * free: the convergence aggregate already scans every label row each
-    * round, so the count rides the same job — callers that would
-    * otherwise run a separate count() barrier to size a broadcast
-    * (labelDelta's meta-fit gate) fuse it away (r11).
-    */
-  def connectedComponentsCounted(pairs: DataFrame, maxIter: Int = 50): (DataFrame, Long) = {
+  private def propagate(pairs: DataFrame, maxIter: Int): (DataFrame, Long) = {
     // sym is checkpointed partitioning-preserving (r10,
     // Graft.partitionedCheckpoint): under a plain AQE-compiled checkpoint
     // the LogicalRDD reports UnknownPartitioning — every round's
@@ -463,11 +595,8 @@ object Dedup {
     // countless repartition: AQE sizes the construction shuffle from
     // actual bytes (coalescing fires only without a pinned count), and
     // partitionedCheckpoint stamps that scale-adaptive count.
-    // Symmetrization is ONE explode pass, not a two-branch union: the
-    // union scanned the `pairs` plan twice, and when the caller hands an
-    // unmaterialized verify pipeline (q68: candidates + Jaccard; q628:
-    // PNG decode + dHash + Hamming) the whole pipeline executed twice
-    // inside the sym job (r10 JobProf finding on q628).
+    // Symmetrization is ONE explode pass, not a two-branch union that
+    // scans `pairs` twice.
     val sym = graft.core.Graft.partitionedCheckpoint(
       pairs.select(explode(array(
           struct(col("d1").as("src"), col("d2").as("dst")),
@@ -645,9 +774,9 @@ object Dedup {
     val l2 = labels.select(col("doc_id").as("d2"), col("component").as("c2"))
     // one pass resolves both endpoints and flags never-seen vertices;
     // LAZY cut (r11, the matSum recipe): everything downstream reads this
-    // edge-sized relation, and its FIRST action — the meta-CC's sym
-    // materialization below, which references it exactly once — doubles
-    // as the materialization job, so the standalone checkpoint barrier
+    // edge-sized relation, and its FIRST action — the meta-CC's forest
+    // count below, which references it exactly once — doubles as the
+    // materialization job, so the standalone checkpoint barrier
     // disappears. Later consumers (newVerts' two-branch union, oldComps)
     // read the persisted partitions.
     val e = newPairs
@@ -668,10 +797,10 @@ object Dedup {
       .unionAll(e.where(!col("n2")).select(col("e2").as("oc")))
       .distinct()
     // meta scales with |newPairs| components — broadcast only while it
-    // verifiably fits; the size gate rides the meta-CC's own convergence
-    // aggregate (connectedComponentsCounted, r11) instead of a separate
-    // count() barrier; a giant ingest batch falls back to AQE's own join
-    // pick instead of pressuring the driver
+    // verifiably fits; the size gate rides the meta-CC's own vertex count
+    // (connectedComponentsCounted) instead of a separate count() barrier;
+    // a giant ingest batch falls back to AQE's own join pick instead of
+    // pressuring the driver
     val (metaCc, nMeta) = connectedComponentsCounted(collapsed, maxIter)
     val metaAll0 = metaCc.select(col("doc_id").as("mv"), col("component").as("mc"))
     val fits = nMeta <= 4000000L
@@ -1025,4 +1154,76 @@ object Dedup {
       .select("doc_id", "i")
     spanIslands(dup, n)
   }
+}
+
+/** Union-find over Long vertex ids for [[Dedup.connectedComponents]]:
+  * union-by-min (a root is its component's least id) with path halving,
+  * on an open-addressing table of id → parent id (linear probing,
+  * Fibonacci hashing, at most half full; 17 B a slot, nothing boxed).
+  */
+private[operators] final class LongUnionFind {
+  private var bits = 4
+  private var ids = new Array[Long](1 << bits)
+  private var parent = new Array[Long](1 << bits)
+  private var used = new Array[Boolean](1 << bits)
+  private var n = 0
+
+  def size: Int = n
+
+  /** The slot holding `v`, or the empty slot where it belongs. */
+  private def slot(v: Long): Int = {
+    val mask = ids.length - 1
+    var i = ((v * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+    while (used(i) && ids(i) != v) i = (i + 1) & mask
+    i
+  }
+
+  private def grow(): Unit = {
+    val (oldIds, oldParent, oldUsed) = (ids, parent, used)
+    bits += 1
+    ids = new Array[Long](1 << bits)
+    parent = new Array[Long](1 << bits)
+    used = new Array[Boolean](1 << bits)
+    for (k <- oldIds.indices if oldUsed(k)) {
+      val i = slot(oldIds(k))
+      used(i) = true
+      ids(i) = oldIds(k)
+      parent(i) = oldParent(k)
+    }
+  }
+
+  /** Registers `v` as its own root unless it is already a vertex. */
+  def add(v: Long): Unit = if (!used(slot(v))) {
+    if (2 * (n + 1) > ids.length) grow()
+    val i = slot(v)
+    used(i) = true
+    ids(i) = v
+    parent(i) = v
+    n += 1
+  }
+
+  /** The root of a registered vertex. */
+  def find(v: Long): Long = {
+    var x = v
+    var i = slot(x)
+    while (parent(i) != x) {
+      val grand = parent(slot(parent(i)))
+      parent(i) = grand
+      x = grand
+      i = slot(x)
+    }
+    x
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    add(a)
+    add(b)
+    val (ra, rb) = (find(a), find(b))
+    if (ra < rb) parent(slot(rb)) = ra
+    else if (rb < ra) parent(slot(ra)) = rb
+  }
+
+  /** (vertex, root) for every vertex. */
+  def labels: Iterator[(Long, Long)] =
+    Iterator.range(0, ids.length).filter(used(_)).map(i => (ids(i), find(ids(i))))
 }

@@ -4,44 +4,19 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Graft
+import graft.operators.Dedup
 
-/** Head-to-head harness for the connectedComponents loop shape: times the
-  * CURRENT implementation against the pre-r9 reference loop (per-round
-  * old-vs-new label join for convergence, (src,dst)-partitioned edges) on
-  * synthetic 1M-vertex graphs in the two shapes dedup produces — shallow
-  * near-cliques (LSH clusters, 2-3 rounds) and deeper chains (worst-case
-  * propagation). `sbt "runMain graft.tools.CcBench [millions]"`.
+/** Head-to-head harness for connectedComponents' two paths: the gated
+  * union-find path (per-partition contraction, then one finishing task)
+  * against the distributed fallback it keeps for graphs over the gate
+  * (min-label propagation over the contracted forest, forced here with a
+  * negative gate). Synthetic 1M-vertex graphs in the two shapes dedup
+  * produces — shallow near-cliques (LSH clusters) and deeper chains
+  * (worst-case propagation) — and every run is checked exactly: each
+  * vertex must carry its group's least id.
+  * `sbt "runMain graft.tools.CcBench [millions]"`.
   */
 object CcBench {
-
-  /** The pre-r9 loop, kept verbatim as the comparison baseline. */
-  private def ccReference(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val sym = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .unionAll(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    var labels = sym.groupBy(col("src").as("v"))
-      .agg(min(col("dst")).as("__mn"))
-      .select(col("v"), least(col("v"), col("__mn")).as("lbl"))
-      .localCheckpoint()
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val step = sym.join(labels, sym("src") === labels("v"))
-        .select(col("dst").as("v"), col("lbl"))
-        .unionAll(labels)
-        .groupBy("v").agg(min("lbl").as("lbl"))
-        .as("n").join(labels.as("o"), Seq("v"))
-        .select(col("v"), col("n.lbl").as("lbl"),
-          (col("n.lbl") =!= col("o.lbl")).cast("long").as("__chg"))
-        .localCheckpoint()
-      changed = step.agg(coalesce(sum("__chg"), lit(0L))).head().getLong(0)
-      labels = step.select("v", "lbl")
-      i += 1
-    }
-    labels.select(col("v").as("doc_id"), col("lbl").as("component"))
-  }
-
   def main(args: Array[String]): Unit = {
     val millions = args.headOption.map(_.toInt).getOrElse(1)
     val n = millions * 1000000L
@@ -58,25 +33,31 @@ object CcBench {
     val chain = spark.range(n).where(col("id") % 64 =!= 0)
       .select((col("id") - 1).as("d1"), col("id").as("d2"))
 
-    def time(name: String, pairs: DataFrame, fn: DataFrame => DataFrame): Unit = {
+    // ids g·k .. g·k + k-1 form group g, labeled g·k
+    def time(name: String, pairs: DataFrame, k: Long, gate: Long): Unit = {
       val reps = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        val out = fn(pairs)
-        val parts = out.agg(count(lit(1)), countDistinct(col("component"))).head()
+        val (out, _) = Dedup.connectedComponentsGated(pairs, 50, gate)
+        val r = out.agg(count(lit(1)), countDistinct(col("component")),
+          count(when(col("component") =!= col("doc_id") - col("doc_id") % k, 1))).head()
         val dt = (System.nanoTime() - t0) / 1e9
         spark.sharedState.cacheManager.clearCache()
-        (dt, parts.getLong(0), parts.getLong(1))
+        require(r.getLong(0) == n && r.getLong(1) == n / k && r.getLong(2) == 0,
+          s"$name: ${r.getLong(0)} vertices, ${r.getLong(1)} components, " +
+            s"${r.getLong(2)} wrong labels; want $n, ${n / k}, 0")
+        (dt, r.getLong(0), r.getLong(1))
       }
       val (dt, nv, nc) = reps.minBy(_._1)
       println(f"$name: min ${dt}%.2f s  (all ${reps.map(_._1).map(v => f"$v%.2f").mkString(" ")})  vertices=$nv components=$nc")
     }
 
+    val gated = Long.MaxValue
     val cliqC = cliq.localCheckpoint(true)
     val chainC = chain.localCheckpoint(true)
-    time("cliques8_current  ", cliqC, graft.operators.Dedup.connectedComponents(_))
-    time("cliques8_reference", cliqC, ccReference(_))
-    time("chain64_current  ", chainC, graft.operators.Dedup.connectedComponents(_))
-    time("chain64_reference", chainC, ccReference(_))
+    time("cliques8_unionfind", cliqC, 8, gated)
+    time("cliques8_fallback ", cliqC, 8, -1)
+    time("chain64_unionfind ", chainC, 64, gated)
+    time("chain64_fallback  ", chainC, 64, -1)
     spark.stop()
   }
 }

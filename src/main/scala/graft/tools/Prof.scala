@@ -20,7 +20,7 @@ import graft.core.Graft
   *  - `jobs`: one warm run, then every Spark job of a measured run — its
   *    duration, the driver gap before it (planning/analysis time that job
   *    metrics alone hide; negative when it overlaps the job before) and
-  *    its callsite.
+  *    its callsite, led by `[operator]` for a job run inside a `Graft.span`.
   *  - `plan`: the final adaptive plan after `collect()` — the
   *    pre-execution explain hides runtime exchange reuse.
   *
@@ -82,9 +82,11 @@ object Prof {
     val open = scala.collection.mutable.Map.empty[Int, (Long, String)]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
-        // the result stage (highest id) is named after the job's callsite
+        // the result stage (highest id) is named after the job's callsite;
+        // an operator's Graft.span description leads when one is set
         val site = js.stageInfos.maxByOption(_.stageId).fold("?")(_.name)
-        open(js.jobId) = (js.time, site)
+        val desc = Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        open(js.jobId) = (js.time, desc.fold(site)(d => s"[$d] $site"))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
         open.remove(je.jobId).foreach { case (t0, site) => done += ((je.jobId, t0, je.time, site)) }

@@ -60,7 +60,10 @@ object VectorScale {
         (r.getLong(0), r.getLong(1))
       }
       require(nAsg == nVec, s"every vector must be assigned: $nAsg vs $nVec")
-      require(nCells <= 256, s"cells must not exceed the seed count: $nCells")
+      // kmeansAssignments seeds every vec_id (0 until nVec) divisible by
+      // seedEvery: ceil(nVec / seedEvery) centroids, 257 at 100k
+      val nSeeds = (nVec + seedEvery - 1) / seedEvery
+      require(nCells <= nSeeds, s"cells must not exceed the seed count $nSeeds: $nCells")
       println(f"""{"scenario":"kmeans_1m","vectors":$nVec,"cells":$nCells,""" +
         f""""iters":3,"sec":$sec%.2f,"shuffle_records":$shuf,""" +
         f""""shuffle_per_round":${shuf / 3},"vectors_per_sec":${(nVec / sec).toLong}}""")
