@@ -103,16 +103,18 @@ object Dedup {
     // the band union references the signature relation once per band —
     // cache it for the call or the whole shingle→md5→min pipeline
     // recomputes per branch (uncached index measured 153 s at 1M docs)
-    withCallScopedCache(sig) {
-      (0 until numHashes / rowsPerBand).map { bIdx =>
-        // cast defensively: on an INT lane, shiftleft(_, 32) would be a
-        // silent no-op (Java shifts wrap mod the width) and the bucket key
-        // would degrade to a collision-prone plain XOR
-        val lanes = (0 until rowsPerBand)
-          .map(r => col(s"m${bIdx * rowsPerBand + r}").cast("long"))
-        val bucket = lanes.reduceLeft((a, b) => shiftleft(a, 32).bitwiseXOR(b))
-        sig.select(col("doc_id"), lit(bIdx).as("band"), bucket.as("bucket"))
-      }.reduce(_ unionAll _).localCheckpoint(true)
+    graft.core.Graft.span("Dedup.lshBands") {
+      withCallScopedCache(sig) {
+        (0 until numHashes / rowsPerBand).map { bIdx =>
+          // cast defensively: on an INT lane, shiftleft(_, 32) would be a
+          // silent no-op (Java shifts wrap mod the width) and the bucket key
+          // would degrade to a collision-prone plain XOR
+          val lanes = (0 until rowsPerBand)
+            .map(r => col(s"m${bIdx * rowsPerBand + r}").cast("long"))
+          val bucket = lanes.reduceLeft((a, b) => shiftleft(a, 32).bitwiseXOR(b))
+          sig.select(col("doc_id"), lit(bIdx).as("band"), bucket.as("bucket"))
+        }.reduce(_ unionAll _).localCheckpoint(true)
+      }
     }
   }
 
@@ -173,22 +175,23 @@ object Dedup {
     * output is materialized, and a persisted index is a plain scan.
     */
   def minhashCandidatesBanded(bands: DataFrame,
-      maxBucket: Option[Int] = None): DataFrame = {
-    val pairs = maxBucket match {
-      case None => allPairs(bands)
-      case Some(cap) =>
-        // one aggregate sizes every bucket and picks its hub; the size
-        // rides back as a column so the split is a filter, not a rescan
-        val stats = bands.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("bsz"), min("doc_id").as("hub"))
-        val sized = bands.join(stats, Seq("band", "bucket"))
-        val dense = allPairs(sized.where(col("bsz") <= cap).select("doc_id", "band", "bucket"))
-        val star = sized.where(col("bsz") > cap && col("doc_id") =!= col("hub"))
-          .select(col("hub").as("d1"), col("doc_id").as("d2"))
-        dense.unionAll(star)
+      maxBucket: Option[Int] = None): DataFrame =
+    graft.core.Graft.span("Dedup.minhashCandidatesBanded") {
+      val pairs = maxBucket match {
+        case None => allPairs(bands)
+        case Some(cap) =>
+          // one aggregate sizes every bucket and picks its hub; the size
+          // rides back as a column so the split is a filter, not a rescan
+          val stats = bands.groupBy("band", "bucket")
+            .agg(count(lit(1)).as("bsz"), min("doc_id").as("hub"))
+          val sized = bands.join(stats, Seq("band", "bucket"))
+          val dense = allPairs(sized.where(col("bsz") <= cap).select("doc_id", "band", "bucket"))
+          val star = sized.where(col("bsz") > cap && col("doc_id") =!= col("hub"))
+            .select(col("hub").as("d1"), col("doc_id").as("d2"))
+          dense.unionAll(star)
+      }
+      pairs.distinct().localCheckpoint(true)
     }
-    pairs.distinct().localCheckpoint(true)
-  }
 
   /** The INCREMENTAL band-pair kernel: candidate pairs for a NEW shard
     * against an existing corpus whose band-bucket index is already
@@ -221,44 +224,45 @@ object Dedup {
     * which LshBucketCapSpec pins.
     */
   def incrementalCandidates(indexBands: DataFrame, shardBands: DataFrame,
-      maxBucket: Option[Int] = None): DataFrame = {
-    val pairs = maxBucket match {
-      case None => probeIntra(shardBands, indexBands)
-      case Some(cap) =>
-        // bucket size + hub over index ∪ shard — the IVF incremental
-        // arm's recipe (ivfIncrementalPairsIndexed): at scale the index
-        // side's counts are ONE aggregate over the persisted band
-        // relation (index metadata, no corpus text). doc_ids are
-        // disjoint, so min struct(doc_id, side) = the union's min id
-        // with its side riding along for the hub-ownership test.
-        val tagged = indexBands.select("doc_id", "band", "bucket")
-          .withColumn("side", lit(0))
-          .unionAll(shardBands.select("doc_id", "band", "bucket")
-            .withColumn("side", lit(1)))
-        // eager cut: O(buckets) rows, and an aggregate feeding three
-        // aliased joins below would otherwise recompute per branch
-        val stats = tagged.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("bsz"),
-            min(struct(col("doc_id"), col("side"))).as("mh"))
-          .select(col("band"), col("bucket"), col("bsz"),
-            col("mh.doc_id").as("hub"), col("mh.side").as("hub_side"))
-          .localCheckpoint(true)
-        val denseKeys = stats.where(col("bsz") <= cap).select("band", "bucket")
-        val dense = probeIntra(
-          shardBands.join(denseKeys, Seq("band", "bucket")),
-          indexBands.join(denseKeys, Seq("band", "bucket")))
-        // oversized: hub-star restricted to pairs touching the shard —
-        // (hub, member) survives iff the member is a shard doc OR the
-        // hub itself is (then every star edge touches the shard); hub
-        // is the union min, so d1 < d2 holds by construction
-        val star = tagged.join(stats.where(col("bsz") > cap), Seq("band", "bucket"))
-          .where(col("doc_id") =!= col("hub") &&
-            (col("side") === 1 || col("hub_side") === 1))
-          .select(col("hub").as("d1"), col("doc_id").as("d2"))
-        dense.unionAll(star)
+      maxBucket: Option[Int] = None): DataFrame =
+    graft.core.Graft.span("Dedup.incrementalCandidates") {
+      val pairs = maxBucket match {
+        case None => probeIntra(shardBands, indexBands)
+        case Some(cap) =>
+          // bucket size + hub over index ∪ shard — the IVF incremental
+          // arm's recipe (ivfIncrementalPairsIndexed): at scale the index
+          // side's counts are ONE aggregate over the persisted band
+          // relation (index metadata, no corpus text). doc_ids are
+          // disjoint, so min struct(doc_id, side) = the union's min id
+          // with its side riding along for the hub-ownership test.
+          val tagged = indexBands.select("doc_id", "band", "bucket")
+            .withColumn("side", lit(0))
+            .unionAll(shardBands.select("doc_id", "band", "bucket")
+              .withColumn("side", lit(1)))
+          // eager cut: O(buckets) rows, and an aggregate feeding three
+          // aliased joins below would otherwise recompute per branch
+          val stats = tagged.groupBy("band", "bucket")
+            .agg(count(lit(1)).as("bsz"),
+              min(struct(col("doc_id"), col("side"))).as("mh"))
+            .select(col("band"), col("bucket"), col("bsz"),
+              col("mh.doc_id").as("hub"), col("mh.side").as("hub_side"))
+            .localCheckpoint(true)
+          val denseKeys = stats.where(col("bsz") <= cap).select("band", "bucket")
+          val dense = probeIntra(
+            shardBands.join(denseKeys, Seq("band", "bucket")),
+            indexBands.join(denseKeys, Seq("band", "bucket")))
+          // oversized: hub-star restricted to pairs touching the shard —
+          // (hub, member) survives iff the member is a shard doc OR the
+          // hub itself is (then every star edge touches the shard); hub
+          // is the union min, so d1 < d2 holds by construction
+          val star = tagged.join(stats.where(col("bsz") > cap), Seq("band", "bucket"))
+            .where(col("doc_id") =!= col("hub") &&
+              (col("side") === 1 || col("hub_side") === 1))
+            .select(col("hub").as("d1"), col("doc_id").as("d2"))
+          dense.unionAll(star)
+      }
+      pairs.distinct().localCheckpoint(true)
     }
-    pairs.distinct().localCheckpoint(true)
-  }
 
   /** Band-index MAINTENANCE — the fourth leg of continuous ingestion
     * (admit → verify → merge labels → UPDATE the index): the admitted
@@ -298,94 +302,97 @@ object Dedup {
     * per-row memory bound — q618's oracle recomputes the identical
     * bottom-K relation from raw text. Default None keeps the exact
     * semantics (q27).
+    *
+    * Each candidate doc's set is built exactly once, behind an eager
+    * `localCheckpoint` that both pair joins read, and each pair's
+    * intersection is counted once: the scored pairs come back behind a
+    * lazy `localCheckpoint`, so a caller's predicate on the scores
+    * filters finished rows instead of entering the join condition (where
+    * the intersection would run per conjunct). The sets checkpoint runs
+    * in the call; the pair scoring runs at the caller's first action.
     */
   def jaccardVerify(candidates: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, shingleLen: Int = 8,
-      maxShingles: Option[Int] = None): DataFrame = {
-    // Only documents that appear in some candidate pair need their shingle
-    // sets — restrict with a broadcast semi-join on the candidate id set,
-    // so verification cost follows |candidates|, not corpus size.
-    //
-    // Each doc's DISTINCT shingle set stays an in-row ARRAY (no explode):
-    // per-pair intersection is `array_intersect` inside codegen. The
-    // explode alternative builds a |pairs|×|shingles/doc| intermediate
-    // (36M rows at sf0.1's 134k-pair clusters) and shuffles it twice;
-    // this shape joins 2 small set-tables to the pair list and does the
-    // set work row-local.
-    // one explode pass, not a two-branch union — the union scanned the
-    // candidate plan twice (and candidates are often an unmaterialized
-    // band-join pipeline; the CC symmetrization fix, r10)
-    val candIds = candidates
-      .select(explode(array(col("d1"), col("d2"))).as(idCol))
-      .distinct()
-    // shingle over a PRE-PROJECTED normalized-text ATTRIBUTE: with
-    // normText inlined into the transform lambda it re-evaluates per
-    // shingle position on non-CSE evaluation paths (quadratic in doc
-    // length — see minhashSignatures). The attribute is referenced both
-    // in the lambda and in sequence(length(..)), so CollapseProject
-    // keeps the two-step projection (multi-referenced non-cheap
-    // producer) and the regexp runs once per row.
-    // fused native set build: sorted_shingle_set ==
-    // array_sort(array_distinct(shingles(__nt, len))) in ONE pass (no
-    // transform lambda, no intermediate array, no per-element hash-set;
-    // char offsets computed once instead of a substr walk per window) —
-    // the verify builds one set per candidate doc PER JOIN SIDE (the
-    // sets exchange does not reuse across the two pair joins, probed
-    // r11), so the per-doc constant is the 2×-paid cost here.
-    // SortedShingleSetSpec pins equality with the declarative chain.
-    val fullSet = graft.plans.GraftFunctions.sortedShingleSet(col("__nt"), shingleLen)
-    val shsExpr = maxShingles match {
-      case None => fullSet
-      case Some(k) =>
-        // bottom-K by (md5, shingle): array_sort on the struct orders by
-        // the leading hash field, slice keeps K, transform unwraps — all
-        // in-row, so at most K elements ever leave the projection. For a
-        // ≤K set the slice is the whole set (order is irrelevant to the
-        // set ops below) — capped ≡ exact there, so the md5+sort work is
-        // GATED on size > K: a corpus where only pathological docs
-        // exceed the cap pays the hash only for those (ungated, md5 of
-        // every shingle of every candidate doc dominated the verify —
-        // 24.2 s vs the exact arm's 3.3 s at sf0.1).
-        when(size(fullSet) <= k, fullSet).otherwise(
-          // re-sort the bottom-K slice (it is ordered by md5, not by
-          // shingle) so every emitted set is sorted for the native merge
-          array_sort(transform(
-            slice(array_sort(transform(fullSet, s => struct(md5(s).as("h"), s.as("s")))),
-              1, k),
-            x => x.getField("s"))))
+      maxShingles: Option[Int] = None): DataFrame =
+    graft.core.Graft.span("Dedup.jaccardVerify") {
+      // Only documents that appear in some candidate pair need their shingle
+      // sets — restrict with a broadcast semi-join on the candidate id set,
+      // so verification cost follows |candidates|, not corpus size.
+      //
+      // Each doc's DISTINCT shingle set stays an in-row ARRAY (no explode):
+      // per-pair intersection is a native merge inside codegen. The
+      // explode alternative builds a |pairs|×|shingles/doc| intermediate
+      // (36M rows at sf0.1's 134k-pair clusters) and shuffles it twice;
+      // this shape joins one small set-table to the pair list twice and
+      // does the set work row-local.
+      // one explode pass, not a two-branch union — the union scanned the
+      // candidate plan twice (and candidates are often an unmaterialized
+      // band-join pipeline; the CC symmetrization fix, r10)
+      val candIds = candidates
+        .select(explode(array(col("d1"), col("d2"))).as(idCol))
+        .distinct()
+      // shingle over a PRE-PROJECTED normalized-text attribute (the
+      // regexp runs once per row however often the capped arm references
+      // the set) with a fused native set build: sorted_shingle_set ==
+      // array_sort(array_distinct(shingles(__nt, len))) in ONE pass (no
+      // transform lambda, no intermediate array, no per-element hash-set;
+      // char offsets computed once instead of a substr walk per window).
+      // SortedShingleSetSpec pins equality with the declarative chain.
+      val fullSet = graft.plans.GraftFunctions.sortedShingleSet(col("__nt"), shingleLen)
+      val shsExpr = maxShingles match {
+        case None => fullSet
+        case Some(k) =>
+          // bottom-K by (md5, shingle): array_sort on the struct orders by
+          // the leading hash field, slice keeps K, transform unwraps — all
+          // in-row, so at most K elements ever leave the projection. For a
+          // ≤K set the slice is the whole set (order is irrelevant to the
+          // set ops below) — capped ≡ exact there, so the md5+sort work is
+          // GATED on size > K: a corpus where only pathological docs
+          // exceed the cap pays the hash only for those (ungated, md5 of
+          // every shingle of every candidate doc dominated the verify —
+          // 24.2 s vs the exact arm's 3.3 s at sf0.1).
+          when(size(fullSet) <= k, fullSet).otherwise(
+            // re-sort the bottom-K slice (it is ordered by md5, not by
+            // shingle) so every emitted set is sorted for the native merge
+            array_sort(transform(
+              slice(array_sort(transform(fullSet, s => struct(md5(s).as("h"), s.as("s")))),
+                1, k),
+              x => x.getField("s"))))
+      }
+      // the set is stored SORTED (native build above; the capped arm
+      // re-sorts its slice): the per-PAIR intersection below then runs as
+      // a native two-pointer merge (sorted_intersect_count) instead of
+      // array_intersect's per-pair hash-set build — the verify cost is
+      // |pairs| × intersect, so the per-pair constant dominates and the
+      // per-doc sort amortizes over every pair the doc appears in (r11;
+      // SortedIntersectSpec pins the count equality with the builtin).
+      // Set semantics are unchanged — only the in-row element order
+      // differs, and no caller reads `shs`.
+      // eager barrier, the one set build: left lazy, each pair join plans
+      // its own copy of this subplan, and exchange reuse cannot merge a
+      // copy streamed against broadcast candidates with one built for an
+      // exchange (the perfbench verify stage spent 1.78 s CPU that way,
+      // 0.57 s reading a checkpoint). Both aliases scan these rows.
+      val sets = docs
+        .join(broadcast(candIds), Seq(idCol), "left_semi")
+        .select(col(idCol).as("doc_id"), normText(col(textCol)).as("__nt"))
+        .select(col("doc_id"), shsExpr.as("shs"))
+        .localCheckpoint(true)
+      val a = sets.as("a")
+      val b = sets.as("b")
+      candidates
+        .join(a, col("a.doc_id") === col("d1"))
+        .join(b, col("b.doc_id") === col("d2"))
+        .select(col("d1"), col("d2"), col("a.shs").as("s1"), col("b.shs").as("s2"))
+        .withColumn("n_inter",
+          graft.plans.GraftFunctions.sortedIntersectCount(col("s1"), col("s2")))
+        .select(col("d1"), col("d2"), col("n_inter"),
+          (size(col("s1")) + size(col("s2")) - col("n_inter")).as("n_union"),
+          floor(lit(100000.0) * col("n_inter") / (size(col("s1")) + size(col("s2")) - col("n_inter")))
+            .cast("long").as("jaccard_scaled"))
+        // lazy barrier: a caller's filter on the scores stays above it
+        .localCheckpoint(false)
     }
-    // the set is stored SORTED (native build above; the capped arm
-    // re-sorts its slice): the per-PAIR intersection below then runs as
-    // a native two-pointer merge (sorted_intersect_count) instead of
-    // array_intersect's per-pair hash-set build — the verify cost is
-    // |pairs| × intersect, so the per-pair constant dominates and the
-    // per-doc sort amortizes over every pair the doc appears in (r11;
-    // SortedIntersectSpec pins the count equality with the builtin).
-    // Set semantics are unchanged — only the in-row element order
-    // differs, and no caller reads `shs`.
-    val sets = docs
-      .join(broadcast(candIds), Seq(idCol), "left_semi")
-      .select(col(idCol).as("doc_id"), normText(col(textCol)).as("__nt"))
-      .select(col("doc_id"), shsExpr.as("shs"))
-    // Both joins below shuffle the same `sets` subplan hash-partitioned on
-    // doc_id, but Spark does NOT reuse the first join's exchange for the
-    // second: each join side builds its own sets (plans/r11/
-    // q27t_smj_probe.txt shows two identical, unreused ShuffleQueryStages),
-    // so the per-doc set build is paid twice — see the native-build note
-    // above.
-    val a = sets.as("a")
-    val b = sets.as("b")
-    candidates
-      .join(a, col("a.doc_id") === col("d1"))
-      .join(b, col("b.doc_id") === col("d2"))
-      .select(col("d1"), col("d2"), col("a.shs").as("s1"), col("b.shs").as("s2"))
-      .withColumn("n_inter",
-        graft.plans.GraftFunctions.sortedIntersectCount(col("s1"), col("s2")))
-      .select(col("d1"), col("d2"), col("n_inter"),
-        (size(col("s1")) + size(col("s2")) - col("n_inter")).as("n_union"),
-        floor(lit(100000.0) * col("n_inter") / (size(col("s1")) + size(col("s2")) - col("n_inter")))
-          .cast("long").as("jaccard_scaled"))
-  }
 
   /** 16-bit SimHash per document: per-bit ±1 sums over token hashes
     * (frequency-weighted — duplicate tokens count), sign → bit. Bit ops
@@ -872,8 +879,8 @@ object Dedup {
       maxDist: Int = 3, maxBand: Option[Int] = None): DataFrame =
     withCallScopedCache(sig) {
       val cand = minhashCandidatesBanded(laneBands(sig, idCol, laneCols), maxBand)
-      // verification joins mirror jaccardVerify's ReusedExchange shape:
-      // both sides shuffle the identical lane subplan on doc_id. Pair
+      // verification joins mirror jaccardVerify's shape: both sides read
+      // the one materialized lane relation (the call-scoped cache). Pair
       // columns resolve through cand(...) — a lane literally named "d1"
       // (the image dHash lanes) would otherwise make the bare name
       // ambiguous after the joins.

@@ -929,12 +929,12 @@ object TextQueries {
           .select(lit(id).as("doc_id"), col("text"))
       // r10: materialize the union (incl. the two planted giant-doc
       // aggregates) and the candidate pairs ONCE — downstream,
-      // jaccardVerify references the candidate relation three times
-      // (candIds under both set-side semi-joins + the pair join) and the
-      // doc relation twice more; without the cuts those references
-      // compile into CONCURRENT broadcast-build jobs that each re-derive
-      // the whole giant-doc + minhash + candidate pipeline (JobProf: four
-      // parallel ~3.4 s jobs inside one q618 run).
+      // jaccardVerify references the candidate relation twice (candIds
+      // under the set-side semi-join + the pair join) and the doc
+      // relation once more; without the cuts those references compile
+      // into separate jobs that each re-derive the whole giant-doc +
+      // minhash + candidate pipeline (JobProf, r10: four parallel ~3.4 s
+      // jobs inside one q618 run).
       val u = nearDupDocs(docs)
         .unionAll(bigDoc(500001L, 1L, 100L))
         .unionAll(bigDoc(500002L, 5L, 100L))

@@ -624,18 +624,21 @@ object ScaleCheck {
         f""""intervals_per_sec":${(2 * n / ivSec).toLong}}""")
 
       // CUSUM prefix form (q439's shape) over 100k series × ${2n/100k}
-      // points: 1% of series carry a +4/step drift in their last quarter;
-      // with target k=10, threshold h=100, CLEAN series hold S≡0 and
-      // drifted ones must alarm — the alarm census equals the plant
+      // points: 1% of series drift over their last quarter, by a per-step
+      // amount sized so the drifted tail sums past the threshold at every
+      // scale; with target k=10, threshold h=100, CLEAN series hold S≡0
+      // and drifted ones must alarm — the alarm census equals the plant
       // exactly, or the prefix/min-window identity is broken.
       val nSeries = 100000L
       val perSeries = (2 * n) / nSeries
+      val driftFrom = (perSeries * 3) / 4
+      val drift = 100 / (perSeries - driftFrom) + 1
       val cu = spark.range(2 * n).select(
         (col("id") % nSeries).as("sid"),
         (col("id") / nSeries).cast("long").as("t"))
         .withColumn("x",
           lit(10L) + when(col("sid") % 100 === 0 &&
-            col("t") >= (perSeries * 3) / 4, 4L).otherwise(0L))
+            col("t") >= driftFrom, drift).otherwise(0L))
       val t82 = System.nanoTime()
       val wS = Window.partitionBy("sid").orderBy("t")
       val cus = cu.withColumn("ps", sum(col("x") - 10L).over(wS))

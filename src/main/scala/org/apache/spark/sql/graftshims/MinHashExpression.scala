@@ -78,12 +78,12 @@ case class MinHashFromText(child: Expression, shingleLen: Int, numHashes: Int)
   * char byte-offsets computed once (the declarative chain's substr walks
   * the string per window), windows sliced by byte range, sorted with the
   * binary UTF8 ordering array_sort uses, adjacent-deduped. The Jaccard
-  * verify builds one such set per candidate document (and the broadcast
-  * non-reuse makes it build PER JOIN SIDE — see jaccardVerify), so the
-  * per-document constant is paid 2× per verify; this removes the
-  * transform-lambda invocation, the intermediate shingle array, and
-  * array_distinct's per-element hash-set pass. SortedShingleSetSpec pins
-  * equality with the declarative chain on the real corpus fixture.
+  * verify builds one such set per candidate document, once, behind the
+  * checkpoint both of its pair joins read (see jaccardVerify); this
+  * removes the transform-lambda invocation, the intermediate shingle
+  * array, and array_distinct's per-element hash-set pass.
+  * SortedShingleSetSpec pins equality with the declarative chain on the
+  * real corpus fixture.
   */
 case class SortedShingleSet(child: Expression, shingleLen: Int)
     extends UnaryExpression with ExpectsInputTypes {

@@ -1,5 +1,15 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.graftshims.ListenerShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkSpec
 
 /** Property pin for [[Dedup.jaccardVerify]] against a driver-side brute
@@ -110,5 +120,100 @@ class JaccardPropertySpec extends SparkSpec {
       }.sorted
       assert(gotBig == wantExact, "a cap above every set size must be exact")
     }
+  }
+
+  /** Every plan node the queries run by `body` executed, stages and
+    * checkpoints included, with the body's result.
+    */
+  private def executedNodes[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    ListenerShim.waitUntilEmpty(sc, 30000)
+    spark.listenerManager.register(listener)
+    val out = try { val r = body; ListenerShim.waitUntilEmpty(sc, 30000); r }
+      finally spark.listenerManager.unregister(listener)
+    val walk = new AdaptiveSparkPlanHelper {}
+    (out, plans.synchronized(plans.toList).flatMap(p => walk.collect(p) { case n => n }))
+  }
+
+  private def evaluates(n: SparkPlan, fn: String): Boolean =
+    n.expressions.exists(_.exists(_.prettyName == fn))
+
+  test("a caller filter on jaccard_scaled keeps one set build and one intersection per pair") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
+    // docs past 24 are never candidates: they make the doc relation's
+    // size estimate exceed the candidates', so the pair join broadcasts
+    // the candidates into a stream of sets, as on a real corpus
+    val docs = (1L to 24L).map(i =>
+      (i, (1 to (3 + rnd.nextInt(12)))
+        .map(_ => words(rnd.nextInt(words.size))).mkString(" "))) ++
+      (25L to 200L).map(i => (i, s"filler $i"))
+    val byId = docs.toMap
+    val cands = (for (a <- 1L to 24L; b <- a + 1 to 24L if rnd.nextInt(4) == 0) yield (a, b))
+    val k = 20
+    def bottomK(ss: Set[String]): Set[String] =
+      ss.toSeq.sortBy(sh => (md5hex(sh), sh)).take(k).toSet
+    val threshold = 40000L
+    for ((cap, setOf) <- Seq[(Option[Int], String => Set[String])](
+        None -> (t => shingleSet(t)), Some(k) -> (t => bottomK(shingleSet(t))))) {
+      val (got, nodes) = executedNodes {
+        Dedup.jaccardVerify(cands.toDF("d1", "d2"), docs.toDF("doc_id", "text"),
+            "doc_id", "text", maxShingles = cap)
+          .where(col("jaccard_scaled") > threshold)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+          .sorted.toSeq
+      }
+      val want = cands.map { case (a, b) =>
+        val (sa, sb) = (setOf(byId(a)), setOf(byId(b)))
+        val inter = (sa & sb).size.toLong
+        val union = sa.size + sb.size - inter
+        (a, b, inter, union, math.floor(100000.0 * inter / union).toLong)
+      }.filter(_._5 > threshold).sorted
+      assert(want.nonEmpty && want.size < cands.size, s"threshold splits nothing: $cap")
+      assert(got == want, s"cap $cap: got $got\nwant $want")
+      val builds = nodes.filter(evaluates(_, "sorted_shingle_set"))
+      assert(builds.size == 1, s"cap $cap: set built at ${builds.size} sites\n${builds.mkString("\n")}")
+      val joinConds = nodes.collect { case j: BaseJoinExec => j.condition.toSeq }.flatten
+        .filter(_.exists(_.prettyName == "sorted_intersect_count"))
+      assert(joinConds.isEmpty, s"cap $cap: intersection in join conditions: $joinConds")
+      assert(nodes.count(evaluates(_, "sorted_intersect_count")) == 1, s"cap $cap")
+    }
+  }
+
+  test("every job the verify call starts carries its job description, restored afterwards") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma epsilon"),
+      (3L, "zeta eta theta iota")).toDF("doc_id", "text")
+    val cands = Seq((1L, 2L), (1L, 3L)).toDF("d1", "d2")
+    val descs = mutable.ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = descs.synchronized {
+        descs += js.properties.getProperty("spark.job.description")
+      }
+    }
+    val sc = spark.sparkContext
+    sc.setJobDescription("outer")
+    ListenerShim.waitUntilEmpty(sc, 30000)
+    sc.addSparkListener(listener)
+    try {
+      val pairs = Dedup.jaccardVerify(cands, docs, "doc_id", "text")
+      assert(pairs.count() == 2)
+      ListenerShim.waitUntilEmpty(sc, 30000)
+    } finally sc.removeSparkListener(listener)
+    assert(sc.getLocalProperty("spark.job.description") == "outer")
+    sc.setJobDescription(null)
+    // the set build inside the call, then the caller's count outside it
+    val (inside, after) = descs.synchronized(descs.toList).span(_ == "Dedup.jaccardVerify")
+    assert(inside.nonEmpty && after.nonEmpty && after.forall(_ == "outer"), inside ++ after)
   }
 }
