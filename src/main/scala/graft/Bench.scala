@@ -149,8 +149,11 @@ object Bench {
     samples
   }
 
-  /** Samples per query unless SPARK_GRAFT_BENCH_REPS overrides it. */
-  private[graft] val defaultReps = 2
+  /** Samples per query for `Bench` and `Prof time`: SPARK_GRAFT_BENCH_REPS
+    * (read through `env`), else 2; at least 1.
+    */
+  private[graft] def reps(env: String => Option[String] = sys.env.get): Int =
+    env("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(2).max(1)
 
   /** The twins' action: every column of every row computes. */
   private[graft] def noopSink(df: DataFrame): Unit =
@@ -190,8 +193,7 @@ object Bench {
     val names =
       if (benchAll) SparkEntry.queries.keys.toSeq.sorted
       else headline.filter(SparkEntry.queries.contains) ++ coh
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption)
-      .getOrElse(defaultReps).max(1)
+    val reps = this.reps()
     val sampled = names.map(name =>
       name -> measureSamples(spark, reps)(() => SparkEntry.queries(name)(spark, sfDir).count()))
     // Noop-sink TWIN entries (guide §1.4, additions-only — the count()

@@ -27,10 +27,8 @@ object Graft {
     // built hash map (several × larger), and with 32 concurrent tasks
     // sharing local execution memory a 64m build partition does NOT
     // verifiably fit. The local A/B had measured the rewrite as noise
-    // anyway; clusters with generous per-task memory can opt in via
-    // SPARK_GRAFT_SHJ_THRESHOLD.
-    c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
+    // anyway.
+    c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
     // events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
     // reader rejects; read as raw Long nanos and convert in Tables.events.
     c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -184,6 +182,4 @@ final case class QueryDef(
 object QueryDef {
   def sql(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle))
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

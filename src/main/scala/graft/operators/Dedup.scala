@@ -33,9 +33,9 @@ object Dedup {
     *
     * Uses the native MinHashSignature expression — the whole signature is
     * one in-row loop, a pure PROJECTION: no shingle explode, no groupBy,
-    * no shuffle. [[minhashSignaturesAgg]] is the declarative twin it is
-    * spec-checked against. The explicit repartition only spreads the few
-    * fat input splits across cores.
+    * no shuffle; MinHashExpressionSpec checks it against a declarative
+    * twin. The explicit repartition only spreads the few fat input splits
+    * across cores.
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 8, numHashes: Int = 8): DataFrame = {
@@ -53,26 +53,6 @@ object Dedup {
     docs.repartition(n, col(idCol))
       .select(col(idCol).as("doc_id") +:
         (0 until numHashes).map(i => element_at(sig, i + 1).as(s"m$i")): _*)
-  }
-
-  /** Declarative twin of [[minhashSignatures]] (higher-order built-ins:
-    * explode → md5/conv → groupBy k-way min) — kept as the semantic spec
-    * and the shape an external SQL engine reproduces.
-    */
-  def minhashSignaturesAgg(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 8, numHashes: Int = 8): DataFrame = {
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sh = docs.repartition(n, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        explode(shingles(normText(col(textCol)), shingleLen)).as("sh"))
-      .select(col("doc_id"), md5(col("sh")).as("md"))
-      .select(col("doc_id"),
-        conv(substring(col("md"), 1, 8), 16, 10).cast("long").as("a"),
-        conv(substring(col("md"), 9, 8), 16, 10).cast("long").bitwiseOR(lit(1L)).as("b"))
-    sh.groupBy("doc_id")
-      .agg(
-        min(derivedHash(col("a"), col("b"), 0)).as("m0"),
-        (1 until numHashes).map(i => min(derivedHash(col("a"), col("b"), i)).as(s"m$i")): _*)
   }
 
   /** LSH band state: signature rows → (doc_id, band, bucket), the one
@@ -164,9 +144,10 @@ object Dedup {
       .unionAll(allPairs(shd))
 
   /** The FULL-CORPUS band-pair kernel over any (doc_id, band, bucket)
-    * relation — [[lshBands]] output, or the banded-Hamming lane bands of
-    * [[bandedHammingPairs]]: distinct (d1, d2) pairs sharing a bucket,
-    * `maxBucket`-capped as documented on [[minhashCandidates]],
+    * relation — [[lshBands]] output, the banded-Hamming lane bands of
+    * [[bandedHammingPairs]], or an IVF cell index read as one band
+    * (Similarity.ivfCandidatePairs): distinct (d1, d2) pairs sharing a
+    * bucket, `maxBucket`-capped as documented on [[minhashCandidates]],
     * materialized by an eager localCheckpoint. A composition that also
     * probes the same index (q604/q605/q609's shape: corpus CC from the
     * full pair set, THEN a shard admission against the same bands) builds
@@ -208,7 +189,8 @@ object Dedup {
     * (band, bucket); MaterializedIndexSpec proves probe-from-disk
     * candidate identity. Both sides are any (doc_id, band, bucket)
     * relations — [[lshBands]] output for MinHash, lane bands for
-    * [[bandedHammingIncremental]].
+    * [[bandedHammingIncremental]], cell assignments for
+    * Similarity.ivfIncrementalPairsIndexed.
     *
     * Exactly equivalent to `minhashCandidates(index ∪ shard)` restricted
     * to pairs touching the shard (bands are per-doc), which
@@ -229,8 +211,7 @@ object Dedup {
       val pairs = maxBucket match {
         case None => probeIntra(shardBands, indexBands)
         case Some(cap) =>
-          // bucket size + hub over index ∪ shard — the IVF incremental
-          // arm's recipe (ivfIncrementalPairsIndexed): at scale the index
+          // bucket size + hub over index ∪ shard: at scale the index
           // side's counts are ONE aggregate over the persisted band
           // relation (index metadata, no corpus text). doc_ids are
           // disjoint, so min struct(doc_id, side) = the union's min id
@@ -401,26 +382,9 @@ object Dedup {
   def simhash16(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     // native expression: the fingerprint is one in-row loop over the
     // token array — a pure projection, no explode and no shuffle.
-    // [[simhash16Agg]] is the declarative twin it is spec-checked against.
+    // SimHashExpressionSpec checks it against a declarative twin.
     docs.select(col(idCol).as("doc_id"),
       graft.plans.GraftFunctions.simhash16(tokens(normText(col(textCol)))).as("simhash"))
-
-  /** Declarative twin of [[simhash16]] (explode tokens → explode bit
-    * positions → sign sums) — kept as the semantic spec and the shape an
-    * external SQL engine reproduces.
-    */
-  def simhash16Agg(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.repartition(docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        explode(tokens(normText(col(textCol)))).as("tok"))
-      .select(col("doc_id"), hash16(col("tok")).as("h"))
-      .select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(15))).as("b"))
-      .groupBy("doc_id", "b")
-      .agg(sum(when(expr("(h div CAST(pow(2.0, b) AS BIGINT)) % 2") === 1, 1L)
-        .otherwise(-1L)).as("s"))
-      .groupBy("doc_id")
-      .agg(sum(when(col("s") > 0, expr("CAST(pow(2.0, b) AS BIGINT)"))
-        .otherwise(0L)).as("simhash"))
 
   /** Connected components over an undirected pair list (d1, d2) — the
     * clustering step of corpus dedup: near-dup PAIRS become duplicate
@@ -1097,21 +1061,6 @@ object Dedup {
       .select(col("gram"), col("cnt"),
         when(col("cnt") === 1, col("occ.doc_id")).as("one_doc"),
         when(col("cnt") === 1, col("occ.i")).as("one_pos"))
-
-  /** Folds a shard into the gram state; merge ≡ rebuild over
-    * corpus ∪ shard: counts are additive, and a union count of 1 means
-    * exactly one side holds the gram (its single occurrence carries
-    * over verbatim).
-    */
-  def dupSpanStateMerge(state: DataFrame, shard: DataFrame, idCol: String,
-      textCol: String, n: Int = 8): DataFrame = {
-    val s = dupSpanState(shard, idCol, textCol, n)
-    val ucnt = coalesce(col("a.cnt"), lit(0L)) + coalesce(col("b.cnt"), lit(0L))
-    state.as("a").join(s.as("b"), col("a.gram") === col("b.gram"), "full_outer")
-      .select(coalesce(col("a.gram"), col("b.gram")).as("gram"), ucnt.as("cnt"),
-        when(ucnt === 1, coalesce(col("a.one_doc"), col("b.one_doc"))).as("one_doc"),
-        when(ucnt === 1, coalesce(col("a.one_pos"), col("b.one_pos"))).as("one_pos"))
-  }
 
   /** Incremental ExactSubstr: spans after ingesting `shard`, for exactly
     * the AFFECTED documents — the shard itself plus every old document

@@ -102,14 +102,6 @@ object Migrate {
         when(col("__s").isNotNull, col(s"__s_$c")).otherwise(col(c)).as(c))): _*)
   }
 
-  /** Bucketed table write: hash-bucket + sort the data by the join key at
-    * write time so every later equi-join/aggregation on that key is
-    * SHUFFLE-FREE — the per-bucket layout replaces the exchange. This is
-    * the 100 TB pattern for fact tables joined repeatedly on the same key
-    * (the reference's chunk co-location, persisted). Requires a table
-    * catalog (`saveAsTable`); BucketedJoinSpec asserts the shuffle-free
-    * plan.
-    */
   /** Hive-style partitioned parquet layout — the 100 TB fact-table
     * organization: scans with a partition-column predicate read only the
     * matching directories (PartitionFilters, no data IO for pruned
@@ -123,10 +115,4 @@ object Migrate {
     // partition's rows are clustered into whole files
     df.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
       .write.mode("overwrite").partitionBy(partCols: _*).parquet(dir)
-
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
 }

@@ -38,12 +38,6 @@ object Multimodal {
     df.select(col(idCol).cast("long").as("doc_id"),
       col(payloadCol).cast("binary").as("content"))
 
-  /** Metadata projection — pure Column exprs, no decode, prunable. */
-  def metadata(bin: DataFrame): DataFrame =
-    bin.select(col("doc_id"),
-      length(col("content")).cast("long").as("n_bytes"),
-      md5(col("content")).as("content_hash"))
-
   // ---- container-header probes (pure byte arithmetic, no codecs) ----
 
   private def be16(b: Array[Byte], i: Int): Int =

@@ -35,11 +35,4 @@ object Routing {
       catalog.where(keep(col(nameCol)))
     }
   }
-
-  /** Column routing: ordered upstream→downstream renames
-    * (`data_compare_divider.go:282-316` keeps order). Unmapped columns
-    * keep their names.
-    */
-  def renameColumns(df: DataFrame, route: Map[String, String]): DataFrame =
-    df.select(df.columns.map(c => col(c).as(route.getOrElse(c, c))): _*)
 }

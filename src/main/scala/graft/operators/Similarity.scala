@@ -38,19 +38,11 @@ object Similarity {
     floor(x.cast("double") * lit(Scale)).cast("long")
 
   /** Exact scaled dot product of two float-array columns — the native
-    * fused-loop Catalyst expression (graft.plans.GraftFunctions); the
-    * declarative twin below is its semantic spec.
+    * fused-loop Catalyst expression (graft.plans.GraftFunctions); its
+    * declarative twin lives in the tests as the semantic spec.
     */
   def scaledDot(a: Column, b: Column): Column =
     graft.plans.GraftFunctions.scaledDot(a, b)
-
-  /** Declarative twin of [[scaledDot]] (higher-order built-ins only):
-    * allocates a zipped array and runs two lambdas per element — kept as
-    * the reference implementation VectorExpressionsSpec checks the native
-    * expression against.
-    */
-  def scaledDotDeclarative(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => sInt(x) * sInt(y)), lit(0L), (acc, v) => acc + v)
 
   /** Scaled cosine: floor(10^6 · dot / (‖a‖·‖b‖)), all from exact ints. */
   def cosineScaled(a: Column, b: Column): Column =
@@ -104,36 +96,6 @@ object Similarity {
         cosineScaled(col("embedding"), col("qv")).as("cos_scaled"))
       .orderBy(col("cos_scaled").desc, col("vec_id").asc)
       .limit(k)
-  }
-
-  /** IVF (inverted-file) ANN: partition the corpus into Voronoi cells
-    * around deterministic centroids (every `centroidEvery`-th vector —
-    * reproducible without iterative k-means), assign each vector to its
-    * max-cosine centroid, and at query time probe only the `nProbe`
-    * nearest cells with the exact ranking.
-    *
-    * Scale shape: assignment is a broadcast cross join of the (tiny)
-    * centroid set against the corpus with the native scaled_dot per pair —
-    * embarrassingly parallel, one pass; the probe reads |corpus|·nProbe/C
-    * vectors. The cell table would be written once and reused across
-    * queries in production.
-    */
-  def ivfAssignments(embeddings: DataFrame, centroidEvery: Int, numPlanes: Int = 0): DataFrame = {
-    val centroids = embeddings.where(col("vec_id") % centroidEvery === 0)
-      .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
-    // one-row centroid array, broadcast: assignment is then a PURE
-    // PROJECTION — the in-row argmin over C struct scores replaces the
-    // former n·C exploded rows through a window exchange (at 1M vectors
-    // × 10k cells that exchange is 10^10 rows; this plan shuffles none).
-    // min of (-ccos, cid) == the window's (ccos DESC, cid ASC) head.
-    val centsArr = centroids
-      .agg(collect_list(struct(col("cid"), col("cemb"))).as("cents"))
-    embeddings.crossJoin(broadcast(centsArr))
-      .select(col("vec_id"), col("embedding"),
-        array_min(transform(col("cents"), c =>
-          struct((-cosineScaled(col("embedding"), c.getField("cemb"))).as("negccos"),
-            c.getField("cid").as("cid"))))
-          .getField("cid").as("cell"))
   }
 
   /** Lloyd's k-means over scaled-integer embeddings, engine-exact: seeds
@@ -223,143 +185,13 @@ object Similarity {
     finally embArr.unpersist(false)
   }
 
-  /** IVF multi-probe candidate pairs — the default kNN base for
-    * neighborhood operators (q470 LOF): every vector is indexed into its
-    * `nProbe` nearest cells (deterministic centroids, every
-    * `centroidEvery`-th vector), and candidate pairs are cell-mates.
-    * Pair count follows Σ|cell|² ≈ n²·nProbe²/C — the n²/C shape that
-    * replaces brute force; the only cross join is corpus × centroids.
-    * Returns directed (qid, cid) pairs, deduplicated across shared cells.
+  /** IVF (inverted-file) ANN: the corpus is partitioned into Voronoi
+    * cells around deterministic centroids (every `centroidEvery`-th
+    * vector, reproducible without iterative k-means), each vector is
+    * assigned to its nearest centroids by scaled cosine, and a query
+    * probes only its `nProbe` nearest cells with the exact ranking.
     *
-    * `maxCell` is the vector twin of [[Dedup.minhashCandidates]]'
-    * `maxBucket` — the 100 TB safety valve for a DEGENERATE cell: skewed
-    * embedding distributions crowd one centroid (near-duplicate corpora,
-    * zero-vector sinks), and that cell's self-join alone is |cell|²
-    * pairs. With a cap, oversized cells emit hub-star edges instead
-    * (min vec_id ↔ each member, kept symmetric in the directed pair
-    * convention): volume turns linear while every member stays reachable
-    * from the cell's hub, which is what downstream neighborhood /
-    * clustering consumers need. Default None preserves the exact
-    * cell-mate semantics.
-    */
-  def ivfCandidatePairs(embeddings: DataFrame, centroidEvery: Int,
-      nProbe: Int, maxCell: Option[Int] = None): DataFrame = {
-    val emb = embeddings.withColumn("__nrm",
-      scaledDot(col("embedding"), col("embedding")))
-    val cent = emb.where(col("vec_id") % centroidEvery === 0)
-      .select(col("vec_id").as("ccid"), col("embedding").as("cemb"),
-        col("__nrm").as("cnrm0"))
-    // in-row multi-probe (r6): pack each centroid's (negccos, idx) into
-    // one monotone long and take the native k-smallest — the former
-    // window path materialized n·C rows into a vec_id exchange before
-    // rn <= nProbe could drop them (240 GB of shuffle at 1M×10k), and
-    // the first in-row cut (array_sort over C structs + slice) still
-    // paid O(C log C) boxed struct comparisons per row, which at
-    // 1M×10k-cells was the whole assignment (and OOM'd the 1M
-    // ScaleCheck). min_k_long is one primitive O(C·nProbe) insertion
-    // pass. cents is ccid-ASCENDING (sort_array on the struct sorts by
-    // the leading field), so packed index order == ccid order and the
-    // k smallest packed == (ccos DESC, ccid ASC) head — same cells as
-    // the sort+slice twin, bit for bit. Nothing leaves the row until
-    // the nProbe cell ids explode.
-    val centsArr = cent
-      .agg(sort_array(collect_list(struct(col("ccid"), col("cemb"), col("cnrm0"))))
-        .as("cents"))
-    // The assignment feeds BOTH sides of the cell self-join, and Spark
-    // plans the two sides as independent subtrees (no ReusedExchange —
-    // the per-side aliases defeat canonicalized reuse), so without a cut
-    // the n·C centroid scoring runs TWICE. The assignment itself is tiny
-    // (nProbe rows/vector, two longs each — 32 MB at 1M vectors):
-    // materialize it once; the self-join then reads the materialized
-    // relation on both sides. Eager like kmeansAssignments' result — the
-    // call-time cost IS the scoring pass.
-    val asg = probeAssignments(emb, centsArr, nProbe)
-    cellMatePairs(asg, maxCell)
-  }
-
-  /** Directed cell-mate pairs over a materialized (vec_id, cell)
-    * assignment, with the optional hub-star escape for cells above
-    * `maxCell` — shared by [[ivfCandidatePairs]] and the capped arm of
-    * [[ivfIncrementalPairs]]' spec twin. One tiny aggregate sizes every
-    * cell and picks its hub; the size rides back as a column so the
-    * dense/star split is a filter over the already-materialized
-    * assignment, never a rescan of the corpus.
-    */
-  private def cellMatePairs(asg: DataFrame, maxCell: Option[Int]): DataFrame =
-    maxCell match {
-      case None =>
-        asg.select(col("vec_id").as("qid"), col("cell"))
-          .join(asg.select(col("vec_id").as("cid"), col("cell")), "cell")
-          .where(col("qid") =!= col("cid"))
-          .select("qid", "cid").distinct()
-      case Some(cap) =>
-        val stats = asg.groupBy("cell")
-          .agg(count(lit(1)).as("csz"), min("vec_id").as("hub"))
-        val sized = asg.join(stats, Seq("cell"))
-        val dense = sized.where(col("csz") <= cap)
-          .select(col("vec_id").as("qid"), col("cell")).as("x")
-          .join(sized.where(col("csz") <= cap)
-            .select(col("vec_id").as("cid"), col("cell")).as("y"), "cell")
-          .where(col("qid") =!= col("cid"))
-          .select("qid", "cid")
-        val members = sized.where(col("csz") > cap && col("vec_id") =!= col("hub"))
-        val star = members.select(col("hub").as("qid"), col("vec_id").as("cid"))
-          .unionAll(members.select(col("vec_id").as("qid"), col("hub").as("cid")))
-        dense.unionAll(star).distinct()
-    }
-
-  /** In-row multi-probe cell assignment shared by [[ivfCandidatePairs]]
-    * and [[ivfIncrementalPairs]]: each vector's nProbe nearest cells via
-    * packed-long min-k over the broadcast centroid array (see the plan
-    * rationale in ivfCandidatePairs). Input needs (vec_id, embedding,
-    * __nrm); output (vec_id, cell), eagerly materialized.
-    */
-  private def probeAssignments(emb: DataFrame, centsArr: DataFrame,
-      nProbe: Int): DataFrame = {
-    val packed = transform(col("cents"), (c, i) =>
-      (-floor(lit(1000000.0) *
-          scaledDot(col("embedding"), c.getField("cemb")).cast("double") /
-          (sqrt(col("__nrm").cast("double")) *
-            sqrt(c.getField("cnrm0").cast("double"))))
-        .cast("long")) * lit(IdxFactor) + i.cast("long"))
-    emb.crossJoin(broadcast(centsArr))
-      .select(col("vec_id"),
-        explode(transform(
-          graft.plans.GraftFunctions.minKLong(packed, lit(nProbe)),
-          p => element_at(col("cents"),
-              p.bitwiseAND(lit(IdxMask)).cast("int") + 1)
-            .getField("ccid"))).as("cell"))
-      .localCheckpoint(true)
-  }
-
-  /** Incremental IVF candidates: a NEW shard of vectors probes an
-    * EXISTING corpus's cell index — the vector twin of
-    * [[graft.operators.Dedup.incrementalCandidates]]. Centroids and the
-    * index assignment come from the index corpus alone (in production
-    * the (vec_id, cell) map is the pre-materialized IVF index; here it
-    * rebuilds deterministically), the shard assigns against those same
-    * centroids, and candidates are shard×index cell-mates plus
-    * shard×shard cell-mates — index×index is never re-paired, so admit
-    * cost follows |shard|·nProbe, not Σ|cell|² over the corpus. Returns
-    * directed (qid, cid): qid ∈ shard; cid ∈ index ∪ shard, qid ≠ cid.
-    * vec_ids must be disjoint between the sides.
-    *
-    * `maxCell` caps a degenerate cell exactly like [[ivfCandidatePairs]]:
-    * cell sizes are measured over index ∪ shard (at scale the index
-    * side's counts are one aggregate over the pre-materialized
-    * (vec_id, cell) relation — index metadata, no embedding read), and an
-    * oversized cell emits only its hub-star edges restricted to the
-    * qid-∈-shard convention — identical to the capped full-corpus
-    * candidates restricted to shard queries, which the spec pins.
-    */
-  def ivfIncrementalPairs(indexEmb: DataFrame, shardEmb: DataFrame,
-      centroidEvery: Int, nProbe: Int, maxCell: Option[Int] = None): DataFrame = {
-    val cents = ivfCentroids(indexEmb, centroidEvery)
-    ivfIncrementalPairsIndexed(ivfIndex(indexEmb, cents, nProbe), cents,
-      shardEmb, nProbe, maxCell)
-  }
-
-  /** Deterministic IVF centroid relation (ccid, cemb, cnrm0) — every
+    * This is the centroid relation (ccid, cemb, cnrm0): every
     * `centroidEvery`-th vector with its scaled self-dot. Tiny (C rows);
     * in production this is persisted index METADATA alongside the
     * (vec_id, cell) relation, so a probe never touches corpus
@@ -370,18 +202,107 @@ object Similarity {
       .select(col("vec_id").as("ccid"), col("embedding").as("cemb"),
         scaledDot(col("embedding"), col("embedding")).as("cnrm0"))
 
+  /** The one IVF centroid-scoring recipe: beside every column of `rows`,
+    * `cells` = the ccids of the row `embedding`'s `nProbe` nearest
+    * [[ivfCentroids]] by scaled cosine, nearest first, ties to the
+    * smaller ccid. Lazy.
+    *
+    * Scale shape: the C centroids ride as ONE broadcast array row
+    * (ccid-ASCENDING: sort_array on the struct sorts by the leading
+    * field), so scoring is a pure projection — no n·C exploded rows, no
+    * window exchange (at 1M vectors × 10k cells that exchange was 240 GB
+    * of shuffle). Each centroid's (negccos, idx) packs into one monotone
+    * long and the native min_k_long takes the k smallest in one
+    * primitive O(C·nProbe) pass: packed index order == ccid order, so
+    * the k smallest packed are the (ccos DESC, ccid ASC) head. An
+    * array_sort over C structs per row paid O(C log C) boxed
+    * comparisons instead and OOM'd the 1M ScaleCheck. The row norm is
+    * projected below the cross join, so it is computed once per row.
+    */
+  private def probeCells(rows: DataFrame, centroids: DataFrame,
+      nProbe: Int): DataFrame = {
+    val cents = centroids.agg(sort_array(
+      collect_list(struct(col("ccid"), col("cemb"), col("cnrm0")))).as("cents"))
+    val packed = transform(col("cents"), (c, i) =>
+      (-floor(lit(Scale) *
+          scaledDot(col("embedding"), c.getField("cemb")).cast("double") /
+          (sqrt(col("__nrm").cast("double")) *
+            sqrt(c.getField("cnrm0").cast("double"))))
+        .cast("long")) * lit(IdxFactor) + i.cast("long"))
+    val cells = transform(graft.plans.GraftFunctions.minKLong(packed, lit(nProbe)),
+      p => element_at(col("cents"), p.bitwiseAND(lit(IdxMask)).cast("int") + 1)
+        .getField("ccid"))
+    rows.withColumn("__nrm", scaledDot(col("embedding"), col("embedding")))
+      .crossJoin(broadcast(cents))
+      .select(rows.columns.map(col) :+ cells.as("cells"): _*)
+  }
+
+  /** (vec_id, embedding, cell): every vector with its HOME cell (the
+    * nProbe = 1 assignment) over `emb`'s own centroids. Lazy, and the
+    * embedding rides along, so a consumer pairing cell-mates by cosine
+    * needs no join back to the corpus.
+    */
+  private def homeCells(emb: DataFrame, centroidEvery: Int): DataFrame =
+    probeCells(emb, ivfCentroids(emb, centroidEvery), 1)
+      .select(col("vec_id"), col("embedding"), col("cells").getItem(0).as("cell"))
+
   /** The PERSISTABLE index relation: (vec_id, cell) over the `nProbe`
-    * nearest centroids — exactly what [[ivfIncrementalPairs]] derives
-    * internally, exposed so a corpus writes it once (partitioned by
-    * cell) and every later shard probes the on-disk relation.
+    * nearest centroids, eagerly materialized (the call-time cost IS the
+    * scoring pass), so a corpus writes it once (partitioned by cell) and
+    * every later shard probes the on-disk relation.
     * MaterializedIvfIndexSpec proves probe-from-disk identity.
     */
   def ivfIndex(emb: DataFrame, centroids: DataFrame, nProbe: Int): DataFrame =
-    probeAssignments(
-      emb.withColumn("__nrm", scaledDot(col("embedding"), col("embedding"))),
-      centroids.agg(sort_array(
-        collect_list(struct(col("ccid"), col("cemb"), col("cnrm0")))).as("cents")),
-      nProbe)
+    probeCells(emb, centroids, nProbe)
+      .select(col("vec_id"), explode(col("cells")).as("cell"))
+      .localCheckpoint(true)
+
+  /** An IVF assignment as a band relation: a (vec_id, cell) row is the
+    * (doc_id, band = 0, bucket = cell) row of one LSH band, so cell-mates
+    * are bucket-mates and the Dedup band-pair kernels pair them.
+    */
+  private def cellBands(asg: DataFrame): DataFrame =
+    asg.select(col("vec_id").as("doc_id"), lit(0).as("band"), col("cell").as("bucket"))
+
+  /** The kernels' (d1 < d2) pairs in the directed (qid, cid) convention:
+    * each pair in both orientations.
+    */
+  private def bothWays(pairs: DataFrame): DataFrame =
+    pairs.select(col("d1").as("qid"), col("d2").as("cid"))
+      .unionAll(pairs.select(col("d2").as("qid"), col("d1").as("cid")))
+
+  /** IVF multi-probe candidate pairs — the default kNN base for
+    * neighborhood operators (q470 LOF): every vector is indexed into its
+    * `nProbe` nearest cells ([[ivfIndex]]), and candidate pairs are
+    * cell-mates, paired by [[Dedup.minhashCandidatesBanded]] over the
+    * index as one band. Pair count follows Σ|cell|² ≈ n²·nProbe²/C — the
+    * n²/C shape that replaces brute force; the only cross join is
+    * corpus × centroids. Returns directed (qid, cid) pairs, qid ≠ cid,
+    * deduplicated across shared cells, materialized at call time.
+    *
+    * `maxCell` is the kernel's `maxBucket` for a DEGENERATE cell (skewed
+    * embeddings crowd one centroid: near-duplicate corpora, zero-vector
+    * sinks): an oversized cell emits hub-star edges, in both
+    * orientations, instead of |cell|² pairs — the cap semantics
+    * documented on [[Dedup.minhashCandidates]]. Default None keeps
+    * every cell-mate pair.
+    */
+  def ivfCandidatePairs(embeddings: DataFrame, centroidEvery: Int,
+      nProbe: Int, maxCell: Option[Int] = None): DataFrame =
+    bothWays(Dedup.minhashCandidatesBanded(cellBands(
+      ivfIndex(embeddings, ivfCentroids(embeddings, centroidEvery), nProbe)), maxCell))
+
+  /** Incremental IVF candidates: a NEW shard of vectors probes an
+    * EXISTING corpus's cell index — [[ivfIncrementalPairsIndexed]] over
+    * an index built from `indexEmb` and its own centroids (in production
+    * the (vec_id, cell) map is the pre-materialized IVF index).
+    */
+  def ivfIncrementalPairs(indexEmb: DataFrame, shardEmb: DataFrame,
+      centroidEvery: Int, nProbe: Int, maxCell: Option[Int] = None): DataFrame = {
+    val cents = ivfCentroids(indexEmb, centroidEvery)
+    ivfIncrementalPairsIndexed(ivfIndex(indexEmb, cents, nProbe), cents,
+      shardEmb, nProbe, maxCell)
+  }
 
   /** IVF index MAINTENANCE — the vector twin of
     * [[graft.operators.Dedup.appendBands]]: the admitted shard's cell
@@ -400,81 +321,39 @@ object Similarity {
     indexAsg.select("vec_id", "cell")
       .unionAll(ivfIndex(shardEmb, centroids, nProbe))
 
-  /** [[ivfIncrementalPairs]] against a PRE-MATERIALIZED index: the
+  /** Incremental IVF candidates against a PRE-MATERIALIZED index: the
     * (vec_id, cell) relation and the centroid metadata come in as
     * relations (from disk in production — no index embedding is ever
-    * read); only the shard assigns fresh.
+    * read); only the shard assigns fresh. The pairs are
+    * [[Dedup.incrementalCandidates]] over the two assignments as bands:
+    * shard×index plus shard×shard cell-mates, index×index never
+    * re-paired, so admit cost follows |shard|·nProbe, not Σ|cell|² over
+    * the corpus. Returns directed (qid, cid): qid ∈ shard,
+    * cid ∈ index ∪ shard, qid ≠ cid — exactly [[ivfCandidatePairs]] over
+    * index ∪ shard restricted to shard queries when the union picks the
+    * same centroids. vec_ids must be disjoint between the sides. The
+    * kernel materializes the pairs at call time.
+    *
+    * `maxCell` is the kernel's incremental `maxBucket`: cell sizes are
+    * measured over index ∪ shard, and an oversized cell keeps the
+    * hub-star edges a shard vector queries.
     */
   def ivfIncrementalPairsIndexed(indexAsg: DataFrame, centroids: DataFrame,
       shardEmb: DataFrame, nProbe: Int, maxCell: Option[Int] = None): DataFrame = {
-    val idxAsg = indexAsg
     val shdAsg = ivfIndex(shardEmb, centroids, nProbe)
-    maxCell match {
-      case None =>
-        val probe = shdAsg.select(col("vec_id").as("qid"), col("cell"))
-          .join(idxAsg.select(col("vec_id").as("cid"), col("cell")), "cell")
-          .select("qid", "cid")
-        val intra = shdAsg.select(col("vec_id").as("qid"), col("cell"))
-          .join(shdAsg.select(col("vec_id").as("cid"), col("cell")), "cell")
-          .where(col("qid") =!= col("cid"))
-          .select("qid", "cid")
-        probe.unionAll(intra).distinct()
-      case Some(cap) =>
-        // cell size + hub over BOTH sides; the hub's side rides along via
-        // the struct min (vec_ids are disjoint, so min struct = min id)
-        val tagged = idxAsg.withColumn("side", lit(0))
-          .unionAll(shdAsg.withColumn("side", lit(1)))
-        // eager cut: stats is O(cells) rows, and leaving it as an
-        // aggregate-over-self-joined-union trips Catalyst's
-        // union-constraint rewrite downstream (key-not-found on the
-        // shared vec_id attribute)
-        val stats = tagged.groupBy("cell")
-          .agg(count(lit(1)).as("csz"),
-            min(struct(col("vec_id"), col("side"))).as("mh"))
-          .select(col("cell"), col("csz"),
-            col("mh.vec_id").as("hub"), col("mh.side").as("hub_side"))
-          .localCheckpoint(true)
-        val denseShd = shdAsg.join(stats.where(col("csz") <= cap), Seq("cell"))
-        val probe = denseShd.select(col("vec_id").as("qid"), col("cell"))
-          .join(idxAsg.select(col("vec_id").as("cid"), col("cell")), "cell")
-          .select("qid", "cid")
-        val intra = denseShd.select(col("vec_id").as("qid"), col("cell"))
-          .join(denseShd.select(col("vec_id").as("cid"), col("cell")), "cell")
-          .where(col("qid") =!= col("cid"))
-          .select("qid", "cid")
-        // oversized: shard member → hub, and (only when the hub itself is
-        // a shard vector) hub → every member — the qid-∈-shard restriction
-        // of the full capped hub-star
-        val over = tagged.join(stats.where(col("csz") > cap), Seq("cell"))
-          .where(col("vec_id") =!= col("hub"))
-        val s1 = over.where(col("side") === 1)
-          .select(col("vec_id").as("qid"), col("hub").as("cid"))
-        val s2 = over.where(col("hub_side") === 1)
-          .select(col("hub").as("qid"), col("vec_id").as("cid"))
-        // eager cut BEFORE their union: star volume is linear by
-        // construction (that is the point of the cap), and unioning the
-        // two aliased self-join branches directly trips Catalyst's
-        // union-constraint rewrite (alias constraints referencing the
-        // projected-away hub/vec_id attributes)
-        val star = s1.localCheckpoint(true).unionAll(s2.localCheckpoint(true))
-        probe.unionAll(intra).unionAll(star).distinct()
-    }
+    bothWays(Dedup.incrementalCandidates(cellBands(indexAsg), cellBands(shdAsg), maxCell))
+      .join(shdAsg.select(col("vec_id").as("qid")), Seq("qid"), "left_semi")
   }
 
   /** IVF top-k for one query vector: probe the query's nProbe nearest
-    * cells, exact scaled-cosine rank within.
+    * cells, exact scaled-cosine rank within each vector's home cell.
     */
   def ivfTopK(embeddings: DataFrame, query: DataFrame, k: Int,
       centroidEvery: Int, nProbe: Int): DataFrame = {
-    val assigned = ivfAssignments(embeddings, centroidEvery)
-    val centroids = embeddings.where(col("vec_id") % centroidEvery === 0)
-      .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
-    val probeCells = query.select(col("embedding").as("qv"))
-      .crossJoin(broadcast(centroids))
-      .select(col("qv"), col("cid"), cosineScaled(col("qv"), col("cemb")).as("ccos"))
-      .orderBy(col("ccos").desc, col("cid").asc)
-      .limit(nProbe)
-    assigned.join(broadcast(probeCells), col("cell") === col("cid"))
+    val probe = probeCells(query, ivfCentroids(embeddings, centroidEvery), nProbe)
+      .select(col("embedding").as("qv"), explode(col("cells")).as("pcell"))
+    homeCells(embeddings, centroidEvery)
+      .join(broadcast(probe), col("cell") === col("pcell"))
       .select(col("vec_id"), col("cell"),
         cosineScaled(col("embedding"), col("qv")).as("cos_scaled"))
       .orderBy(col("cos_scaled").desc, col("vec_id").asc)
@@ -506,7 +385,7 @@ object Similarity {
     */
   def semDedup(embeddings: DataFrame, centroidEvery: Int, minCosScaled: Long,
       maxCell: Option[Int] = None): DataFrame = {
-    val asg = ivfAssignments(embeddings, centroidEvery)
+    val asg = homeCells(embeddings, centroidEvery)
     val removed = cellPrefix(asg, maxCell).as("x").join(asg.as("y"),
         col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
       .where(cosineScaled(col("x.embedding"), col("y.embedding")) >= minCosScaled)
@@ -530,7 +409,7 @@ object Similarity {
     */
   def clusterSample(embeddings: DataFrame, centroidEvery: Int,
       perCell: Int): DataFrame =
-    cellPrefix(ivfAssignments(embeddings, centroidEvery), Some(perCell))
+    cellPrefix(homeCells(embeddings, centroidEvery), Some(perCell))
       .select("vec_id", "cell")
 
   /** The SemDeDup verification prefix: each cell's `cap` smallest-id
@@ -681,29 +560,13 @@ object Similarity {
   def ivfRecall(embeddings: DataFrame, queries: DataFrame, k: Int,
       centroidEvery: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.graftshims.TopKApi
-    val centsArr = ivfCentroids(embeddings, centroidEvery)
-      .agg(sort_array(collect_list(struct(col("ccid"), col("cemb"), col("cnrm0"))))
-        .as("cents"))
+    val cents = ivfCentroids(embeddings, centroidEvery)
     // home cell of every corpus vector (the nProbe=1 assignment)
-    val asg = probeAssignments(
-      embeddings.withColumn("__nrm", scaledDot(col("embedding"), col("embedding"))),
-      centsArr, 1)
-    // each query's nProbe probe cells as ONE in-row array (packed min-k
-    // over the broadcast centroid array — the probeAssignments recipe,
-    // kept un-exploded so it can broadcast with the query row)
-    val packedQ = transform(col("cents"), (c, i) =>
-      (-floor(lit(1000000.0) *
-          scaledDot(col("qv"), c.getField("cemb")).cast("double") /
-          (sqrt(scaledDot(col("qv"), col("qv")).cast("double")) *
-            sqrt(c.getField("cnrm0").cast("double"))))
-        .cast("long")) * lit(IdxFactor) + i.cast("long"))
-    val qp = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      .crossJoin(broadcast(centsArr))
-      .select(col("qid"), col("qv"),
-        transform(graft.plans.GraftFunctions.minKLong(packedQ, lit(nProbe)),
-          p => element_at(col("cents"),
-              p.bitwiseAND(lit(IdxMask)).cast("int") + 1)
-            .getField("ccid")).as("qcells"))
+    val asg = ivfIndex(embeddings, cents, 1)
+    // each query's nProbe probe cells as ONE in-row array, so the probe
+    // set broadcasts with the query row
+    val qp = probeCells(queries, cents, nProbe)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("cells").as("qcells"))
     val scored = embeddings.join(asg, Seq("vec_id"))
       .crossJoin(broadcast(qp))
       .select(col("qid"), col("vec_id"),
@@ -735,30 +598,6 @@ object Similarity {
   def pqCodes(emb: Column, cb: Array[Array[Array[Long]]]): Column = {
     val m = cb.length; val k = cb(0).length; val d = cb(0)(0).length
     graft.plans.GraftFunctions.pqEncode(emb, cb.flatten.flatten, m, k, d)
-  }
-
-  /** Declarative HOF twin of [[pqCodes]] — the semantic spec the native
-    * expression is checked against (PQEncodeSpec); interpreted lambdas,
-    * ~60× slower at scale.
-    */
-  def pqCodesDeclarative(emb: Column, cb: Array[Array[Array[Long]]]): Column = {
-    val m = cb.length; val k = cb(0).length; val d = cb(0)(0).length
-    val cbLit = array(cb.map(mArr => array(mArr.map(cArr =>
-      array(cArr.map(lit(_)): _*)): _*)): _*)
-    transform(sequence(lit(0), lit(m - 1)), mi =>
-      aggregate(
-        sequence(lit(0), lit(k - 1)),
-        struct(lit(-1L).as("c"), lit(Long.MaxValue).as("dist")),
-        (acc, c) => {
-          val d2 = aggregate(sequence(lit(0), lit(d - 1)), lit(0L), (a, i) => {
-            val x = sInt(element_at(emb, mi * d + i + 1))
-            val y = element_at(element_at(element_at(cbLit, mi + 1), c + 1), i + 1)
-            a + (x - y) * (x - y)
-          })
-          when(d2 < acc.getField("dist"),
-            struct(c.cast("long").as("c"), d2.as("dist"))).otherwise(acc)
-        },
-        acc => acc.getField("c")))
   }
 
   /** PQ/ADC top-k: asymmetric distance computation — the query's exact

@@ -1,35 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftshims.GraftShims
 
-/** Registration surface for graft's native Catalyst expressions.
-  *
-  *  - `GraftExtensions` plugs into a builder via
-  *    `.withExtensions(new GraftExtensions)` or
-  *    `spark.sql.extensions=graft.plans.GraftExtensions`;
-  *  - `GraftFunctions.register(spark)` injects into an already-built
-  *    session (the driver owns session construction in this harness);
-  *  - `GraftFunctions.scaledDot(a, b)` is the typed Column API.
+/** Registration surface for graft's native Catalyst expressions:
+  * `GraftFunctions.register(spark)` injects them into a built session,
+  * and the Column methods below are the typed API.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftShims.scaledDotDescriptor)
-    ext.injectOptimizerRule(_ => RewriteScaledDot)
-    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftshims.TopKStrategy)
-  }
-}
-
 object GraftFunctions {
 
-  /** Idempotently register `scaled_dot` + the rewrite rule on a live
-    * session (SQL callers: `SELECT scaled_dot(a, b)`).
+  /** Idempotently register `scaled_dot` and the native top-k-per-group
+    * strategy on a live session (SQL callers: `SELECT scaled_dot(a, b)`).
     */
   def register(spark: SparkSession): Unit = {
     GraftShims.registerScaledDot(spark)
-    if (!spark.experimental.extraOptimizations.contains(RewriteScaledDot))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteScaledDot
     if (!spark.experimental.extraStrategies.contains(org.apache.spark.sql.graftshims.TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ org.apache.spark.sql.graftshims.TopKStrategy
@@ -94,7 +78,8 @@ object GraftFunctions {
     GraftShims.sortedShingleSetColumn(text, shingleLen)
 
   /** Native PQ encoder (fused loop nest over a flattened (m,k,d)-major
-    * codebook); the declarative HOF twin is Similarity.pqCodesDeclarative.
+    * codebook); the declarative HOF twin is the tests'
+    * DeclarativeTwins.pqCodes.
     */
   def pqEncode(emb: Column, codebook: Array[Long], m: Int, k: Int, d: Int): Column =
     GraftShims.pqEncodeColumn(emb, codebook, m, k, d)

@@ -15,8 +15,9 @@ import graft.core.Graft
   * with SPARK_GRAFT_SF_DIR (default sf0.1) and SPARK_GRAFT_CPUS (default
   * 32), as `graft.Bench` reads them.
   *
-  *  - `time`: Bench's min-of-reps floor and raw samples, cold per-query
-  *    caches, after Bench's warm-up.
+  *  - `time`: Bench's min-of-reps floor and raw samples (Bench's
+  *    SPARK_GRAFT_BENCH_REPS, default 2), cold per-query caches, after
+  *    Bench's warm-up.
   *  - `jobs`: one warm run, then every Spark job of a measured run — its
   *    duration, the driver gap before it (planning/analysis time that job
   *    metrics alone hide; negative when it overlaps the job before) and
@@ -44,9 +45,12 @@ object Prof {
     finally spark.stop()
   }
 
-  /** Profiles `names` on a caller-owned session; prints its report. */
+  /** Profiles `names` on a caller-owned session; prints its report.
+    * `time` takes `reps` samples a query.
+    */
   def run(spark: SparkSession, mode: String, names: Seq[String], sfDir: String,
-      noop: Boolean = false, noBroadcast: Boolean = false): Unit = {
+      noop: Boolean = false, noBroadcast: Boolean = false,
+      reps: Int = Bench.reps()): Unit = {
     require(Set("time", "jobs", "plan")(mode), usage)
     val registry = SparkEntry.queries
     val unknown = names.filterNot(registry.contains)
@@ -61,7 +65,7 @@ object Prof {
         val q = () => registry(name)(spark, sfDir)
         mode match {
           case "time" =>
-            val ss = Bench.measureSamples(spark, Bench.defaultReps)(() => act(q()))
+            val ss = Bench.measureSamples(spark, reps)(() => act(q()))
             val floor = if (ss.isEmpty) "failed" else f"${ss.min}%.3fs"
             println(f"$name%-32s floor=$floor samples=${ss.map(v => f"$v%.3f").mkString(" ")}")
           case "jobs" => jobs(spark, name)(() => act(q()))

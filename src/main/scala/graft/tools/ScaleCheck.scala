@@ -697,12 +697,12 @@ object ScaleCheck {
         f""""rows_per_sec":${(2 * n / jkSec).toLong}}""")
 
       // Group-leakage capture flags (q476/q464's one-pass shape) over 2n
-      // rows × 100k groups: hash-splitting rows must leak (every group
-      // has ~200 rows, so P[pure] ≈ 0) while splitting on the GROUP hash
-      // leaks exactly zero — the capture-flag aggregate proves both in
-      // one scan each. xxhash64 keeps the bucket assignment cheap (the
-      // oracle-checked q476 uses md5; the flag algebra is identical).
-      val nG2 = 100000L
+      // rows in groups of 200 (100k groups at 10M): hash-splitting rows
+      // must leak (P[pure] = 0.8^200 + 0.2^200 ≈ 0) while splitting on the
+      // GROUP hash leaks exactly zero — the capture-flag aggregate proves
+      // both in one scan each. xxhash64 keeps the bucket assignment cheap
+      // (the oracle-checked q476 uses md5; the flag algebra is identical).
+      val nG2 = 2 * n / 200
       val sp = spark.range(2 * n).select(
         (col("id") % nG2).as("gk"), col("id"))
         .select(col("gk"),

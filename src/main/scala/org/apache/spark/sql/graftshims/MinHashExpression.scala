@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * shingles, ~300× the document count) into a pure projection with NO
   * shuffle at all — the signature never leaves the row. Bit-identical to
   * the SQL/declarative form: same md5, same hex-slice parsing, same
-  * derivation (see Dedup.minhashSignaturesAgg, the semantic spec).
+  * derivation (see the tests' DeclarativeTwins.minhashSignatures, the
+  * semantic spec).
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
     extends UnaryExpression with ExpectsInputTypes {

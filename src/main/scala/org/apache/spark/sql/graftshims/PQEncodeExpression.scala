@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, FloatT
   * inside whole-stage codegen with tight primitive loops.
   *
   * Versus the higher-order-function twin (transform/aggregate lambdas,
-  * see Similarity.pqCodesDeclarative): the interpreted lambda tree
+  * see the tests' DeclarativeTwins.pqCodes): the interpreted lambda tree
   * allocates a struct per candidate codeword per subspace — measured
   * 4.1k vectors/s at 1M vectors; this loop nest is pure long arithmetic
   * (ScaleCheck's pq_adc scenario records the difference).

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * positions → two groupBy levels) this removes a 16·|tokens|-row
   * intermediate and both shuffles: the fingerprint is a pure projection.
   * Bit-identical to the SQL form (same md5, same hex-slice, same
-  * frequency-weighted ±1 sums — see Dedup.simhash16Agg, the semantic
-  * spec).
+  * frequency-weighted ±1 sums — see the tests' DeclarativeTwins.simhash16,
+  * the semantic spec).
   */
 case class SimHash16(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {

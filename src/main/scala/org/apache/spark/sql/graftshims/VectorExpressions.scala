@@ -33,8 +33,7 @@ case class ScaledDotProduct(left: Expression, right: Expression)
 
   /** Mismatched lengths yield NULL — matching the declarative twin, where
     * zip_with null-pads the shorter array and `acc + null` nulls the
-    * aggregate. Silent truncation would let the RewriteScaledDot rewrite
-    * change results.
+    * aggregate.
     */
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -420,16 +419,14 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 /** private[sql] access points used by graft.plans.GraftFunctions. */
 object GraftShims {
 
-  val scaledDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("scaled_dot"),
-    new ExpressionInfo(classOf[ScaledDotProduct].getName, "scaled_dot"),
-    (args: Seq[Expression]) => ScaledDotProduct(args(0), args(1)))
-
   def registerScaledDot(spark: SparkSession): Unit = {
-    val (id, info, builder) = scaledDotDescriptor
+    val id = FunctionIdentifier("scaled_dot")
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-    if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    if (!registry.functionExists(id))
+      registry.registerFunction(id,
+        new ExpressionInfo(classOf[ScaledDotProduct].getName, "scaled_dot"),
+        (args: Seq[Expression]) => ScaledDotProduct(args(0), args(1)))
   }
 
   def scaledDotColumn(a: Column, b: Column): Column =

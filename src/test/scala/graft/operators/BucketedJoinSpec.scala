@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -9,9 +10,18 @@ import graft.SparkSpec
 
 /** Bucketed co-located join: writing both sides bucketed on the join key
   * makes the equi-join shuffle-free — the plan must contain NO shuffle
-  * exchange, and the join result must match the plain-parquet join.
+  * exchange, and the join result must match the plain-parquet join. This
+  * is the layout Dedup.dupSpanState's scaladoc prescribes for its
+  * persisted gram state.
   */
 class BucketedJoinSpec extends SparkSpec {
+
+  /** Hash-bucket and sort `df` by `key` into catalog table `table`. */
+  private def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
+    df.write.mode("overwrite")
+      .bucketBy(buckets, key).sortBy(key)
+      .format("parquet")
+      .saveAsTable(table)
 
   test("join of two tables bucketed on the key plans without a shuffle") {
     val s = spark
@@ -22,8 +32,8 @@ class BucketedJoinSpec extends SparkSpec {
       val ord = s.read.parquet(s"$sfDir/orders.parquet")
         .select("o_orderkey", "o_totalprice")
 
-      Migrate.writeBucketed(li, "li_b", "l_orderkey", 8)
-      Migrate.writeBucketed(ord.withColumnRenamed("o_orderkey", "l_orderkey"),
+      writeBucketed(li, "li_b", "l_orderkey", 8)
+      writeBucketed(ord.withColumnRenamed("o_orderkey", "l_orderkey"),
         "ord_b", "l_orderkey", 8)
 
       val joined = s.table("li_b").join(s.table("ord_b"), "l_orderkey")

@@ -4,11 +4,9 @@ import scala.collection.mutable
 
 import org.apache.spark.graftshims.ListenerShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -120,25 +118,6 @@ class JaccardPropertySpec extends SparkSpec {
       }.sorted
       assert(gotBig == wantExact, "a cap above every set size must be exact")
     }
-  }
-
-  /** Every plan node the queries run by `body` executed, stages and
-    * checkpoints included, with the body's result.
-    */
-  private def executedNodes[T](body: => T): (T, Seq[SparkPlan]) = {
-    val plans = mutable.ArrayBuffer.empty[SparkPlan]
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized(plans += qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val sc = spark.sparkContext
-    ListenerShim.waitUntilEmpty(sc, 30000)
-    spark.listenerManager.register(listener)
-    val out = try { val r = body; ListenerShim.waitUntilEmpty(sc, 30000); r }
-      finally spark.listenerManager.unregister(listener)
-    val walk = new AdaptiveSparkPlanHelper {}
-    (out, plans.synchronized(plans.toList).flatMap(p => walk.collect(p) { case n => n }))
   }
 
   private def evaluates(n: SparkPlan, fn: String): Boolean =

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.core.Tables
 
 class RoutingSpec extends SparkSpec {
   import Routing._
@@ -17,12 +16,5 @@ class RoutingSpec extends SparkSpec {
     assert(TableFilter(Nil).matches("anything"))        // empty includes = all
     assert(!TableFilter(Nil, Seq("*")).matches("x"))    // exclude-all wins
     assert(TableFilter(Seq("a?c")).matches("abc") && !TableFilter(Seq("a?c")).matches("abbc"))
-  }
-
-  test("column routing renames in order, unmapped columns keep names") {
-    val df = Tables(spark, sfDir).region
-    val routed = renameColumns(df, Map("r_regionkey" -> "rk"))
-    assert(routed.columns.toSeq == Seq("rk", "r_name"))
-    assert(routed.count() == df.count())
   }
 }

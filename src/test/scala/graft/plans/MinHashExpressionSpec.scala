@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{DeclarativeTwins, SparkSpec}
 import graft.core.Tables
 import graft.operators.Dedup
 
@@ -10,7 +10,7 @@ class MinHashExpressionSpec extends SparkSpec {
     val docs = Tables(spark, sfDir).documents
     val native = Dedup.minhashSignatures(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getLong)).toMap
-    val agg = Dedup.minhashSignaturesAgg(docs, "doc_id", "text")
+    val agg = DeclarativeTwins.minhashSignatures(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getLong)).toMap
     assert(native.keySet == agg.keySet)
     val mismatches = native.keys.filter(k => native(k) != agg(k))

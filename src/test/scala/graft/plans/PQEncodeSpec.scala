@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{DeclarativeTwins, SparkSpec}
 import graft.operators.Similarity
 
 /** Native PQ encoder vs the declarative higher-order-function twin:
@@ -23,7 +23,7 @@ class PQEncodeSpec extends SparkSpec {
     val cb = codebook(train, 8, 16, 8)
     val both = e.select(
       Similarity.pqCodes(col("embedding"), cb).as("native"),
-      Similarity.pqCodesDeclarative(col("embedding"), cb).as("decl"))
+      DeclarativeTwins.pqCodes(col("embedding"), cb).as("decl"))
     assert(both.where(col("native") =!= col("decl")).isEmpty)
   }
 

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{DeclarativeTwins, SparkSpec}
 import graft.core.Tables
 import graft.operators.Dedup
 
@@ -10,7 +10,7 @@ class SimHashExpressionSpec extends SparkSpec {
     val docs = Tables(spark, sfDir).documents
     val native = Dedup.simhash16(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val agg = Dedup.simhash16Agg(docs, "doc_id", "text")
+    val agg = DeclarativeTwins.simhash16(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native.keySet == agg.keySet)
     val mismatches = native.keys.filter(k => native(k) != agg(k))

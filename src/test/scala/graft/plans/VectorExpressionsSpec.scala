@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{DeclarativeTwins, SparkSpec}
 import graft.core.Tables
 import graft.operators.Similarity
 
@@ -15,7 +15,7 @@ class VectorExpressionsSpec extends SparkSpec {
           .select(col("embedding").as("qv")))
       .select(
         Similarity.scaledDot(col("embedding"), col("qv")).as("native"),
-        Similarity.scaledDotDeclarative(col("embedding"), col("qv")).as("decl"))
+        DeclarativeTwins.scaledDot(col("embedding"), col("qv")).as("decl"))
     assert(both.where(col("native") =!= col("decl")).count() == 0)
   }
 
@@ -34,20 +34,6 @@ class VectorExpressionsSpec extends SparkSpec {
       .head().isNullAt(0))
   }
 
-  test("optimizer rule rewrites the declarative pattern to scaled_dot") {
-    GraftFunctions.register(spark)
-    val e = Tables(spark, sfDir).embeddings.limit(100)
-    val declarative = e.select(
-      Similarity.scaledDotDeclarative(col("embedding"), col("embedding")).as("d"))
-    val optimized = declarative.queryExecution.optimizedPlan
-    assert(optimized.toString.contains("scaled_dot"),
-      s"expected ScaledDotProduct in optimized plan:\n$optimized")
-    // rewritten plan still computes the same values as the native API
-    val native = e.select(Similarity.scaledDot(col("embedding"), col("embedding")).as("d"))
-    assert(declarative.collect().map(_.getLong(0)).toSeq ==
-      native.collect().map(_.getLong(0)).toSeq)
-  }
-
   test("length mismatch yields NULL, matching the declarative twin") {
     GraftFunctions.register(spark)
     val df = spark.sql(
@@ -60,28 +46,6 @@ class VectorExpressionsSpec extends SparkSpec {
         |    0L, (acc, v) -> acc + v) AS decl""".stripMargin).head()
     assert(df.isNullAt(0), "native must be NULL on length mismatch")
     assert(df.isNullAt(1), "declarative twin is NULL on length mismatch")
-  }
-
-  test("rewrite does NOT fire on array<double> or non-argument lambdas") {
-    GraftFunctions.register(spark)
-    // double-element arrays: ScaledDotProduct reads floats — must not match
-    val doublePlan = spark.sql(
-      """SELECT aggregate(zip_with(array(1.0D, 2.0D), array(3.0D, 4.0D),
-        |      (x, y) -> CAST(FLOOR(x * 1000000.0D) AS BIGINT)
-        |              * CAST(FLOOR(y * 1000000.0D) AS BIGINT)),
-        |    0L, (acc, v) -> acc + v) AS d""".stripMargin)
-    assert(!doublePlan.queryExecution.optimizedPlan.toString.contains("scaled_dot"),
-      "array<double> form must not rewrite")
-    // (x, y) -> f(x)*f(x): both factors bind the SAME variable — must not match
-    val sameVar = spark.sql(
-      """SELECT aggregate(zip_with(array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT)),
-        |      (x, y) -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT)
-        |              * CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT)),
-        |    0L, (acc, v) -> acc + v) AS d""".stripMargin)
-    assert(!sameVar.queryExecution.optimizedPlan.toString.contains("scaled_dot"),
-      "x*x over one lambda variable must not rewrite")
-    // the double form still computes its own (un-rewritten) value correctly
-    assert(doublePlan.head().getLong(0) == 1000000L * 3000000L + 2000000L * 4000000L)
   }
 
   test("interpreted eval agrees with codegen") {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkSpec
+import graft.{Bench, SparkSpec}
 
 /** `Prof.run` on the shared session: each mode reports on q1_agg, and the
   * session is left running and configured as it was.
@@ -8,10 +8,10 @@ import graft.SparkSpec
 class ProfSpec extends SparkSpec {
 
   /** Runs one mode, checks the session survived it, returns its stdout. */
-  private def report(mode: String): String = {
+  private def report(mode: String, reps: Int = Bench.reps()): String = {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val out = new java.io.ByteArrayOutputStream
-    Console.withOut(out)(Prof.run(spark, mode, Seq("q1_agg"), sfDir))
+    Console.withOut(out)(Prof.run(spark, mode, Seq("q1_agg"), sfDir, reps = reps))
     assert(spark.range(10).count() == 10)
     assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
     out.toString
@@ -21,6 +21,18 @@ class ProfSpec extends SparkSpec {
     val r = report("time")
     val floor = """floor=([0-9.]+)s""".r.findFirstMatchIn(r).map(_.group(1).toDouble)
     assert(floor.exists(_ > 0.0), s"no positive floor in: $r")
+  }
+
+  test("time takes Bench's SPARK_GRAFT_BENCH_REPS samples a query") {
+    def env(v: String): String => Option[String] =
+      Map("SPARK_GRAFT_BENCH_REPS" -> v).get
+    assert(Bench.reps(env("5")) == 5)
+    assert(Bench.reps(env("0")) == 1)
+    assert(Bench.reps(env("x")) == Bench.reps(_ => None))
+    assert(Bench.reps(_ => None) == 2)
+    val r = report("time", reps = 3)
+    val samples = """samples=(.*)""".r.findFirstMatchIn(r).map(_.group(1).trim.split(" ").length)
+    assert(samples.contains(3), s"expected 3 samples in: $r")
   }
 
   test("jobs reports at least one job") {
