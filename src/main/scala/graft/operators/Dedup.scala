@@ -158,21 +158,29 @@ object Dedup {
   def minhashCandidatesBanded(bands: DataFrame,
       maxBucket: Option[Int] = None): DataFrame =
     graft.core.Graft.span("Dedup.minhashCandidatesBanded") {
-      val pairs = maxBucket match {
-        case None => allPairs(bands)
-        case Some(cap) =>
-          // one aggregate sizes every bucket and picks its hub; the size
-          // rides back as a column so the split is a filter, not a rescan
-          val stats = bands.groupBy("band", "bucket")
-            .agg(count(lit(1)).as("bsz"), min("doc_id").as("hub"))
-          val sized = bands.join(stats, Seq("band", "bucket"))
-          val dense = allPairs(sized.where(col("bsz") <= cap).select("doc_id", "band", "bucket"))
-          val star = sized.where(col("bsz") > cap && col("doc_id") =!= col("hub"))
-            .select(col("hub").as("d1"), col("doc_id").as("d2"))
-          dense.unionAll(star)
-      }
-      pairs.distinct().localCheckpoint(true)
+      bandPairs(bands, maxBucket).localCheckpoint(true)
     }
+
+  /** [[minhashCandidatesBanded]]'s pairs, lazy: for a caller that
+    * materializes (or streams) them itself, as the IVF pair builders do.
+    */
+  private[operators] def bandPairs(bands: DataFrame,
+      maxBucket: Option[Int]): DataFrame = {
+    val pairs = maxBucket match {
+      case None => allPairs(bands)
+      case Some(cap) =>
+        // one aggregate sizes every bucket and picks its hub; the size
+        // rides back as a column so the split is a filter, not a rescan
+        val stats = bands.groupBy("band", "bucket")
+          .agg(count(lit(1)).as("bsz"), min("doc_id").as("hub"))
+        val sized = bands.join(stats, Seq("band", "bucket"))
+        val dense = allPairs(sized.where(col("bsz") <= cap).select("doc_id", "band", "bucket"))
+        val star = sized.where(col("bsz") > cap && col("doc_id") =!= col("hub"))
+          .select(col("hub").as("d1"), col("doc_id").as("d2"))
+        dense.unionAll(star)
+    }
+    pairs.distinct()
+  }
 
   /** The INCREMENTAL band-pair kernel: candidate pairs for a NEW shard
     * against an existing corpus whose band-bucket index is already
@@ -208,42 +216,50 @@ object Dedup {
   def incrementalCandidates(indexBands: DataFrame, shardBands: DataFrame,
       maxBucket: Option[Int] = None): DataFrame =
     graft.core.Graft.span("Dedup.incrementalCandidates") {
-      val pairs = maxBucket match {
-        case None => probeIntra(shardBands, indexBands)
-        case Some(cap) =>
-          // bucket size + hub over index ∪ shard: at scale the index
-          // side's counts are ONE aggregate over the persisted band
-          // relation (index metadata, no corpus text). doc_ids are
-          // disjoint, so min struct(doc_id, side) = the union's min id
-          // with its side riding along for the hub-ownership test.
-          val tagged = indexBands.select("doc_id", "band", "bucket")
-            .withColumn("side", lit(0))
-            .unionAll(shardBands.select("doc_id", "band", "bucket")
-              .withColumn("side", lit(1)))
-          // eager cut: O(buckets) rows, and an aggregate feeding three
-          // aliased joins below would otherwise recompute per branch
-          val stats = tagged.groupBy("band", "bucket")
-            .agg(count(lit(1)).as("bsz"),
-              min(struct(col("doc_id"), col("side"))).as("mh"))
-            .select(col("band"), col("bucket"), col("bsz"),
-              col("mh.doc_id").as("hub"), col("mh.side").as("hub_side"))
-            .localCheckpoint(true)
-          val denseKeys = stats.where(col("bsz") <= cap).select("band", "bucket")
-          val dense = probeIntra(
-            shardBands.join(denseKeys, Seq("band", "bucket")),
-            indexBands.join(denseKeys, Seq("band", "bucket")))
-          // oversized: hub-star restricted to pairs touching the shard —
-          // (hub, member) survives iff the member is a shard doc OR the
-          // hub itself is (then every star edge touches the shard); hub
-          // is the union min, so d1 < d2 holds by construction
-          val star = tagged.join(stats.where(col("bsz") > cap), Seq("band", "bucket"))
-            .where(col("doc_id") =!= col("hub") &&
-              (col("side") === 1 || col("hub_side") === 1))
-            .select(col("hub").as("d1"), col("doc_id").as("d2"))
-          dense.unionAll(star)
-      }
-      pairs.distinct().localCheckpoint(true)
+      incrementalBandPairs(indexBands, shardBands, maxBucket).localCheckpoint(true)
     }
+
+  /** [[incrementalCandidates]]' pairs, lazy apart from the capped arm's
+    * O(buckets) size table, which is cut at call time.
+    */
+  private[operators] def incrementalBandPairs(indexBands: DataFrame,
+      shardBands: DataFrame, maxBucket: Option[Int]): DataFrame = {
+    val pairs = maxBucket match {
+      case None => probeIntra(shardBands, indexBands)
+      case Some(cap) =>
+        // bucket size + hub over index ∪ shard: at scale the index
+        // side's counts are ONE aggregate over the persisted band
+        // relation (index metadata, no corpus text). doc_ids are
+        // disjoint, so min struct(doc_id, side) = the union's min id
+        // with its side riding along for the hub-ownership test.
+        val tagged = indexBands.select("doc_id", "band", "bucket")
+          .withColumn("side", lit(0))
+          .unionAll(shardBands.select("doc_id", "band", "bucket")
+            .withColumn("side", lit(1)))
+        // eager cut: O(buckets) rows, and an aggregate feeding three
+        // aliased joins below would otherwise recompute per branch
+        val stats = tagged.groupBy("band", "bucket")
+          .agg(count(lit(1)).as("bsz"),
+            min(struct(col("doc_id"), col("side"))).as("mh"))
+          .select(col("band"), col("bucket"), col("bsz"),
+            col("mh.doc_id").as("hub"), col("mh.side").as("hub_side"))
+          .localCheckpoint(true)
+        val denseKeys = stats.where(col("bsz") <= cap).select("band", "bucket")
+        val dense = probeIntra(
+          shardBands.join(denseKeys, Seq("band", "bucket")),
+          indexBands.join(denseKeys, Seq("band", "bucket")))
+        // oversized: hub-star restricted to pairs touching the shard —
+        // (hub, member) survives iff the member is a shard doc OR the
+        // hub itself is (then every star edge touches the shard); hub
+        // is the union min, so d1 < d2 holds by construction
+        val star = tagged.join(stats.where(col("bsz") > cap), Seq("band", "bucket"))
+          .where(col("doc_id") =!= col("hub") &&
+            (col("side") === 1 || col("hub_side") === 1))
+          .select(col("hub").as("d1"), col("doc_id").as("d2"))
+        dense.unionAll(star)
+    }
+    pairs.distinct()
+  }
 
   /** Band-index MAINTENANCE — the fourth leg of continuous ingestion
     * (admit → verify → merge labels → UPDATE the index): the admitted

@@ -203,9 +203,17 @@ object Similarity {
         scaledDot(col("embedding"), col("embedding")).as("cnrm0"))
 
   /** The one IVF centroid-scoring recipe: beside every column of `rows`,
-    * `cells` = the ccids of the row `embedding`'s `nProbe` nearest
-    * [[ivfCentroids]] by scaled cosine, nearest first, ties to the
-    * smaller ccid. Lazy.
+    * `out(cells)`, where `cells` is the array of the ccids of the row
+    * `embedding`'s `nProbe` nearest [[ivfCentroids]] by scaled cosine,
+    * nearest first, ties to the smaller ccid. Lazy.
+    *
+    * `out` keeps the array (a query's probe set) or explodes it into one
+    * `cell` row per probe, in this same projection. An exploded cell must
+    * be generated here, not from a projected `cells` column: a filter
+    * the optimizer infers on that column (explode's non-empty check, a
+    * join's not-null check on the cell) is pushed below the projection
+    * into the cross join and scores every row a second time, while a
+    * generated column stops it at the Generate.
     *
     * Scale shape: the C centroids ride as ONE broadcast array row
     * (ccid-ASCENDING: sort_array on the struct sorts by the leading
@@ -219,8 +227,8 @@ object Similarity {
     * comparisons instead and OOM'd the 1M ScaleCheck. The row norm is
     * projected below the cross join, so it is computed once per row.
     */
-  private def probeCells(rows: DataFrame, centroids: DataFrame,
-      nProbe: Int): DataFrame = {
+  private def probeCells(rows: DataFrame, centroids: DataFrame, nProbe: Int)(
+      out: Column => Column): DataFrame = {
     val cents = centroids.agg(sort_array(
       collect_list(struct(col("ccid"), col("cemb"), col("cnrm0")))).as("cents"))
     val packed = transform(col("cents"), (c, i) =>
@@ -234,8 +242,10 @@ object Similarity {
         .getField("ccid"))
     rows.withColumn("__nrm", scaledDot(col("embedding"), col("embedding")))
       .crossJoin(broadcast(cents))
-      .select(rows.columns.map(col) :+ cells.as("cells"): _*)
+      .select(rows.columns.map(col) :+ out(cells): _*)
   }
+
+  private def oneCellARow(cells: Column): Column = explode(cells).as("cell")
 
   /** (vec_id, embedding, cell): every vector with its HOME cell (the
     * nProbe = 1 assignment) over `emb`'s own centroids. Lazy, and the
@@ -243,8 +253,8 @@ object Similarity {
     * needs no join back to the corpus.
     */
   private def homeCells(emb: DataFrame, centroidEvery: Int): DataFrame =
-    probeCells(emb, ivfCentroids(emb, centroidEvery), 1)
-      .select(col("vec_id"), col("embedding"), col("cells").getItem(0).as("cell"))
+    probeCells(emb, ivfCentroids(emb, centroidEvery), 1)(oneCellARow)
+      .select("vec_id", "embedding", "cell")
 
   /** The PERSISTABLE index relation: (vec_id, cell) over the `nProbe`
     * nearest centroids, eagerly materialized (the call-time cost IS the
@@ -253,8 +263,8 @@ object Similarity {
     * MaterializedIvfIndexSpec proves probe-from-disk identity.
     */
   def ivfIndex(emb: DataFrame, centroids: DataFrame, nProbe: Int): DataFrame =
-    probeCells(emb, centroids, nProbe)
-      .select(col("vec_id"), explode(col("cells")).as("cell"))
+    probeCells(emb, centroids, nProbe)(oneCellARow)
+      .select("vec_id", "cell")
       .localCheckpoint(true)
 
   /** An IVF assignment as a band relation: a (vec_id, cell) row is the
@@ -265,20 +275,23 @@ object Similarity {
     asg.select(col("vec_id").as("doc_id"), lit(0).as("band"), col("cell").as("bucket"))
 
   /** The kernels' (d1 < d2) pairs in the directed (qid, cid) convention:
-    * each pair in both orientations.
+    * each pair in both orientations, from one read of `pairs`.
     */
   private def bothWays(pairs: DataFrame): DataFrame =
-    pairs.select(col("d1").as("qid"), col("d2").as("cid"))
-      .unionAll(pairs.select(col("d2").as("qid"), col("d1").as("cid")))
+    pairs.select(explode(array(
+        struct(col("d1").as("qid"), col("d2").as("cid")),
+        struct(col("d2").as("qid"), col("d1").as("cid")))).as("p"))
+      .select("p.qid", "p.cid")
 
   /** IVF multi-probe candidate pairs — the default kNN base for
     * neighborhood operators (q470 LOF): every vector is indexed into its
     * `nProbe` nearest cells ([[ivfIndex]]), and candidate pairs are
-    * cell-mates, paired by [[Dedup.minhashCandidatesBanded]] over the
-    * index as one band. Pair count follows Σ|cell|² ≈ n²·nProbe²/C — the
-    * n²/C shape that replaces brute force; the only cross join is
+    * cell-mates, paired by [[Dedup.minhashCandidatesBanded]]' join over
+    * the index as one band. Pair count follows Σ|cell|² ≈ n²·nProbe²/C —
+    * the n²/C shape that replaces brute force; the only cross join is
     * corpus × centroids. Returns directed (qid, cid) pairs, qid ≠ cid,
-    * deduplicated across shared cells, materialized at call time.
+    * deduplicated across shared cells; lazy over the index, which is
+    * materialized at call time.
     *
     * `maxCell` is the kernel's `maxBucket` for a DEGENERATE cell (skewed
     * embeddings crowd one centroid: near-duplicate corpora, zero-vector
@@ -289,7 +302,7 @@ object Similarity {
     */
   def ivfCandidatePairs(embeddings: DataFrame, centroidEvery: Int,
       nProbe: Int, maxCell: Option[Int] = None): DataFrame =
-    bothWays(Dedup.minhashCandidatesBanded(cellBands(
+    bothWays(Dedup.bandPairs(cellBands(
       ivfIndex(embeddings, ivfCentroids(embeddings, centroidEvery), nProbe)), maxCell))
 
   /** Incremental IVF candidates: a NEW shard of vectors probes an
@@ -325,14 +338,14 @@ object Similarity {
     * (vec_id, cell) relation and the centroid metadata come in as
     * relations (from disk in production — no index embedding is ever
     * read); only the shard assigns fresh. The pairs are
-    * [[Dedup.incrementalCandidates]] over the two assignments as bands:
-    * shard×index plus shard×shard cell-mates, index×index never
+    * [[Dedup.incrementalCandidates]]' join over the two assignments as
+    * bands: shard×index plus shard×shard cell-mates, index×index never
     * re-paired, so admit cost follows |shard|·nProbe, not Σ|cell|² over
     * the corpus. Returns directed (qid, cid): qid ∈ shard,
     * cid ∈ index ∪ shard, qid ≠ cid — exactly [[ivfCandidatePairs]] over
     * index ∪ shard restricted to shard queries when the union picks the
-    * same centroids. vec_ids must be disjoint between the sides. The
-    * kernel materializes the pairs at call time.
+    * same centroids. vec_ids must be disjoint between the sides. Lazy
+    * over the shard's assignment, which is materialized at call time.
     *
     * `maxCell` is the kernel's incremental `maxBucket`: cell sizes are
     * measured over index ∪ shard, and an oversized cell keeps the
@@ -341,7 +354,7 @@ object Similarity {
   def ivfIncrementalPairsIndexed(indexAsg: DataFrame, centroids: DataFrame,
       shardEmb: DataFrame, nProbe: Int, maxCell: Option[Int] = None): DataFrame = {
     val shdAsg = ivfIndex(shardEmb, centroids, nProbe)
-    bothWays(Dedup.incrementalCandidates(cellBands(indexAsg), cellBands(shdAsg), maxCell))
+    bothWays(Dedup.incrementalBandPairs(cellBands(indexAsg), cellBands(shdAsg), maxCell))
       .join(shdAsg.select(col("vec_id").as("qid")), Seq("qid"), "left_semi")
   }
 
@@ -350,8 +363,9 @@ object Similarity {
     */
   def ivfTopK(embeddings: DataFrame, query: DataFrame, k: Int,
       centroidEvery: Int, nProbe: Int): DataFrame = {
-    val probe = probeCells(query, ivfCentroids(embeddings, centroidEvery), nProbe)
-      .select(col("embedding").as("qv"), explode(col("cells")).as("pcell"))
+    val probe = probeCells(query, ivfCentroids(embeddings, centroidEvery),
+        nProbe)(oneCellARow)
+      .select(col("embedding").as("qv"), col("cell").as("pcell"))
     homeCells(embeddings, centroidEvery)
       .join(broadcast(probe), col("cell") === col("pcell"))
       .select(col("vec_id"), col("cell"),
@@ -565,8 +579,8 @@ object Similarity {
     val asg = ivfIndex(embeddings, cents, 1)
     // each query's nProbe probe cells as ONE in-row array, so the probe
     // set broadcasts with the query row
-    val qp = probeCells(queries, cents, nProbe)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("cells").as("qcells"))
+    val qp = probeCells(queries, cents, nProbe)(_.as("qcells"))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("qcells"))
     val scored = embeddings.join(asg, Seq("vec_id"))
       .crossJoin(broadcast(qp))
       .select(col("qid"), col("vec_id"),

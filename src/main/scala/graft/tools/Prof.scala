@@ -45,12 +45,9 @@ object Prof {
     finally spark.stop()
   }
 
-  /** Profiles `names` on a caller-owned session; prints its report.
-    * `time` takes `reps` samples a query.
-    */
+  /** Profiles `names` on a caller-owned session; prints its report. */
   def run(spark: SparkSession, mode: String, names: Seq[String], sfDir: String,
-      noop: Boolean = false, noBroadcast: Boolean = false,
-      reps: Int = Bench.reps()): Unit = {
+      noop: Boolean = false, noBroadcast: Boolean = false): Unit = {
     require(Set("time", "jobs", "plan")(mode), usage)
     val registry = SparkEntry.queries
     val unknown = names.filterNot(registry.contains)
@@ -65,7 +62,7 @@ object Prof {
         val q = () => registry(name)(spark, sfDir)
         mode match {
           case "time" =>
-            val ss = Bench.measureSamples(spark, reps)(() => act(q()))
+            val ss = Bench.measureSamples(spark, Bench.reps())(() => act(q()))
             val floor = if (ss.isEmpty) "failed" else f"${ss.min}%.3fs"
             println(f"$name%-32s floor=$floor samples=${ss.map(v => f"$v%.3f").mkString(" ")}")
           case "jobs" => jobs(spark, name)(() => act(q()))

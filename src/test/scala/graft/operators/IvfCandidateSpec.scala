@@ -35,17 +35,17 @@ class IvfCandidateSpec extends SparkSpec {
   test("the only nested-loop join is corpus x centroids (no brute-force pair scan)") {
     Graft.configure(spark)
     val emb = Tables(spark, sfDir).embeddings
-    // the cell index and the kernel's pair set are both materialized at
-    // call time, so the pair join runs in the call's own queries, not in
-    // the returned relation's plan: inspect every query the call and the
-    // collect run (AQE final plans, checkpoints included)
+    // the cell index is materialized at call time, so the assignment's
+    // cross join runs in the call's own query, not in the returned
+    // relation's plan: inspect every query the call and the collect run
+    // (AQE final plans, checkpoints included)
     val (_, nodes) = executedNodes(Similarity.ivfCandidatePairs(emb, 25, 2).collect())
     val plan = nodes.map(_.simpleString(200)).mkString("\n")
     // the centroid-assignment cross join runs in the one assignment
     // pass; a brute-force corpus x corpus pair scan would add another
     // nested loop next to the cell equi-join asserted below
     val bnlj = nodes.count(_.nodeName == "BroadcastNestedLoopJoin")
-    assert(bnlj <= 2, s"expected only centroid-assignment cross joins:\n$plan")
+    assert(bnlj <= 1, s"expected only the centroid-assignment cross join:\n$plan")
     // the pair-generation join must be an equi-join on the cell, which
     // the band-pair kernel reads as its bucket key
     assert(nodes.exists {

@@ -8,10 +8,10 @@ import graft.{Bench, SparkSpec}
 class ProfSpec extends SparkSpec {
 
   /** Runs one mode, checks the session survived it, returns its stdout. */
-  private def report(mode: String, reps: Int = Bench.reps()): String = {
+  private def report(mode: String): String = {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val out = new java.io.ByteArrayOutputStream
-    Console.withOut(out)(Prof.run(spark, mode, Seq("q1_agg"), sfDir, reps = reps))
+    Console.withOut(out)(Prof.run(spark, mode, Seq("q1_agg"), sfDir))
     assert(spark.range(10).count() == 10)
     assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
     out.toString
@@ -30,9 +30,9 @@ class ProfSpec extends SparkSpec {
     assert(Bench.reps(env("0")) == 1)
     assert(Bench.reps(env("x")) == Bench.reps(_ => None))
     assert(Bench.reps(_ => None) == 2)
-    val r = report("time", reps = 3)
+    val r = report("time")
     val samples = """samples=(.*)""".r.findFirstMatchIn(r).map(_.group(1).trim.split(" ").length)
-    assert(samples.contains(3), s"expected 3 samples in: $r")
+    assert(samples.contains(Bench.reps()), s"expected ${Bench.reps()} samples in: $r")
   }
 
   test("jobs reports at least one job") {
