@@ -56,7 +56,7 @@ object SparkEntry {
       Graft.configure(s); q.fn(s, dir)
     }).toMap
 
-  /** DuckDB-equivalent SQL per query (omitted ⇒ rows-only check). */
+  /** DuckDB-equivalent SQL per query. */
   def oracleSql: Map[String, String] =
-    registry.collect { case QueryDef(n, _, Some(sql)) => n -> sql }.toMap
+    registry.map(q => q.name -> q.oracle).toMap
 }

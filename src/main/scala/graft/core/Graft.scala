@@ -169,17 +169,17 @@ final case class Tables(spark: SparkSession, dir: String) {
   def embeddings: DataFrame = rd("embeddings")
 }
 
-/** One verifiable operator: a DataFrame program plus (when SQL-expressible)
-  * a DuckDB oracle producing identical column names and values. Rows are
+/** One verifiable operator: a DataFrame program plus the DuckDB oracle
+  * that produces identical column names and values. Rows are
   * deterministically ordered on both sides so the driver's hash compare is
   * stable regardless of its own sort behavior.
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   def sql(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(oracle))
+    QueryDef(name, fn, oracle)
 }

@@ -128,7 +128,7 @@ object Curate {
     * importance). Returns (doc_id, n_feats, dsir_scaled).
     */
   def dsirScores(docs: DataFrame, target: DataFrame, buckets: Int = 512): DataFrame = {
-    // call-scoped cache (the Dedup contract): the raw feature stream
+    // cached for this call only: the raw feature stream
     // feeds the bucket aggregate AND the per-doc join; the result is
     // materialized under the cache, nothing stays pinned after return
     val rawF = dsirFeats(docs, buckets).cache()
@@ -303,7 +303,7 @@ object Curate {
     val shardTok = normalize(shard)
       .select(col("doc_id"), explode(split(col("nt"), " ")).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("n"))
-      .cache() // call-scoped (the Dedup contract): feeds the fold-in AND the probe
+      .cache() // for this call only: feeds the fold-in AND the probe
     try oovAdmitPlan(state, shardTok, vocabK, maxOovPpm).localCheckpoint(true)
     finally shardTok.unpersist(false)
   }

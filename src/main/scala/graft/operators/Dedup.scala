@@ -73,43 +73,37 @@ object Dedup {
     * vs 44.5 s filtered; q618's candidate step 33 s → ~1 s with the
     * barrier). The ExistingRDD barrier leaves join planning nothing to
     * inline, so callers feed the result to any number of band joins (and
-    * the index append) without adding a barrier of their own.
+    * the index append) without adding a barrier of their own. The
+    * signature relation is read once: every band's bucket comes out of
+    * one row ([[bandRows]]), so a lazy `sig` is never recomputed per band.
     */
   def lshBands(sig: DataFrame, numHashes: Int = 8, rowsPerBand: Int = 2): DataFrame = {
     // (k0 << 32) ^ k1 packs two 32-bit lanes injectively into one long
     // (shifts don't throw under ANSI). Only exact for rowsPerBand ≤ 2 —
     // more lanes would shift the first out of the word.
     require(rowsPerBand <= 2, "long-packed bucket keys support ≤2 rows/band")
-    // the band union references the signature relation once per band —
-    // cache it for the call or the whole shingle→md5→min pipeline
-    // recomputes per branch (uncached index measured 153 s at 1M docs)
     graft.core.Graft.span("Dedup.lshBands") {
-      withCallScopedCache(sig) {
-        (0 until numHashes / rowsPerBand).map { bIdx =>
-          // cast defensively: on an INT lane, shiftleft(_, 32) would be a
-          // silent no-op (Java shifts wrap mod the width) and the bucket key
-          // would degrade to a collision-prone plain XOR
-          val lanes = (0 until rowsPerBand)
-            .map(r => col(s"m${bIdx * rowsPerBand + r}").cast("long"))
-          val bucket = lanes.reduceLeft((a, b) => shiftleft(a, 32).bitwiseXOR(b))
-          sig.select(col("doc_id"), lit(bIdx).as("band"), bucket.as("bucket"))
-        }.reduce(_ unionAll _).localCheckpoint(true)
+      val buckets = (0 until numHashes / rowsPerBand).map { bIdx =>
+        // cast defensively: on an INT lane, shiftleft(_, 32) would be a
+        // silent no-op (Java shifts wrap mod the width) and the bucket key
+        // would degrade to a collision-prone plain XOR
+        (0 until rowsPerBand)
+          .map(r => col(s"m${bIdx * rowsPerBand + r}").cast("long"))
+          .reduceLeft((a, b) => shiftleft(a, 32).bitwiseXOR(b))
       }
+      bandRows(sig, col("doc_id"), buckets).localCheckpoint(true)
     }
   }
 
-  /** Call-scoped cache contract (the kmeansAssignments pattern): inputs
-    * not already persisted are cached for the call and released in the
-    * finally, so library callers don't leak session caches — the body
-    * must materialize whatever it returns (an eager localCheckpoint)
-    * before the cache goes. An input the CALLER already cached is left
-    * alone (both the cache and its lifetime stay the caller's).
+  /** The one band-row recipe: (doc_id, band, bucket) with one row per
+    * entry of `buckets`, band = its position, built in ONE read of
+    * `rows`. Serves [[lshBands]] and the banded-Hamming lane bands.
     */
-  private def withCallScopedCache[T](dfs: DataFrame*)(body: => T): T = {
-    val mine = dfs.filter(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    mine.foreach(_.cache())
-    try body finally mine.foreach(_.unpersist(false))
-  }
+  private def bandRows(rows: DataFrame, id: Column, buckets: Seq[Column]): DataFrame =
+    rows.select(id.as("doc_id"), posexplode(array(buckets: _*)).as(BandKey))
+
+  /** A band relation's block key. */
+  private val BandKey = Seq("band", "bucket")
 
   /** Candidate near-dup pairs: docs sharing any LSH band bucket —
     * [[minhashCandidatesBanded]] over [[lshBands]] of `sig`.
@@ -129,11 +123,31 @@ object Dedup {
       maxBucket: Option[Int] = None): DataFrame =
     minhashCandidatesBanded(lshBands(sig, numHashes, rowsPerBand), maxBucket)
 
-  /** (d1, d2), d1 < d2, for every two docs sharing a (band, bucket). */
-  private def allPairs(b: DataFrame): DataFrame = b.as("x").join(b.as("y"),
-      col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-        col("x.doc_id") < col("y.doc_id"))
-    .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
+  /** The FULL-CORPUS capped blocked-pair join, the one place a block's
+    * (size, hub) is computed: the x-side is every row of a block of at
+    * most `cap` rows plus the min-`id` hub of each larger block, joined to
+    * every row (y) on `keys` with x.id < y.id — all pairs of a small
+    * block, hub → member edges of a large one (the valve documented on
+    * [[minhashCandidates]]); `cap` None keeps every pair. Returns the
+    * join, sides aliased `x` and `y`, for the caller to project its own
+    * check. Callers: [[bandPairs]], [[probeIntra]]'s shard×shard leg,
+    * [[simhashPairs]] and Similarity.nearDupPairs.
+    */
+  private[operators] def blockPairs(rows: DataFrame, keys: Seq[String], id: String,
+      cap: Option[Int]): DataFrame = {
+    val xSide = cap match {
+      case None => rows
+      case Some(c) =>
+        val stats = rows.groupBy(keys.map(col): _*)
+          .agg(count(lit(1)).as("bsz"), min(col(id)).as("hub"))
+        rows.join(stats, keys)
+          .where(col("bsz") <= c || col(id) === col("hub"))
+          .select(rows.columns.map(col): _*)
+    }
+    xSide.as("x").join(rows.as("y"),
+      keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+        col(s"x.$id") < col(s"y.$id"))
+  }
 
   /** Shard-touching pairs: shard×index probe + shard×shard intra. */
   private def probeIntra(shd: DataFrame, idx: DataFrame): DataFrame =
@@ -141,7 +155,8 @@ object Dedup {
         col("s.band") === col("i.band") && col("s.bucket") === col("i.bucket"))
       .select(least(col("s.doc_id"), col("i.doc_id")).as("d1"),
         greatest(col("s.doc_id"), col("i.doc_id")).as("d2"))
-      .unionAll(allPairs(shd))
+      .unionAll(blockPairs(shd, BandKey, "doc_id", None)
+        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")))
 
   /** The FULL-CORPUS band-pair kernel over any (doc_id, band, bucket)
     * relation — [[lshBands]] output, the banded-Hamming lane bands of
@@ -165,22 +180,10 @@ object Dedup {
     * materializes (or streams) them itself, as the IVF pair builders do.
     */
   private[operators] def bandPairs(bands: DataFrame,
-      maxBucket: Option[Int]): DataFrame = {
-    val pairs = maxBucket match {
-      case None => allPairs(bands)
-      case Some(cap) =>
-        // one aggregate sizes every bucket and picks its hub; the size
-        // rides back as a column so the split is a filter, not a rescan
-        val stats = bands.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("bsz"), min("doc_id").as("hub"))
-        val sized = bands.join(stats, Seq("band", "bucket"))
-        val dense = allPairs(sized.where(col("bsz") <= cap).select("doc_id", "band", "bucket"))
-        val star = sized.where(col("bsz") > cap && col("doc_id") =!= col("hub"))
-          .select(col("hub").as("d1"), col("doc_id").as("d2"))
-        dense.unionAll(star)
-    }
-    pairs.distinct()
-  }
+      maxBucket: Option[Int]): DataFrame =
+    blockPairs(bands, BandKey, "doc_id", maxBucket)
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
+      .distinct()
 
   /** The INCREMENTAL band-pair kernel: candidate pairs for a NEW shard
     * against an existing corpus whose band-bucket index is already
@@ -246,13 +249,13 @@ object Dedup {
           .localCheckpoint(true)
         val denseKeys = stats.where(col("bsz") <= cap).select("band", "bucket")
         val dense = probeIntra(
-          shardBands.join(denseKeys, Seq("band", "bucket")),
-          indexBands.join(denseKeys, Seq("band", "bucket")))
+          shardBands.join(denseKeys, BandKey),
+          indexBands.join(denseKeys, BandKey))
         // oversized: hub-star restricted to pairs touching the shard —
         // (hub, member) survives iff the member is a shard doc OR the
         // hub itself is (then every star edge touches the shard); hub
         // is the union min, so d1 < d2 holds by construction
-        val star = tagged.join(stats.where(col("bsz") > cap), Seq("band", "bucket"))
+        val star = tagged.join(stats.where(col("bsz") > cap), BandKey)
           .where(col("doc_id") =!= col("hub") &&
             (col("side") === 1 || col("hub_side") === 1))
           .select(col("hub").as("d1"), col("doc_id").as("d2"))
@@ -857,32 +860,39 @@ object Dedup {
     */
   def bandedHammingPairs(sig: DataFrame, idCol: String, laneCols: Seq[String],
       maxDist: Int = 3, maxBand: Option[Int] = None): DataFrame =
-    withCallScopedCache(sig) {
-      val cand = minhashCandidatesBanded(laneBands(sig, idCol, laneCols), maxBand)
-      // verification joins mirror jaccardVerify's shape: both sides read
-      // the one materialized lane relation (the call-scoped cache). Pair
-      // columns resolve through cand(...) — a lane literally named "d1"
-      // (the image dHash lanes) would otherwise make the bare name
-      // ambiguous after the joins.
-      val a = sig.as("a")
-      val b = sig.as("b")
-      val ham = laneCols.map(c => expr(s"bit_count(a.$c ^ b.$c)")).reduce(_ + _)
-      cand.join(a, col(s"a.$idCol") === cand("d1"))
-        .join(b, col(s"b.$idCol") === cand("d2"))
-        .select(cand("d1"), cand("d2"), ham.cast("long").as("hamming"))
-        .where(col("hamming") <= maxDist)
+    graft.core.Graft.span("Dedup.bandedHammingPairs") {
+      val lanes = laneRows(sig, idCol, laneCols)
+      hammingVerify(minhashCandidatesBanded(laneBands(lanes, idCol, laneCols), maxBand),
+        lanes, idCol, laneCols, maxDist)
     }
 
-  /** One (doc_id, band = lane index, bucket = lane value) row per lane —
-    * left lazy: the lanes are plain columns of the (cached) signature
-    * relation, so there is no expression pipeline for a join filter to
-    * inline.
+  /** `sig`'s (id, lanes) projection behind an eager `localCheckpoint`
+    * (the jaccardVerify pattern): the lane bands and both verification
+    * sides read these rows, so a lazy signature plan runs once.
     */
-  private def laneBands(sig: DataFrame, idCol: String, laneCols: Seq[String]): DataFrame =
-    laneCols.zipWithIndex.map { case (c, i) =>
-      sig.select(col(idCol).as("doc_id"), lit(i).as("band"),
-        col(c).cast("long").as("bucket"))
-    }.reduce(_ unionAll _)
+  private def laneRows(sig: DataFrame, idCol: String, laneCols: Seq[String]): DataFrame =
+    sig.select(col(idCol) +: laneCols.map(col): _*).localCheckpoint(true)
+
+  /** One (doc_id, band = lane index, bucket = lane value) row per lane. */
+  private def laneBands(lanes: DataFrame, idCol: String, laneCols: Seq[String]): DataFrame =
+    bandRows(lanes, col(idCol), laneCols.map(col(_).cast("long")))
+
+  /** Candidate pairs (d1, d2) kept where Σ bit_count(lane ⊕ lane) ≤
+    * `maxDist`, both sides looked up in `lanes`; `hamming` is a long.
+    * Pair columns resolve through cand(...) — a lane literally named
+    * "d1" (the image dHash lanes) would otherwise make the bare name
+    * ambiguous after the joins.
+    */
+  private def hammingVerify(cand: DataFrame, lanes: DataFrame, idCol: String,
+      laneCols: Seq[String], maxDist: Int): DataFrame = {
+    val a = lanes.as("a")
+    val b = lanes.as("b")
+    val ham = laneCols.map(c => expr(s"bit_count(a.$c ^ b.$c)")).reduce(_ + _)
+    cand.join(a, col(s"a.$idCol") === cand("d1"))
+      .join(b, col(s"b.$idCol") === cand("d2"))
+      .select(cand("d1"), cand("d2"), ham.cast("long").as("hamming"))
+      .where(col("hamming") <= maxDist)
+  }
 
   /** Incremental banded-Hamming dedup — the perceptual families'
     * [[incrementalCandidates]], run over lane bands: a media shard's
@@ -906,18 +916,12 @@ object Dedup {
   def bandedHammingIncremental(indexSig: DataFrame, shardSig: DataFrame,
       idCol: String, laneCols: Seq[String],
       maxDist: Int = 3, maxBand: Option[Int] = None): DataFrame =
-    withCallScopedCache(indexSig, shardSig) {
-      val cand = incrementalCandidates(laneBands(indexSig, idCol, laneCols),
-        laneBands(shardSig, idCol, laneCols), maxBand)
-      val sigAll = indexSig.select(col(idCol) +: laneCols.map(col): _*)
-        .unionAll(shardSig.select(col(idCol) +: laneCols.map(col): _*))
-      val a = sigAll.as("a")
-      val b = sigAll.as("b")
-      val ham = laneCols.map(c => expr(s"bit_count(a.$c ^ b.$c)")).reduce(_ + _)
-      cand.join(a, col(s"a.$idCol") === cand("d1"))
-        .join(b, col(s"b.$idCol") === cand("d2"))
-        .select(cand("d1"), cand("d2"), ham.cast("long").as("hamming"))
-        .where(col("hamming") <= maxDist)
+    graft.core.Graft.span("Dedup.bandedHammingIncremental") {
+      val idx = laneRows(indexSig, idCol, laneCols)
+      val shd = laneRows(shardSig, idCol, laneCols)
+      hammingVerify(incrementalCandidates(laneBands(idx, idCol, laneCols),
+          laneBands(shd, idCol, laneCols), maxBand),
+        idx.unionAll(shd), idCol, laneCols, maxDist)
     }
 
   /** SimHash near-dup pairs: Hamming distance ≤ maxDist. Blocked by the
@@ -931,34 +935,24 @@ object Dedup {
     * outright. A block over the cap restricts the pairing's x-side to
     * its hub (min doc_id) — hub-anchored pairs only, still
     * Hamming-VERIFIED, a subset of the exact output; blocks at or under
-    * the cap keep exact all-pairs (LshBucketCapSpec pins it). One
-    * aliased join against the witness-restricted x-side, no unioned
-    * self-join branches.
+    * the cap keep exact all-pairs (LshBucketCapSpec pins it). The pairing
+    * is the [[blockPairs]] kernel keyed on the block.
     */
   def simhashPairs(sim: DataFrame, maxDist: Int = 3,
-      maxBlock: Option[Int] = None): DataFrame = {
-    // same expression barrier as the band relations: if `sim` arrives as
-    // a lazy plan (native simhash over normalized text), the block join
-    // pushes isnotnull(blk) below the projection and inlines the whole
-    // fingerprint pipeline into the Filter, per side — the checkpointed
-    // relation is metadata-sized (doc_id, simhash, blk)
-    val blocked = sim.withColumn("blk", expr("simhash div 256"))
-      .localCheckpoint(true)
-    val xSide = maxBlock match {
-      case None => blocked
-      case Some(cap) =>
-        val stats = blocked.groupBy("blk")
-          .agg(count(lit(1)).as("bsz"), min("doc_id").as("hub"))
-        blocked.join(stats, Seq("blk"))
-          .where(col("bsz") <= cap || col("doc_id") === col("hub"))
-          .select("doc_id", "simhash", "blk")
+      maxBlock: Option[Int] = None): DataFrame =
+    graft.core.Graft.span("Dedup.simhashPairs") {
+      // same expression barrier as the band relations: if `sim` arrives as
+      // a lazy plan (native simhash over normalized text), the block join
+      // pushes isnotnull(blk) below the projection and inlines the whole
+      // fingerprint pipeline into the Filter, per side — the checkpointed
+      // relation is metadata-sized (doc_id, simhash, blk)
+      val blocked = sim.withColumn("blk", expr("simhash div 256"))
+        .localCheckpoint(true)
+      blockPairs(blocked, Seq("blk"), "doc_id", maxBlock)
+        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+          expr("bit_count(x.simhash ^ y.simhash)").as("hamming"))
+        .where(col("hamming") <= maxDist)
     }
-    xSide.as("x").join(blocked.as("y"),
-        col("x.blk") === col("y.blk") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-        expr("bit_count(x.simhash ^ y.simhash)").as("hamming"))
-      .where(col("hamming") <= maxDist)
-  }
 
   /** (doc_id, i, gram): every 1-based n-gram start of every document with
     * at least n words — the corpus-token-sized relation all the

@@ -661,25 +661,16 @@ object Similarity {
     * hub-anchored pairs only — linear, still cosine-VERIFIED, and a
     * subset of the exact output; buckets at or under the cap keep exact
     * all-pairs (spec-pinned in SemDedupCapSpec's pair-cap case). The
-    * whole split is ONE aliased join against a witness-restricted
-    * x-side — no unioned self-join branches (the r8 Catalyst lesson).
+    * pairing is the [[Dedup.blockPairs]] kernel keyed on the bucket.
     */
   def nearDupPairs(embeddings: DataFrame, minCosScaled: Long, numPlanes: Int = 8,
-      maxBucket: Option[Int] = None): DataFrame = {
-    val b = embeddings.withColumn("bucket", lshBucket(col("embedding"), numPlanes))
-    val xSide = maxBucket match {
-      case None => b
-      case Some(cap) =>
-        val stats = b.groupBy("bucket")
-          .agg(count(lit(1)).as("bsz"), min("vec_id").as("hub"))
-        b.join(stats, Seq("bucket"))
-          .where(col("bsz") <= cap || col("vec_id") === col("hub"))
-          .select("vec_id", "embedding", "bucket")
+      maxBucket: Option[Int] = None): DataFrame =
+    graft.core.Graft.span("Similarity.nearDupPairs") {
+      val b = embeddings.select(col("vec_id"), col("embedding"),
+        lshBucket(col("embedding"), numPlanes).as("bucket"))
+      Dedup.blockPairs(b, Seq("bucket"), "vec_id", maxBucket)
+        .select(col("x.vec_id").as("v1"), col("y.vec_id").as("v2"),
+          cosineScaled(col("x.embedding"), col("y.embedding")).as("cos_scaled"))
+        .where(col("cos_scaled") >= minCosScaled)
     }
-    xSide.as("x").join(b.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("v1"), col("y.vec_id").as("v2"),
-        cosineScaled(col("x.embedding"), col("y.embedding")).as("cos_scaled"))
-      .where(col("cos_scaled") >= minCosScaled)
-  }
 }

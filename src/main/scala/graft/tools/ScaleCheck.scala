@@ -827,9 +827,11 @@ object ScaleCheck {
     // the candidate stream must be (a) non-empty, (b) two or more orders
     // of magnitude below brute-force n(n−1), (c) bounded per vector by
     // nProbe² × max cell occupancy — the Σ|cell|² shape that makes LOF /
-    // kNN operators viable at 10⁹ vectors.
+    // kNN operators viable at 10⁹ vectors. With C = nVec/50 cells the
+    // expected pair share is nProbe²/C = 200/nVec, so (b) needs well over
+    // 20,000 vectors: the floor keeps at least 800 cells (share ≈ 0.5%).
     {
-      val nVec = (millions * 10000L) max 20000L
+      val nVec = (millions * 10000L) max 40000L
       val emb = spark.range(nVec).select(col("id").as("vec_id"),
         expr("transform(sequence(1, 16), j -> CAST(" +
           "CAST((id % 997 + 1) * j * 2654435761 % 1000003 AS DOUBLE) / 1000003.0 AS FLOAT))")

@@ -108,6 +108,102 @@ class CapPropertySpec extends SparkSpec {
     }
   }
 
+  /** A case with a block of exactly `cap` rows (group 0), one of
+    * `cap + 1` rows (group 1) and `free` rows outside both (group -1),
+    * each row with 8 small random values and a shuffled id:
+    * (cap, rows of (id, group, values)).
+    */
+  private val genPlanted = for {
+    cap  <- Gen.chooseNum(1, 5)
+    free <- Gen.chooseNum(0, 12)
+    n     = 2 * cap + 1 + free
+    keys <- Gen.listOfN(n, Gen.chooseNum(0L, Long.MaxValue))
+    vals <- Gen.listOfN(n, Gen.listOfN(8, Gen.chooseNum(0, 3)))
+  } yield {
+    val ids = keys.zipWithIndex.sortBy(_._1).map(_._2.toLong)
+    val groups = Seq.fill(cap)(0) ++ Seq.fill(cap + 1)(1) ++ Seq.fill(free)(-1)
+    (cap, ids.zip(groups).zip(vals).map { case ((id, g), v) => (id, g, v) })
+  }
+
+  /** The cap rule on the driver: each row lies in one block per band
+    * (its i-th key); a block of at most `cap` rows gives all its pairs, a
+    * larger one its min id → every other member; pairs are kept where
+    * `ok` and are distinct across bands.
+    */
+  private def capReference(rows: Seq[(Long, Seq[Any])], cap: Int)(
+      ok: (Long, Long) => Boolean): Set[(Long, Long)] =
+    rows.flatMap { case (id, ks) => ks.zipWithIndex.map(_ -> id) }
+      .groupBy(_._1).values.flatMap { members =>
+        val ids = members.map(_._2).sorted
+        if (ids.size <= cap) ids.combinations(2).map(p => (p(0), p(1))).toSeq
+        else ids.tail.map(ids.head -> _)
+      }.filter(ok.tupled).toSet
+
+  private def assertReference(what: String, cap: Int, got: Set[(Long, Long)],
+      want: Set[(Long, Long)]): Unit =
+    assert(got == want, s"$what cap=$cap missing=${(want -- got).take(4)} " +
+      s"extra=${(got -- want).take(4)}")
+
+  test("property: capped outputs == the driver cap rule, blocks of cap and cap+1 rows") {
+    val s = spark
+    import s.implicits._
+    val cases = samples(genPlanted, 6)
+    // minhashCandidates, 4 bands: band 0 plants the two sized blocks
+    cases.foreach { case (cap, rows) =>
+      val sigs = rows.map { case (id, g, v) =>
+        (id, if (g < 0) v else List(100 + g, 100 + g) ++ v.drop(2))
+      }
+      val got = prs(Dedup.minhashCandidates(sigDf(sigs), maxBucket = Some(cap)), "d1", "d2")
+      val want = capReference(sigs.map { case (id, m) => id -> m.grouped(2).toSeq }, cap)(
+        (_, _) => true)
+      assertReference("minhashCandidates", cap, got, want)
+    }
+    // simhashPairs: blocks 5 and 6 planted, free rows in blocks 0..3
+    cases.foreach { case (cap, rows) =>
+      val hs = rows.map { case (id, g, v) =>
+        id -> ((if (g < 0) v(0) else 5 + g) * 256L + v(1) + 4 * v(2))
+      }.toMap
+      val got = prs(Dedup.simhashPairs(hs.toSeq.toDF("doc_id", "simhash"), 2, Some(cap)),
+        "d1", "d2")
+      val want = capReference(hs.toSeq.map { case (id, h) => id -> Seq(h / 256) }, cap)(
+        (a, b) => java.lang.Long.bitCount(hs(a) ^ hs(b)) <= 2)
+      assertReference("simhashPairs", cap, got, want)
+    }
+    // bandedHammingPairs: lane 0 plants the two sized blocks
+    cases.foreach { case (cap, rows) =>
+      val lanes = rows.map { case (id, g, v) =>
+        id -> ((if (g < 0) v(0) else 1000 * (g + 1)) +: v.slice(1, 4))
+      }.toMap
+      val sig = lanes.toSeq.map { case (id, l) => (id, l(0), l(1), l(2), l(3)) }
+        .toDF("doc_id", "l0", "l1", "l2", "l3")
+      val got = prs(Dedup.bandedHammingPairs(sig, "doc_id", Seq("l0", "l1", "l2", "l3"),
+        2, Some(cap)), "d1", "d2")
+      val want = capReference(lanes.toSeq, cap)((a, b) =>
+        lanes(a).zip(lanes(b)).map { case (x, y) => Integer.bitCount(x ^ y) }.sum <= 2)
+      assertReference("bandedHammingPairs", cap, got, want)
+    }
+    // nearDupPairs over one-hot vectors (cosine 1 iff same base): the
+    // planted bases and the free pool sit in pairwise different buckets
+    val bucketOf = oneHotDf(0 until 64)
+      .select($"vec_id", Similarity.lshBucket($"embedding").as("b"))
+      .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    val baseA = 0
+    val baseB = (1 until 64).find(k => bucketOf(k) != bucketOf(baseA)).get
+    val pool = (0 until 64).filterNot(k => Set(bucketOf(baseA), bucketOf(baseB))(bucketOf(k)))
+    assert(pool.size >= 4, s"one-hot buckets too few: $bucketOf")
+    cases.foreach { case (cap, rows) =>
+      val base = rows.map { case (id, g, v) =>
+        id -> (if (g == 0) baseA else if (g == 1) baseB else pool(v(0)))
+      }.toMap
+      val byId = base.toSeq.sortBy(_._1)
+      val emb = oneHotDf(byId.map(_._2))
+      val got = prs(Similarity.nearDupPairs(emb, 999000L, maxBucket = Some(cap)), "v1", "v2")
+      val want = capReference(byId.map { case (id, k) => id -> Seq(bucketOf(k)) }, cap)(
+        (a, b) => base(a) == base(b))
+      assertReference("nearDupPairs", cap, got, want)
+    }
+  }
+
   test("property: capped semDedup — removals are a subset, exact under covering cap") {
     val genCase = for {
       n     <- Gen.chooseNum(2, 18)
