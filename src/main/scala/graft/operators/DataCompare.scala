@@ -59,28 +59,29 @@ object DataCompare {
     * passes iff count and hash-sum both match.
     */
   def fastMismatchedChunkIds(
-      src: DataFrame, dst: DataFrame, chunkId: Column, cols: Seq[String]): Array[Long] = {
-    // tagged union: src rows carry +1, dst rows −1; per chunk, the signed
-    // count and signed hash-sum are BOTH zero iff the sides' (count, sum)
-    // pairs match. ONE aggregate over the union — map-side partial agg
-    // collapses each side to O(chunks) before the single shuffle; no join.
-    def tagged(df: DataFrame, tag: Int): DataFrame =
-      // hash reduced to 32 bits pre-sum: the aggregate stays far from Long
-      // overflow (ANSI mode throws on wrap) at any realistic chunk size
-      df.select(chunkId.as("chunk_id"), lit(tag.toLong).as("__t"),
-        (xxhash64(cols.map(col): _*) % lit(4294967296L)).as("__h"))
-    tagged(src, 1).unionAll(tagged(dst, -1))
-      .groupBy("chunk_id")
-      // decimal(38,0) accumulator: a degenerate whole-table "chunk" (O5
-      // stats-missing fallback) can hold billions of rows, where a long
-      // sum of ±2^32-bounded hashes would overflow (ANSI mode throws)
-      .agg(sum(col("__t")).as("dcnt"),
-        sum((col("__t") * col("__h")).cast("decimal(38,0)")).as("dhsum"))
-      .where(col("dcnt") =!= 0L || col("dhsum") =!= lit(0L).cast("decimal(38,0)"))
-      // cast: callers may pass an IntegerType chunk-id column (e.g. int
-      // literals from a planner), which getLong would ClassCastException on
-      .select(col("chunk_id").cast("long")).collect().map(_.getLong(0))
-  }
+      src: DataFrame, dst: DataFrame, chunkId: Column, cols: Seq[String]): Array[Long] =
+    graft.core.Graft.span("DataCompare.fastMismatchedChunkIds") {
+      // tagged union: src rows carry +1, dst rows −1; per chunk, the signed
+      // count and signed hash-sum are BOTH zero iff the sides' (count, sum)
+      // pairs match. ONE aggregate over the union — map-side partial agg
+      // collapses each side to O(chunks) before the single shuffle; no join.
+      def tagged(df: DataFrame, tag: Int): DataFrame =
+        // hash reduced to 32 bits pre-sum: the aggregate stays far from Long
+        // overflow (ANSI mode throws on wrap) at any realistic chunk size
+        df.select(chunkId.as("chunk_id"), lit(tag.toLong).as("__t"),
+          (xxhash64(cols.map(col): _*) % lit(4294967296L)).as("__h"))
+      tagged(src, 1).unionAll(tagged(dst, -1))
+        .groupBy("chunk_id")
+        // decimal(38,0) accumulator: a degenerate whole-table "chunk" (O5
+        // stats-missing fallback) can hold billions of rows, where a long
+        // sum of ±2^32-bounded hashes would overflow (ANSI mode throws)
+        .agg(sum(col("__t")).as("dcnt"),
+          sum((col("__t") * col("__h")).cast("decimal(38,0)")).as("dhsum"))
+        .where(col("dcnt") =!= 0L || col("dhsum") =!= lit(0L).cast("decimal(38,0)"))
+        // cast: callers may pass an IntegerType chunk-id column (e.g. int
+        // literals from a planner), which getLong would ClassCastException on
+        .select(col("chunk_id").cast("long")).collect().map(_.getLong(0))
+    }
 
   /** Chunk status table: full-outer join of the two sides' checksum rows,
     * classified EQUAL / DIFF / SRC_ONLY / DST_ONLY (U3 rollup input).

@@ -31,19 +31,18 @@ object Dedup {
   /** Per-document MinHash signature: k derived hashes over character
     * shingles; returns (id, m0..m{k-1}).
     *
-    * Uses the native MinHashSignature expression — the whole signature is
-    * one in-row loop, a pure PROJECTION: no shingle explode, no groupBy,
-    * no shuffle; MinHashExpressionSpec checks it against a declarative
-    * twin. The explicit repartition only spreads the few fat input splits
+    * Uses the native text-form MinHash expression (`minhashText`) — the
+    * whole signature is one in-row loop, a pure PROJECTION: no shingle
+    * explode, no groupBy, no shuffle; MinHashExpressionSpec checks it
+    * against a declarative twin. The explicit repartition only spreads the few fat input splits
     * across cores.
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 8, numHashes: Int = 8): DataFrame = {
     val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // fused text-form expression: normText evaluates ONCE per row as the
-    // direct child. The previous array-form child
-    // (minhashSignature(shingles(normText(..)))) carried normText inside
-    // the transform lambda — re-evaluated per shingle position on
+    // direct child. A shingle-array child (shingles(normText(..)))
+    // carries normText inside the transform lambda — re-evaluated per shingle position on
     // evaluation paths without subexpression elimination (pushed-down
     // join-key filters, RDD materialization), i.e. QUADRATIC in doc
     // length: one 30 KB doc cost ~10 s per such evaluation and q618's

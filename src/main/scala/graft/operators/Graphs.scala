@@ -21,51 +21,52 @@ object Graphs {
     * Returns (n, r). The node count stays in-plan (broadcast one-row
     * aggregate) — no driver collect.
     */
-  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
-    // The edge relation feeds every superstep's join plus the degree and
-    // node-set aggregates. r10: when the lineage-cut discipline below
-    // will split the loop into SEPARATE jobs (iters > 3), materialize e
-    // ONCE, hash-partitioned on src with the partitioning preserved
-    // (Graft.partitionedCheckpoint) — a lazy e is re-DERIVED from the
-    // base tables by every post-cut segment (a full scan per 3
-    // supersteps at scale), and a plain AQE-compiled checkpoint would be
-    // re-EXCHANGED by every superstep (UnknownPartitioning; the
-    // connectedComponents finding, PartitionedCheckpointSpec). For
-    // iters ≤ 3 the whole loop is ONE job in which ReusedExchange
-    // already dedups the e subtree — a checkpoint there only adds two
-    // driver barriers (measured on q128: ~+1 s at sf0.1 for zero plan
-    // benefit).
-    val e0 = edges.select(col("src"), col("dst"))
-    val e = if (iters > 3) graft.core.Graft.partitionedCheckpoint(e0, col("src")) else e0
-    // one explode pass, not a two-branch union: the union scanned the
-    // edge plan twice inside the node-set aggregate (r10, the CC
-    // symmetrization finding)
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("n")).distinct()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val params = nodes.agg(count(lit(1)).as("nn"))
-    var r = nodes.crossJoin(broadcast(params))
-      .select(col("n"), expr("CAST(1000000 div nn AS BIGINT)").as("r"))
-    var i = 0
-    while (i < iters) {
-      val contrib = e.join(r, e("src") === r("n"))
-        .join(deg, "src")
-        .groupBy(col("dst").as("cn"))
-        .agg(sum(expr("r div outdeg")).as("s"))
-      r = nodes.crossJoin(broadcast(params))
-        .join(contrib, col("n") === col("cn"), "left_outer")
-        .select(col("n"),
-          (expr("CAST(150000 div nn AS BIGINT)") +
-            expr("CAST((850000 * coalesce(s, 0L)) div 1000000 AS BIGINT)")).as("r"))
-      i += 1
-      // Cut lineage every few supersteps — same discipline as
-      // connectedComponents (Dedup.scala): without it each round's plan
-      // nests inside the next and iters=20 builds an exponential tree.
-      // The rank relation is O(|V|) rows, so materializing it is cheap
-      // relative to the superstep shuffle it feeds.
-      if (i % 3 == 0 && i < iters) r = r.localCheckpoint(true)
+  def pageRank(edges: DataFrame, iters: Int): DataFrame =
+    graft.core.Graft.span("Graphs.pageRank") {
+      // The edge relation feeds every superstep's join plus the degree and
+      // node-set aggregates. r10: when the lineage-cut discipline below
+      // will split the loop into SEPARATE jobs (iters > 3), materialize e
+      // ONCE, hash-partitioned on src with the partitioning preserved
+      // (Graft.partitionedCheckpoint) — a lazy e is re-DERIVED from the
+      // base tables by every post-cut segment (a full scan per 3
+      // supersteps at scale), and a plain AQE-compiled checkpoint would be
+      // re-EXCHANGED by every superstep (UnknownPartitioning; the
+      // connectedComponents finding, PartitionedCheckpointSpec). For
+      // iters ≤ 3 the whole loop is ONE job in which ReusedExchange
+      // already dedups the e subtree — a checkpoint there only adds two
+      // driver barriers (measured on q128: ~+1 s at sf0.1 for zero plan
+      // benefit).
+      val e0 = edges.select(col("src"), col("dst"))
+      val e = if (iters > 3) graft.core.Graft.partitionedCheckpoint(e0, col("src")) else e0
+      // one explode pass, not a two-branch union: the union scanned the
+      // edge plan twice inside the node-set aggregate (r10, the CC
+      // symmetrization finding)
+      val nodes = e.select(explode(array(col("src"), col("dst"))).as("n")).distinct()
+      val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+      val params = nodes.agg(count(lit(1)).as("nn"))
+      var r = nodes.crossJoin(broadcast(params))
+        .select(col("n"), expr("CAST(1000000 div nn AS BIGINT)").as("r"))
+      var i = 0
+      while (i < iters) {
+        val contrib = e.join(r, e("src") === r("n"))
+          .join(deg, "src")
+          .groupBy(col("dst").as("cn"))
+          .agg(sum(expr("r div outdeg")).as("s"))
+        r = nodes.crossJoin(broadcast(params))
+          .join(contrib, col("n") === col("cn"), "left_outer")
+          .select(col("n"),
+            (expr("CAST(150000 div nn AS BIGINT)") +
+              expr("CAST((850000 * coalesce(s, 0L)) div 1000000 AS BIGINT)")).as("r"))
+        i += 1
+        // Cut lineage every few supersteps — same discipline as
+        // connectedComponents (Dedup.scala): without it each round's plan
+        // nests inside the next and iters=20 builds an exponential tree.
+        // The rank relation is O(|V|) rows, so materializing it is cheap
+        // relative to the superstep shuffle it feeds.
+        if (i % 3 == 0 && i < iters) r = r.localCheckpoint(true)
+      }
+      r
     }
-    r
-  }
 
   /** Triangle count over a DISTINCT edge list `edges(u, v)`, u < v.
     *
@@ -85,38 +86,39 @@ object Graphs {
     * the caller's (often join+aggregate) edge pipeline. Returns one row
     * (n_triangles).
     */
-  def triangleCount(edges: DataFrame): DataFrame = {
-    // an edge list that is already a checkpoint (q159 materializes it
-    // for its own edge count) is read as is, not copied a second time
-    val uv = edges.select(col("u"), col("v"))
-    val e = if (edges.queryExecution.analyzed.isInstanceOf[LogicalRDD]) uv
-      else uv.localCheckpoint(true)
-    val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val lowFirst = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val o = e
-      .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-      .select(
-        when(lowFirst, col("u")).otherwise(col("v")).as("a"),
-        when(lowFirst, col("v")).otherwise(col("u")).as("b"),
-        // the out-endpoint's degree rides along: the wedge pair ordering
-        // below needs rank(b) = (deg(b), b) without re-joining degrees
-        when(lowFirst, col("dv")).otherwise(col("du")).as("db"))
-      .localCheckpoint(true)
-    // fully renamed branches: a self-join referencing the parent's own
-    // column names lets attribute deduplication collapse the equi-key
-    // into a tautology, degenerating the join to a nested-loop cross
-    // (PlanShapeSpec pins the equi shape)
-    val w1 = o.select(col("a").as("a1"), col("b").as("b1"), col("db").as("db1"))
-    val w2 = o.select(col("a").as("a2"), col("b").as("c2"), col("db").as("dc2"))
-    val o3 = o.select(col("a").as("b3"), col("b").as("c3"))
-    w1.join(w2, col("a1") === col("a2") &&
-        (col("db1") < col("dc2") || (col("db1") === col("dc2") && col("b1") < col("c2"))))
-      .join(o3, col("b1") === col("b3") && col("c2") === col("c3"))
-      .agg(count(lit(1)).as("n_triangles"))
-  }
+  def triangleCount(edges: DataFrame): DataFrame =
+    graft.core.Graft.span("Graphs.triangleCount") {
+      // an edge list that is already a checkpoint (q159 materializes it
+      // for its own edge count) is read as is, not copied a second time
+      val uv = edges.select(col("u"), col("v"))
+      val e = if (edges.queryExecution.analyzed.isInstanceOf[LogicalRDD]) uv
+        else uv.localCheckpoint(true)
+      val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
+        .groupBy("n").agg(count(lit(1)).as("d"))
+      val lowFirst = col("du") < col("dv") ||
+        (col("du") === col("dv") && col("u") < col("v"))
+      val o = e
+        .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
+        .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
+        .select(
+          when(lowFirst, col("u")).otherwise(col("v")).as("a"),
+          when(lowFirst, col("v")).otherwise(col("u")).as("b"),
+          // the out-endpoint's degree rides along: the wedge pair ordering
+          // below needs rank(b) = (deg(b), b) without re-joining degrees
+          when(lowFirst, col("dv")).otherwise(col("du")).as("db"))
+        .localCheckpoint(true)
+      // fully renamed branches: a self-join referencing the parent's own
+      // column names lets attribute deduplication collapse the equi-key
+      // into a tautology, degenerating the join to a nested-loop cross
+      // (PlanShapeSpec pins the equi shape)
+      val w1 = o.select(col("a").as("a1"), col("b").as("b1"), col("db").as("db1"))
+      val w2 = o.select(col("a").as("a2"), col("b").as("c2"), col("db").as("dc2"))
+      val o3 = o.select(col("a").as("b3"), col("b").as("c3"))
+      w1.join(w2, col("a1") === col("a2") &&
+          (col("db1") < col("dc2") || (col("db1") === col("dc2") && col("b1") < col("c2"))))
+        .join(o3, col("b1") === col("b3") && col("c2") === col("c3"))
+        .agg(count(lit(1)).as("n_triangles"))
+    }
 
   /** Bounded-depth BFS from the minimum source node of `edges(src, dst)`
     * (pass a symmetrized edge list for undirected graphs). Returns
@@ -127,18 +129,19 @@ object Graphs {
     * |V|²; unreached nodes are simply absent (the caller left-joins the
     * node set if it needs them).
     */
-  def bfsHops(edges: DataFrame, maxHops: Int): DataFrame = {
-    // prepare (dedup + partitioned checkpoint) FIRST, so the root MIN
-    // aggregate reads the materialized edge list instead of re-deriving
-    // it from the base tables (r10: the root agg was one extra full
-    // edge derivation per call)
-    val e = prepEdges(edges)
-    val root = e.agg(min(col("src")).as("root"))
-      // an empty edge list gives a single NULL MIN row — drop it so the
-      // contract ((n, hop) for reached nodes only) holds for empty graphs
-      .where(col("root").isNotNull)
-    bfsFromPrepared(e, root.select(col("root").as("n")), maxHops)
-  }
+  def bfsHops(edges: DataFrame, maxHops: Int): DataFrame =
+    graft.core.Graft.span("Graphs.bfsHops") {
+      // prepare (dedup + partitioned checkpoint) FIRST, so the root MIN
+      // aggregate reads the materialized edge list instead of re-deriving
+      // it from the base tables (r10: the root agg was one extra full
+      // edge derivation per call)
+      val e = prepEdges(edges)
+      val root = e.agg(min(col("src")).as("root"))
+        // an empty edge list gives a single NULL MIN row — drop it so the
+        // contract ((n, hop) for reached nodes only) holds for empty graphs
+        .where(col("root").isNotNull)
+      bfsFromPrepared(e, root.select(col("root").as("n")), maxHops)
+    }
 
   /** Deduped, src-hash-partitioned, checkpoint-materialized edge list —
     * the shape every BFS hop consumes exchange-free
@@ -159,13 +162,15 @@ object Graphs {
     * semi-join).
     */
   def bfsHopsFrom(edges: DataFrame, roots: DataFrame, maxHops: Int): DataFrame =
-    // r10: materialize the deduped edge list once ([[prepEdges]]) —
-    // every hop's semi-join re-embedded the lazy plan before, so each
-    // 3-hop lineage segment re-derived the edges from the base tables (a
-    // full scan per segment at scale) and re-exchanged them per hop; now
-    // each hop's e-side join leg is exchange-free (only the frontier
-    // shuffles).
-    bfsFromPrepared(prepEdges(edges), roots, maxHops)
+    graft.core.Graft.span("Graphs.bfsHopsFrom") {
+      // r10: materialize the deduped edge list once ([[prepEdges]]) —
+      // every hop's semi-join re-embedded the lazy plan before, so each
+      // 3-hop lineage segment re-derived the edges from the base tables (a
+      // full scan per segment at scale) and re-exchanged them per hop; now
+      // each hop's e-side join leg is exchange-free (only the frontier
+      // shuffles).
+      bfsFromPrepared(prepEdges(edges), roots, maxHops)
+    }
 
   private def bfsFromPrepared(e: DataFrame, roots: DataFrame, maxHops: Int): DataFrame = {
     var visited = broadcast(roots.select(col("n")).distinct())

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.awt.image.BufferedImage
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque
@@ -221,125 +223,207 @@ object Multimodal {
       doc_id: Long, channels: Int, sample_rate: Int, n_frames: Long,
       sum_sq: Long, peak_abs: Long)
 
+  // ---- the shared media recipe: one helper per decision ----
+
+  /** The record reader every decoding operator shares: `doc_id` cast to
+    * long, a null payload read as empty bytes, and a record whose decode
+    * throws dropped (a 100 TB crawl contains garbage; the metadata/probe
+    * tier already characterized it). One mapPartitions pass per input,
+    * so codec classes load once per executor.
+    */
+  private def mediaRows[T: Encoder](bin: DataFrame)(
+      decode: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
+    val spark = bin.sparkSession
+    import spark.implicits._
+    bin.select(col("doc_id").cast("long"), col("content")).as[MediaRecord]
+      .mapPartitions(_.flatMap { rec =>
+        try decode(rec.doc_id, Option(rec.content).getOrElse(Array.emptyByteArray))
+        catch { case _: Exception => Iterator.empty }
+      })
+  }
+
+  /** One encoded payload per id, as `(doc_id, content)` rows. */
+  private def encodeRows(spark: SparkSession, ids: DataFrame)(
+      encode: Long => Array[Byte]): DataFrame = {
+    import spark.implicits._
+    ids.select(col("doc_id").cast("long")).as[Long]
+      .mapPartitions(_.map(id => (id, encode(id))))
+      .toDF("doc_id", "content")
+  }
+
+  /** JDK `javax.imageio` decode; None when no reader recognizes the bytes. */
+  private def readImage(bytes: Array[Byte]): Option[BufferedImage] =
+    Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+
+  /** Channel sums of the `n` pixels in [x0, x1) × [y0, y1). */
+  private final case class RgbSum(r: Long, g: Long, b: Long, n: Long) {
+    /** Integer mean of gray = r + g + b (0..765, no lossy luma division). */
+    def grayMean: Long = (r + g + b) / n
+  }
+
+  private def rgbSum(img: BufferedImage, x0: Int, y0: Int, x1: Int, y1: Int): RgbSum = {
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var y = y0
+    while (y < y1) {
+      var x = x0
+      while (x < x1) {
+        val p = img.getRGB(x, y)
+        sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    RgbSum(sr, sg, sb, (x1 - x0).toLong * (y1 - y0))
+  }
+
+  /** Window f of k floor-division windows over n positions:
+    * [f·n div k, (f+1)·n div k). The image grid cells and the audio
+    * frames share these boundaries.
+    */
+  private def window(f: Int, n: Int, k: Int): (Int, Int) =
+    ((f.toLong * n / k).toInt, ((f + 1).toLong * n / k).toInt)
+
+  /** Cell gray means of a `gw`×`gh` grid, indexed (gx)(gy). */
+  private def gridMeans(img: BufferedImage, gw: Int, gh: Int): Array[Array[Long]] =
+    Array.tabulate(gw, gh) { (gx, gy) =>
+      val (x0, x1) = window(gx, img.getWidth, gw)
+      val (y0, y1) = window(gy, img.getHeight, gh)
+      rgbSum(img, x0, y0, x1, y1).grayMean
+    }
+
+  /** 64 bits as four 16-bit lanes: lane l = bits 16l..16l+15, bit i of a
+    * lane weighted 2^i.
+    */
+  private def lanes(bit: Int => Boolean): Array[Long] =
+    Array.tabulate(4)(l => (0 until 16).map(i => (if (bit(l * 16 + i)) 1L else 0L) << i).sum)
+
+  /** dHash lanes: over the 9×8 grid, bit (gy·8+gx) is set iff
+    * cell(gx,gy) > cell(gx+1,gy). None below the grid (<9×8).
+    */
+  private def dhashLanes(img: BufferedImage): Option[Array[Long]] =
+    if (img.getWidth < 9 || img.getHeight < 8) None
+    else {
+      val c = gridMeans(img, 9, 8)
+      Some(lanes(b => c(b % 8)(b / 8) > c(b % 8 + 1)(b / 8)))
+    }
+
+  /** aHash lanes: over the 8×8 grid with m = Σcells div 64, bit (ay·8+ax)
+    * is set iff cell(ax,ay) > m.
+    */
+  private def ahashLanes(img: BufferedImage): Array[Long] = {
+    val c = gridMeans(img, 8, 8)
+    val m = c.flatten.sum / 64
+    lanes(b => c(b % 8)(b / 8) > m)
+  }
+
+  /** Interleaved 16-bit PCM through the JDK codec (`javax.sound.sampled`):
+    * the stream format, every sample in stream order (channels
+    * interleaved, no float path) and the payload byte count. None for
+    * any other sample size.
+    */
+  private def pcm16(bytes: Array[Byte])
+      : Option[(javax.sound.sampled.AudioFormat, Array[Int], Int)] = {
+    val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    val f = ais.getFormat
+    if (f.getSampleSizeInBits != 16) None
+    else {
+      val all = ais.readAllBytes()
+      val le = !f.isBigEndian
+      val out = new Array[Int](all.length / 2)
+      var i = 0
+      while (i < out.length) {
+        out(i) =
+          (if (le) ((all(2 * i) & 0xff) | (all(2 * i + 1) << 8)).toShort
+           else ((all(2 * i + 1) & 0xff) | (all(2 * i) << 8)).toShort).toInt
+        i += 1
+      }
+      Some((f, out, all.length))
+    }
+  }
+
+  /** Mono 16-bit samples — the canonical corpus tier (transcode happens
+    * upstream of this engine); None for multi-channel streams.
+    */
+  private def monoSamples(bytes: Array[Byte]): Option[Array[Int]] =
+    pcm16(bytes).collect { case (f, s, _) if f.getChannels == 1 => s }
+
+  /** (energy Σs², zero crossings, peak |s|) of window f of k over `s`. */
+  private def windowStats(s: Array[Int], f: Int, k: Int): (Long, Long, Long) = {
+    val (lo, hi) = window(f, s.length, k)
+    var (e, z, p) = (0L, 0L, 0L)
+    var i = lo
+    while (i < hi) {
+      val v = s(i).toLong
+      e += v * v
+      p = p max math.abs(v)
+      if (i > lo && ((s(i - 1) < 0) != (s(i) < 0))) z += 1
+      i += 1
+    }
+    (e, z, p)
+  }
+
   /** REAL pixel decode via the JDK's own `javax.imageio` (PNG/GIF/BMP —
     * lossless formats only; JPEG decodes too but its values are
     * decoder-version-dependent, so keep it out of exact gates). One
     * reader per record off a shared per-partition code path, headless,
     * no external codec library. Channel sums and the Rec.709 luma are
     * exact integer arithmetic — engine-independent, oracle-able.
-    * Undecodable payloads are dropped (a 100 TB crawl contains garbage;
-    * the metadata/probe tier already characterized them).
+    * Undecodable payloads are dropped.
     */
   def decodeImage(spark: SparkSession, bin: DataFrame): Dataset[ImageFeatures] = {
     import spark.implicits._
-    bin.select(col("doc_id").cast("long"), col("content")).as[MediaRecord]
-      .mapPartitions { it =>
-        it.flatMap { rec =>
-          val bytes = Option(rec.content).getOrElse(Array.emptyByteArray)
-          val fmt = probe(bytes).map(_._1).getOrElse("unknown")
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            if (img == null) None
-            else {
-              var (sr, sg, sb) = (0L, 0L, 0L)
-              var y = 0
-              while (y < img.getHeight) {
-                var x = 0
-                while (x < img.getWidth) {
-                  val p = img.getRGB(x, y)
-                  sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-                  x += 1
-                }
-                y += 1
-              }
-              val n = img.getWidth.toLong * img.getHeight
-              val luma = (2126L * sr + 7152L * sg + 722L * sb) * 1000L / (10000L * n)
-              Some(ImageFeatures(rec.doc_id, fmt, img.getWidth, img.getHeight,
-                sr, sg, sb, luma))
-            }
-          } catch { case _: Exception => None }
-        }
+    mediaRows(bin) { (id, bytes) =>
+      val fmt = probe(bytes).map(_._1).getOrElse("unknown")
+      readImage(bytes).map { img =>
+        val s = rgbSum(img, 0, 0, img.getWidth, img.getHeight)
+        val luma = (2126L * s.r + 7152L * s.g + 722L * s.b) * 1000L / (10000L * s.n)
+        ImageFeatures(id, fmt, img.getWidth, img.getHeight, s.r, s.g, s.b, luma)
       }
+    }
   }
 
   /** Deterministic box-filter downsample: each `factor`×`factor` block
     * averages to one pixel with integer division — bit-exact on any
     * engine/JVM (unlike Graphics2D interpolation, which is
-    * implementation-defined). The thumbnail tier of a multimodal
-    * pipeline: decode once, emit the reduced pixel grid as ROWS so
-    * downstream operators (dedup, embedding) stay relational.
+    * implementation-defined). Remainder rows and columns that fill no
+    * whole block drop. The thumbnail tier of a multimodal pipeline:
+    * decode once, emit the reduced pixel grid as ROWS so downstream
+    * operators (dedup, embedding) stay relational.
     */
   def downsamplePixels(spark: SparkSession, bin: DataFrame,
       factor: Int): Dataset[PixelRow] = {
     import spark.implicits._
     require(factor >= 1)
-    bin.select(col("doc_id").cast("long"), col("content")).as[MediaRecord]
-      .mapPartitions { it =>
-        it.flatMap { rec =>
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(
-                Option(rec.content).getOrElse(Array.emptyByteArray)))
-            if (img == null) Iterator.empty
-            else {
-              val (ow, oh) = (img.getWidth / factor, img.getHeight / factor)
-              for {
-                by <- Iterator.range(0, oh); bx <- Iterator.range(0, ow)
-              } yield {
-                var (sr, sg, sb) = (0L, 0L, 0L)
-                var dy = 0
-                while (dy < factor) {
-                  var dx = 0
-                  while (dx < factor) {
-                    val p = img.getRGB(bx * factor + dx, by * factor + dy)
-                    sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-                    dx += 1
-                  }
-                  dy += 1
-                }
-                val area = factor.toLong * factor
-                PixelRow(rec.doc_id, bx, by, (sr / area).toInt,
-                  (sg / area).toInt, (sb / area).toInt)
-              }
-            }
-          } catch { case _: Exception => Iterator.empty }
+    mediaRows(bin) { (id, bytes) =>
+      readImage(bytes).iterator.flatMap { img =>
+        for {
+          by <- Iterator.range(0, img.getHeight / factor)
+          bx <- Iterator.range(0, img.getWidth / factor)
+        } yield {
+          val s = rgbSum(img, bx * factor, by * factor, (bx + 1) * factor, (by + 1) * factor)
+          PixelRow(id, bx, by, (s.r / s.n).toInt, (s.g / s.n).toInt, (s.b / s.n).toInt)
         }
       }
+    }
   }
 
   /** REAL PCM decode via the JDK's `javax.sound.sampled` — WAV frames to
-    * exact integer statistics (sum of squares, peak), no float path, so
-    * the oracle can carry independently-computed expectations.
+    * exact integer statistics (sum of squares and peak over every
+    * interleaved sample, n_frames = bytes / frame size), no float path,
+    * so the oracle can carry independently-computed expectations.
+    * Multi-channel streams are kept; non-16-bit ones drop.
     */
   def decodeAudio(spark: SparkSession, bin: DataFrame): Dataset[AudioFeatures] = {
     import spark.implicits._
-    bin.select(col("doc_id").cast("long"), col("content")).as[MediaRecord]
-      .mapPartitions { it =>
-        it.flatMap { rec =>
-          try {
-            val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(
-                Option(rec.content).getOrElse(Array.emptyByteArray)))
-            val f = ais.getFormat
-            require(f.getSampleSizeInBits == 16)
-            val all = ais.readAllBytes()
-            val le = !f.isBigEndian
-            var (sumSq, peak) = (0L, 0L)
-            var i = 0
-            while (i + 1 < all.length) {
-              val s =
-                if (le) ((all(i) & 0xff) | (all(i + 1) << 8)).toShort
-                else ((all(i + 1) & 0xff) | (all(i) << 8)).toShort
-              sumSq += s.toLong * s; peak = peak max math.abs(s.toLong)
-              i += 2
-            }
-            Some(AudioFeatures(rec.doc_id, f.getChannels,
-              f.getSampleRate.toInt,
-              all.length.toLong / f.getFrameSize, sumSq, peak))
-          } catch { case _: Exception => None }
-        }
+    mediaRows(bin) { (id, bytes) =>
+      pcm16(bytes).map { case (f, s, nBytes) =>
+        var (sumSq, peak) = (0L, 0L)
+        s.foreach { v => sumSq += v.toLong * v; peak = peak max math.abs(v.toLong) }
+        AudioFeatures(id, f.getChannels, f.getSampleRate.toInt,
+          nBytes.toLong / f.getFrameSize, sumSq, peak)
       }
+    }
   }
 
   final case class ImageHash(
@@ -376,51 +460,13 @@ object Multimodal {
     */
   def imageHashes(spark: SparkSession, bin: DataFrame): Dataset[ImageHash] = {
     import spark.implicits._
-    bin.select(col("doc_id").cast("long"), col("content")).as[MediaRecord]
-      .mapPartitions { it =>
-        it.flatMap { rec =>
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(
-                Option(rec.content).getOrElse(Array.emptyByteArray)))
-            if (img == null || img.getWidth < 9 || img.getHeight < 8) None
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              def cellMean(gx: Int, gy: Int, gw: Int, gh: Int): Long = {
-                val x0 = gx * w / gw; val x1 = (gx + 1) * w / gw
-                val y0 = gy * h / gh; val y1 = (gy + 1) * h / gh
-                var s = 0L; var n = 0L
-                var y = y0
-                while (y < y1) {
-                  var x = x0
-                  while (x < x1) {
-                    val p = img.getRGB(x, y)
-                    s += ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
-                    n += 1; x += 1
-                  }
-                  y += 1
-                }
-                s / n
-              }
-              val dc = Array.tabulate(9, 8)((gx, gy) => cellMean(gx, gy, 9, 8))
-              val dbits = Array.tabulate(64) { b =>
-                val gx = b % 8; val gy = b / 8
-                if (dc(gx)(gy) > dc(gx + 1)(gy)) 1L else 0L
-              }
-              val ac = Array.tabulate(8, 8)((ax, ay) => cellMean(ax, ay, 8, 8))
-              val am = ac.flatten.sum / 64
-              val abits = Array.tabulate(64) { b =>
-                if (ac(b % 8)(b / 8) > am) 1L else 0L
-              }
-              def lane(bits: Array[Long], l: Int): Long =
-                (0 until 16).map(i => bits(l * 16 + i) << i).sum
-              Some(ImageHash(rec.doc_id, w, h,
-                lane(dbits, 0), lane(dbits, 1), lane(dbits, 2), lane(dbits, 3),
-                lane(abits, 0), lane(abits, 1), lane(abits, 2), lane(abits, 3)))
-            }
-          } catch { case _: Exception => None }
-        }
+    mediaRows(bin) { (id, bytes) =>
+      for { img <- readImage(bytes); d <- dhashLanes(img) } yield {
+        val a = ahashLanes(img)
+        ImageHash(id, img.getWidth, img.getHeight,
+          d(0), d(1), d(2), d(3), a(0), a(1), a(2), a(3))
       }
+    }
   }
 
   /** Deterministic PNG encode of a formula-defined grayscale image —
@@ -431,74 +477,36 @@ object Multimodal {
     * oracle recomputes the expected pixels from the same formula.
     */
   def encodePng(spark: SparkSession, ids: DataFrame,
-      gv: (Long, Int, Int) => Int, w: Int, h: Int): DataFrame = {
-    import spark.implicits._
-    val enc = ids.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val v = gv(id, x, y) & 0xff
-              img.setRGB(x, y, (v << 16) | (v << 8) | v)
-              x += 1
-            }
-            y += 1
-          }
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", baos)
-          (id, baos.toByteArray)
+      gv: (Long, Int, Int) => Int, w: Int, h: Int): DataFrame =
+    encodeRows(spark, ids) { id =>
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val v = gv(id, x, y) & 0xff
+          img.setRGB(x, y, (v << 16) | (v << 8) | v)
+          x += 1
         }
+        y += 1
       }
-    enc.toDF("doc_id", "content")
-  }
+      val baos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", baos)
+      baos.toByteArray
+    }
 
   final case class VideoFrameHash(
       doc_id: Long, frame_idx: Int, n_frames: Int,
       d0: Long, d1: Long, d2: Long, d3: Long)
 
-  /** dHash lanes of one decoded frame — the 9×8 gradient grid of
-    * [[imageHashes]] factored for per-frame reuse (same floor-division
-    * boundaries, same integer cell means, same bit/lane layout).
-    */
-  private def dhashLanes(img: java.awt.image.BufferedImage): Option[Array[Long]] =
-    if (img == null || img.getWidth < 9 || img.getHeight < 8) None
-    else {
-      val w = img.getWidth; val h = img.getHeight
-      def cellMean(gx: Int, gy: Int): Long = {
-        val x0 = gx * w / 9; val x1 = (gx + 1) * w / 9
-        val y0 = gy * h / 8; val y1 = (gy + 1) * h / 8
-        var s = 0L; var n = 0L
-        var y = y0
-        while (y < y1) {
-          var x = x0
-          while (x < x1) {
-            val p = img.getRGB(x, y)
-            s += ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
-            n += 1; x += 1
-          }
-          y += 1
-        }
-        s / n
-      }
-      val c = Array.tabulate(9, 8)((gx, gy) => cellMean(gx, gy))
-      val bits = Array.tabulate(64) { b =>
-        val gx = b % 8; val gy = b / 8
-        if (c(gx)(gy) > c(gx + 1)(gy)) 1L else 0L
-      }
-      Some(Array.tabulate(4)(l => (0 until 16).map(i => bits(l * 16 + i) << i).sum))
-    }
-
   /** Video frame sampling over the REAL JDK animated-GIF codec: every
     * `every`-th stored frame (0, every, 2·every, …) decodes through
-    * `javax.imageio`'s GIF reader and emits its dHash lanes — the
-    * keyframe tier a video near-dup pipeline compares. Clips are
-    * full-frame GIFs (the writer below emits them; delta-coded
-    * animations are out of scope like the other exotic containers,
-    * SANDBOX.md §3); undecodable or sub-grid payloads drop.
+    * `javax.imageio`'s GIF reader and emits the dHash lanes of
+    * [[imageHashes]] — the keyframe tier a video near-dup pipeline
+    * compares. Clips are full-frame GIFs (the writer below emits them;
+    * delta-coded animations are out of scope like the other exotic
+    * containers, SANDBOX.md §3); undecodable payloads and sub-grid
+    * frames drop.
     *
     * At 100 TB: one mapPartitions projection (reader instantiated per
     * record but codec classes load once per executor); only the
@@ -511,24 +519,18 @@ object Multimodal {
   def videoFrameSample(spark: SparkSession, bin: DataFrame,
       every: Int): Dataset[VideoFrameHash] = {
     import spark.implicits._
-    bin.select(col("doc_id").cast("long"), col("content")).as[MediaRecord]
-      .mapPartitions { it =>
-        it.flatMap { rec =>
-          try {
-            val rdr = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-            rdr.setInput(javax.imageio.ImageIO.createImageInputStream(
-              new java.io.ByteArrayInputStream(
-                Option(rec.content).getOrElse(Array.emptyByteArray))))
-            val n = rdr.getNumImages(true)
-            val out = (0 until n by every).flatMap { f =>
-              dhashLanes(rdr.read(f)).map(l =>
-                VideoFrameHash(rec.doc_id, f, n, l(0), l(1), l(2), l(3)))
-            }
-            rdr.dispose()
-            out
-          } catch { case _: Exception => Seq.empty }
-        }
+    mediaRows(bin) { (id, bytes) =>
+      val rdr = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
+      rdr.setInput(javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(bytes)))
+      val n = rdr.getNumImages(true)
+      val out = (0 until n by every).flatMap { f =>
+        Option(rdr.read(f)).flatMap(dhashLanes).map(l =>
+          VideoFrameHash(id, f, n, l(0), l(1), l(2), l(3)))
       }
+      rdr.dispose()
+      out
+    }
   }
 
   /** Clip signature: sampled-frame dHash lanes pivoted wide — one row
@@ -560,40 +562,33 @@ object Multimodal {
     */
   def encodeGifAnim(spark: SparkSession, ids: DataFrame,
       gv: (Long, Int, Int, Int) => Int, w: Int, h: Int,
-      frames: Int): DataFrame = {
-    import spark.implicits._
-    val enc = ids.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-          val baos = new java.io.ByteArrayOutputStream()
-          val ios = javax.imageio.ImageIO.createImageOutputStream(baos)
-          writer.setOutput(ios)
-          writer.prepareWriteSequence(null)
-          var f = 0
-          while (f < frames) {
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                img.getRaster().setSample(x, y, 0, gv(id, f, x, y) & 0xff)
-                x += 1
-              }
-              y += 1
-            }
-            writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-            f += 1
+      frames: Int): DataFrame =
+    encodeRows(spark, ids) { id =>
+      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
+      val baos = new java.io.ByteArrayOutputStream()
+      val ios = javax.imageio.ImageIO.createImageOutputStream(baos)
+      writer.setOutput(ios)
+      writer.prepareWriteSequence(null)
+      var f = 0
+      while (f < frames) {
+        val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            img.getRaster().setSample(x, y, 0, gv(id, f, x, y) & 0xff)
+            x += 1
           }
-          writer.endWriteSequence()
-          ios.close()
-          writer.dispose()
-          (id, baos.toByteArray)
+          y += 1
         }
+        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
+        f += 1
       }
-    enc.toDF("doc_id", "content")
-  }
+      writer.endWriteSequence()
+      ios.close()
+      writer.dispose()
+      baos.toByteArray
+    }
 
   final case class AudioFrame(
       doc_id: Long, frame: Int, energy: Long, zc: Long, peak: Long)
@@ -601,39 +596,10 @@ object Multimodal {
   final case class AudioHash(
       doc_id: Long, n_samples: Long, f0: Long, f1: Long, f2: Long, f3: Long)
 
-  /** Shared 16-bit mono PCM decode through the REAL JDK codec
-    * (`javax.sound.sampled`) — the sample array every audio feature
-    * below derives from. Returns None for undecodable payloads, and
-    * for multi-channel or non-16-bit streams (the canonical corpus
-    * tier is mono 16-bit; transcode happens upstream of this engine).
-    */
-  private def pcmSamples(bytes: Array[Byte]): Option[Array[Int]] =
-    try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(
-          Option(bytes).getOrElse(Array.emptyByteArray)))
-      val f = ais.getFormat
-      if (f.getSampleSizeInBits != 16 || f.getChannels != 1) None
-      else {
-        val all = ais.readAllBytes()
-        val le = !f.isBigEndian
-        val n = all.length / 2
-        val out = new Array[Int](n)
-        var i = 0
-        while (i < n) {
-          out(i) =
-            (if (le) ((all(2 * i) & 0xff) | (all(2 * i + 1) << 8)).toShort
-             else ((all(2 * i + 1) & 0xff) | (all(2 * i) << 8)).toShort).toInt
-          i += 1
-        }
-        Some(out)
-      }
-    } catch { case _: Exception => None }
-
-  /** Frame-level audio features over the real PCM decode — the audio
-    * analogue of [[downsamplePixels]]: the clip is cut into `frames`
-    * equal windows by the same floor-division boundaries the image
-    * grids use (frame f = samples [f·n div frames, (f+1)·n div
+  /** Frame-level audio features over the real mono 16-bit PCM decode —
+    * the audio analogue of [[downsamplePixels]]: the clip is cut into
+    * `frames` equal windows by the same floor-division boundaries the
+    * image grids use (frame f = samples [f·n div frames, (f+1)·n div
     * frames)), and each window emits exact integer statistics:
     *
     *  - energy: Σ s² over the window (long, no float path);
@@ -642,39 +608,24 @@ object Multimodal {
     *    voiced/unvoiced and silence discriminator;
     *  - peak: max |s|, the clipping/silence gate.
     *
-    * Clips shorter than `frames` samples drop (no window would own a
-    * sample), like [[imageHashes]]'s sub-grid drop. At 100 TB this is
-    * a pure mapPartitions projection — decode amortizes per partition
-    * and nothing shuffles; downstream silence-trim / quality gates
-    * filter on the frame rows before any payload moves again.
+    * Undecodable, non-16-bit and multi-channel payloads drop, and so do
+    * clips shorter than `frames` samples (no window would own a sample),
+    * like [[imageHashes]]'s sub-grid drop. At 100 TB this is a pure
+    * mapPartitions projection — decode amortizes per partition and
+    * nothing shuffles; downstream silence-trim / quality gates filter on
+    * the frame rows before any payload moves again.
     */
   def audioFrames(spark: SparkSession, bin: DataFrame,
       frames: Int): Dataset[AudioFrame] = {
     import spark.implicits._
-    bin.select(col("doc_id").cast("long"), col("content")).as[MediaRecord]
-      .mapPartitions { it =>
-        it.flatMap { rec =>
-          pcmSamples(rec.content) match {
-            case Some(s) if s.length >= frames =>
-              val n = s.length
-              (0 until frames).iterator.map { f =>
-                val lo = f.toLong * n / frames
-                val hi = (f + 1).toLong * n / frames
-                var (e, z, p) = (0L, 0L, 0L)
-                var i = lo.toInt
-                while (i < hi) {
-                  val v = s(i).toLong
-                  e += v * v
-                  p = p max math.abs(v)
-                  if (i > lo && ((s(i - 1) < 0) != (s(i) < 0))) z += 1
-                  i += 1
-                }
-                AudioFrame(rec.doc_id, f, e, z, p)
-              }
-            case _ => Iterator.empty
-          }
+    mediaRows(bin) { (id, bytes) =>
+      monoSamples(bytes).filter(_.length >= frames).iterator.flatMap { s =>
+        (0 until frames).iterator.map { f =>
+          val (e, z, p) = windowStats(s, f, frames)
+          AudioFrame(id, f, e, z, p)
         }
       }
+    }
   }
 
   /** Perceptual audio fingerprint — the [[imageHashes]] recipe on the
@@ -688,8 +639,8 @@ object Multimodal {
     * Uniform integer gain g scales EVERY window energy by exactly g²,
     * so the relative comparator — and therefore the fingerprint — is
     * unchanged: gain-normalized copies (the dominant audio near-dup
-    * class) land at Hamming distance 0. Undecodable, multi-channel, or
-    * sub-65-sample payloads drop.
+    * class) land at Hamming distance 0. Undecodable, non-16-bit,
+    * multi-channel, or sub-65-sample payloads drop.
     *
     * At 100 TB: one shuffle-free mapPartitions projection; near-dup
     * blocking joins the 16-bit lanes through
@@ -701,29 +652,13 @@ object Multimodal {
       bin: DataFrame): Dataset[AudioHash] = {
     import spark.implicits._
     val windows = 65
-    bin.select(col("doc_id").cast("long"), col("content")).as[MediaRecord]
-      .mapPartitions { it =>
-        it.flatMap { rec =>
-          pcmSamples(rec.content) match {
-            case Some(s) if s.length >= windows =>
-              val n = s.length
-              val e = Array.tabulate(windows) { f =>
-                val lo = f.toLong * n / windows
-                val hi = (f + 1).toLong * n / windows
-                var acc = 0L
-                var i = lo.toInt
-                while (i < hi) { acc += s(i).toLong * s(i); i += 1 }
-                acc
-              }
-              val bits = Array.tabulate(64)(b => if (e(b) > e(b + 1)) 1L else 0L)
-              def lane(l: Int): Long =
-                (0 until 16).map(i => bits(l * 16 + i) << i).sum
-              Some(AudioHash(rec.doc_id, n.toLong,
-                lane(0), lane(1), lane(2), lane(3)))
-            case _ => None
-          }
-        }
+    mediaRows(bin) { (id, bytes) =>
+      monoSamples(bytes).filter(_.length >= windows).map { s =>
+        val e = Array.tabulate(windows)(f => windowStats(s, f, windows)._1)
+        val h = lanes(b => e(b) > e(b + 1))
+        AudioHash(id, s.length.toLong, h(0), h(1), h(2), h(3))
       }
+    }
   }
 
   /** Deterministic 16-bit mono PCM WAV encode of a formula-defined
@@ -735,38 +670,34 @@ object Multimodal {
     * while an oracle recomputes expected samples from the formula.
     */
   def encodeWav(spark: SparkSession, ids: DataFrame,
-      sv: (Long, Int) => Int, sampleRate: Int, n: Int): DataFrame = {
-    import spark.implicits._
-    val enc = ids.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val dataSize = n * 2
-          val bb = java.nio.ByteBuffer.allocate(44 + dataSize)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
-            .put("WAVE".getBytes("US-ASCII"))
-            .put("fmt ".getBytes("US-ASCII")).putInt(16)
-            .putShort(1).putShort(1) // PCM, mono
-            .putInt(sampleRate).putInt(sampleRate * 2)
-            .putShort(2).putShort(16) // block align, bits
-            .put("data".getBytes("US-ASCII")).putInt(dataSize)
-          var i = 0
-          while (i < n) {
-            bb.putShort((sv(id, i) max Short.MinValue.toInt
-              min Short.MaxValue.toInt).toShort)
-            i += 1
-          }
-          (id, bb.array())
-        }
+      sv: (Long, Int) => Int, sampleRate: Int, n: Int): DataFrame =
+    encodeRows(spark, ids) { id =>
+      val dataSize = n * 2
+      val bb = java.nio.ByteBuffer.allocate(44 + dataSize)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
+        .put("WAVE".getBytes("US-ASCII"))
+        .put("fmt ".getBytes("US-ASCII")).putInt(16)
+        .putShort(1).putShort(1) // PCM, mono
+        .putInt(sampleRate).putInt(sampleRate * 2)
+        .putShort(2).putShort(16) // block align, bits
+        .put("data".getBytes("US-ASCII")).putInt(dataSize)
+      var i = 0
+      while (i < n) {
+        bb.putShort((sv(id, i) max Short.MinValue.toInt
+          min Short.MaxValue.toInt).toShort)
+        i += 1
       }
-    enc.toDF("doc_id", "content")
-  }
+      bb.array()
+    }
 
   /** Batched per-partition feature extraction. Recognized containers get
     * REAL header-parsed dimensions/sample counts (full pixel/sample
     * decode lives in [[decodeImage]]/[[decodeAudio]]); unknown payloads
     * (the text fixtures) take the deterministic fallback. One digest
-    * instance per partition, the same amortization a codec handle needs.
+    * instance per partition, the same amortization a codec handle needs;
+    * no record drops, so this operator keeps its own pass rather than
+    * the shared record reader.
     */
   def decodeFeatures(spark: SparkSession, bin: DataFrame): Dataset[MediaFeatures] = {
     import spark.implicits._

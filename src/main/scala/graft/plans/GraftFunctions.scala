@@ -54,15 +54,12 @@ object GraftFunctions {
   /** Native dense-bitmap builder from an int-id array (nWords 64-bit words). */
   def bitmapBuild(ids: Column, nWords: Column): Column = GraftShims.bitmapBuildColumn(ids, nWords)
 
-  /** Native k-way MinHash signature of a shingle-array Column. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    GraftShims.minhashColumn(shingles, numHashes)
-
   /** Native k-way MinHash signature straight from normalized TEXT —
     * fused shingle→md5→min loop, no shingle array, text evaluated once
-    * per row (the array form's `transform` lambda re-evaluates whatever
-    * expression produces the text per shingle position on evaluation
-    * paths without subexpression elimination — quadratic in doc length).
+    * per row (a `transform`-lambda shingle array would re-evaluate
+    * whatever expression produces the text per shingle position on
+    * evaluation paths without subexpression elimination — quadratic in
+    * doc length).
     */
   def minhashText(text: Column, shingleLen: Int, numHashes: Int): Column =
     GraftShims.minhashTextColumn(text, shingleLen, numHashes)

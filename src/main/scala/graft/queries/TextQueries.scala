@@ -243,11 +243,10 @@ object TextQueries {
          |SELECT n.doc_id, md5(n.nt) AS fp, w.winnow
          |FROM nrm n JOIN w ON n.doc_id = w.doc_id ORDER BY n.doc_id""".stripMargin) { (s, dir) =>
       // winnow = min over shingles of the first 8 md5 hex chars = lane 0
-      // of the Broder family (a + 0·b = a), so the native MinHashSignature
-      // expression computes it as a pure in-row loop: no explode, no
-      // groupBy, no join.
-      val sig = graft.plans.GraftFunctions.minhashSignature(
-        shingles(col("nt"), 8), 1)
+      // of the Broder family (a + 0·b = a), so the native text-form
+      // MinHash expression computes it as a pure in-row loop over the
+      // same codepoint windows: no explode, no groupBy, no join.
+      val sig = graft.plans.GraftFunctions.minhashText(col("nt"), 8, 1)
       Tables(s, dir).documents
         .select(col("doc_id"), normText(col("text")).as("nt"))
         .select(col("doc_id"), md5(col("nt")).as("fp"),

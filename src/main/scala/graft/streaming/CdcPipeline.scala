@@ -26,13 +26,6 @@ object CdcPipeline {
     */
   final case class FlushedEvent(event: ChangeEvent, resolvedTs: Long, seq: Int)
 
-  /** Buffer/flush state machine (ST3/ST4/ST6):
-    *  - DML with commitTs ≤ checkpoint dropped as obsolete/replayed
-    *    (`ObsoleteMessages`, consumer.go:446-448);
-    *  - DML buffered until a RESOLVED(ts) arrives, then everything ≤ ts
-    *    flushes sorted (`event.go:744-757`) and checkpoint advances
-    *    (ST7 — Spark's checkpointLocation persists the state).
-    */
   /** Processing rank at equal commitTs: all DML/DDL strictly before
     * RESOLVED/HEARTBEAT. The raw queryType string must not be the
     * tie-break — lexicographically "UPDATE" > "RESOLVED", which would
@@ -46,29 +39,47 @@ object CdcPipeline {
     case _                        => 0
   }
 
+  /** Buffer/flush state machine (ST3/ST4/ST6) as one pure step over a
+    * batch of events, (buffer, checkpoint, events) → (buffer',
+    * checkpoint', flushed):
+    *  - DML with commitTs ≤ checkpoint dropped as obsolete/replayed
+    *    (`ObsoleteMessages`, consumer.go:446-448);
+    *  - DML buffered until a RESOLVED(ts) arrives, then everything ≤ ts
+    *    flushes sorted (`event.go:744-757`) and checkpoint advances
+    *    (ST7 — Spark's checkpointLocation persists the state).
+    * Both state-store processors ([[flushOnResolved]] and
+    * StatefulOps.ResolvedFlush) keep only their state I/O around it.
+    */
+  def resolvedStep(buffer: Seq[ChangeEvent], checkpoint: Long, events: Iterator[ChangeEvent])
+      : (Seq[ChangeEvent], Long, Seq[FlushedEvent]) = {
+    val group = new EventGroup(buffer)
+    var ckpt = checkpoint
+    val out = Seq.newBuilder[FlushedEvent]
+    events.toSeq.sortBy(e => (e.commitTs, kindRank(e.queryType), e.queryType, e.key)).foreach { e =>
+      e.queryType match {
+        case "RESOLVED" | "HEARTBEAT" => // HEARTBEAT advances checkpoint w/o data (ST10)
+          if (e.commitTs > ckpt) {
+            val flushed = group.resolvedFlush(e.commitTs)
+            out ++= flushed.zipWithIndex.map { case (f, i) => FlushedEvent(f, e.commitTs, i) }
+            ckpt = e.commitTs
+          }
+        case _ if e.isDml || e.queryType == "DDL" =>
+          if (e.commitTs > ckpt) group.append(e) // else obsolete: drop
+        case _ => ()
+      }
+    }
+    (group.buffered, ckpt, out.result())
+  }
+
+  /** [[resolvedStep]] on GroupState: the per-table state is one blob. */
   def flushOnResolved(
       table: String,
       events: Iterator[ChangeEvent],
       state: GroupState[TableState]): Iterator[FlushedEvent] = {
     val st0 = state.getOption.getOrElse(TableState(Nil, Long.MinValue))
-    val group = new EventGroup(st0.buffer)
-    var checkpoint = st0.checkpointTs
-    val out = Seq.newBuilder[FlushedEvent]
-    events.toSeq.sortBy(e => (e.commitTs, kindRank(e.queryType), e.queryType, e.key)).foreach { e =>
-      e.queryType match {
-        case "RESOLVED" | "HEARTBEAT" => // HEARTBEAT advances checkpoint w/o data (ST10)
-          if (e.commitTs > checkpoint) {
-            val flushed = group.resolvedFlush(e.commitTs)
-            out ++= flushed.zipWithIndex.map { case (f, i) => FlushedEvent(f, e.commitTs, i) }
-            checkpoint = e.commitTs
-          }
-        case _ if e.isDml || e.queryType == "DDL" =>
-          if (e.commitTs > checkpoint) group.append(e) // else obsolete: drop
-        case _ => ()
-      }
-    }
-    state.update(TableState(group.buffered, checkpoint))
-    out.result().iterator
+    val (buffer, checkpoint, flushed) = resolvedStep(st0.buffer, st0.checkpointTs, events)
+    state.update(TableState(buffer, checkpoint))
+    flushed.iterator
   }
 
   /** Wire the state machine over a decoded event stream. */

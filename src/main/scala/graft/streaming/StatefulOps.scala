@@ -52,13 +52,11 @@ object StatefulOps {
         new RunningTotals, TimeMode.None(), OutputMode.Update(), enc)
   }
 
-  /** [[CdcPipeline.flushOnResolved]] on the typed-state API: the per-table
+  /** [[CdcPipeline.resolvedStep]] on the typed-state API: the per-table
     * DML buffer is a ListState (append-only between flushes — no
     * rewrite-the-whole-blob per batch, unlike GroupState), the checkpoint
-    * ts a ValueState. Semantics are identical to the flatMapGroupsWithState
-    * twin: DML ≤ checkpoint dropped as obsolete, RESOLVED/HEARTBEAT at ts
-    * flushes the buffer's ≤-ts prefix sorted and advances the checkpoint,
-    * DML at exactly the resolved ts is included (kind-rank ordering).
+    * ts a ValueState. The fold is the flatMapGroupsWithState twin's
+    * ([[CdcPipeline.flushOnResolved]]); only the state I/O differs.
     */
   class ResolvedFlush extends StatefulProcessor[String, ChangeEvent, CdcPipeline.FlushedEvent] {
     @transient private var buffer: ListState[ChangeEvent] = _
@@ -70,38 +68,18 @@ object StatefulOps {
       ckpt = getHandle.getValueState[Long]("ckpt", Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    private def kindRank(queryType: String): Int = queryType match {
-      case "RESOLVED" | "HEARTBEAT" => 1
-      case _                        => 0
-    }
-
     override def handleInputRows(
         table: String,
         rows: Iterator[ChangeEvent],
         timerValues: TimerValues): Iterator[CdcPipeline.FlushedEvent] = {
-      val group = new EventGroup(if (buffer.exists()) buffer.get().toSeq else Nil)
-      var checkpoint = if (ckpt.exists()) ckpt.get() else Long.MinValue
-      val out = Seq.newBuilder[CdcPipeline.FlushedEvent]
-      rows.toSeq.sortBy(e => (e.commitTs, kindRank(e.queryType), e.queryType, e.key)).foreach { e =>
-        e.queryType match {
-          case "RESOLVED" | "HEARTBEAT" =>
-            if (e.commitTs > checkpoint) {
-              val flushed = group.resolvedFlush(e.commitTs)
-              out ++= flushed.zipWithIndex.map { case (f, i) =>
-                CdcPipeline.FlushedEvent(f, e.commitTs, i)
-              }
-              checkpoint = e.commitTs
-            }
-          case _ if e.isDml || e.queryType == "DDL" =>
-            if (e.commitTs > checkpoint) group.append(e)
-          case _ => ()
-        }
-      }
+      val (buffered, checkpoint, flushed) = CdcPipeline.resolvedStep(
+        if (buffer.exists()) buffer.get().toSeq else Nil,
+        if (ckpt.exists()) ckpt.get() else Long.MinValue, rows)
       // the store rejects empty list puts — clear() is the empty encoding
-      if (group.buffered.isEmpty) buffer.clear()
-      else buffer.put(group.buffered.toArray)
+      if (buffered.isEmpty) buffer.clear()
+      else buffer.put(buffered.toArray)
       ckpt.update(checkpoint)
-      out.result().iterator
+      flushed.iterator
     }
   }
 

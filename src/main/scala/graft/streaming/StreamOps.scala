@@ -96,7 +96,7 @@ object StreamOps {
   }
 
   /** Streaming near-dup drop: the LSH band fingerprint is a pure
-    * PROJECTION (native MinHashSignature expression — no shuffle, no
+    * PROJECTION (native text-form MinHash expression — no shuffle, no
     * state of its own), so it composes with dropDuplicatesWithinWatermark
     * exactly like an exact-dedup key: the first document per band bucket
     * passes, later collisions (exact duplicates always; near-duplicates

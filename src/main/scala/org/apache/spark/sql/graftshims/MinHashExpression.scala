@@ -7,36 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType, StringType}
 
-/** Native MinHash signature: given the shingle array of one document,
-  * compute all k Broder-derived min-hashes in ONE in-row loop —
-  * md5 per shingle, (a + i·b) mod 2^32 derivation, running minima.
-  *
-  * Versus the declarative pipeline (explode → md5/conv projection →
-  * groupBy(doc).agg(k mins)) this turns an S-row shuffle (S = total
-  * shingles, ~300× the document count) into a pure projection with NO
-  * shuffle at all — the signature never leaves the row. Bit-identical to
-  * the SQL/declarative form: same md5, same hex-slice parsing, same
-  * derivation (see the tests' DeclarativeTwins.minhashSignatures, the
-  * semantic spec).
-  */
-case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType)
-  override def prettyName: String = "minhash_signature"
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashImpl.compute(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = org.apache.spark.sql.graftshims.MinHashImpl.compute($x, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Native MinHash signature straight from the (already-normalized) TEXT:
   * the k-shingle loop is fused into the expression — one codepoint
   * window per position, md5 per window, k Broder minima — so the text
@@ -48,9 +18,11 @@ case class MinHashSignature(child: Expression, numHashes: Int)
   * subexpression-eliminate (pushed-down filters, RDD materialization)
   * re-run the regexp normalization PER SHINGLE POSITION — quadratic in
   * document length (measured ~10 s for ONE 30 KB document). Semantics
-  * are bit-identical to MinHashSignature over the shingle array: same
-  * windows (SQL substr = codepoint-based, as UTF8String.substringSQL),
-  * same md5 bytes, same (a + i·b) mod 2^32 derivation, and duplicate
+  * are bit-identical to the declarative shingle-array form (the tests'
+  * DeclarativeTwins.minhashSignatures): same windows (SQL substr =
+  * codepoint-based, as UTF8String.substringSQL, including the short-text
+  * whole-string window), same md5 bytes (first 8 hex chars = a, next 8
+  * forced odd = b), same (a + i·b) mod 2^32 derivation, and duplicate
   * shingles cannot change a minimum.
   */
 case class MinHashFromText(child: Expression, shingleLen: Int, numHashes: Int)
@@ -111,33 +83,6 @@ object MinHashImpl {
   }
 
   private val Mod = 4294967296L // 2^32
-
-  /** Java-callable from generated code (static forwarder). */
-  def compute(shingles: ArrayData, k: Int): ArrayData = {
-    val mins = Array.fill(k)(Long.MaxValue)
-    val md = digest.get()
-    var i = 0
-    val n = shingles.numElements()
-    while (i < n) {
-      val sh = shingles.getUTF8String(i)
-      if (sh != null) {
-        md.reset()
-        val d = md.digest(sh.getBytes)
-        // first 8 hex chars = first 4 bytes (big-endian unsigned)
-        val a = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) | ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
-        // hex chars 9-16 = bytes 4-7, forced odd
-        val b = (((d(4) & 0xFFL) << 24) | ((d(5) & 0xFFL) << 16) | ((d(6) & 0xFFL) << 8) | (d(7) & 0xFFL)) | 1L
-        var j = 0
-        while (j < k) {
-          val h = (a + j * b) % Mod
-          if (h < mins(j)) mins(j) = h
-          j += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
 
   /** Fused text → shingle-window → md5 → k-minima loop. Windows are
     * codepoint-based like SQL substr: `substringSQL(i, i+len-1)` for

@@ -447,9 +447,6 @@ object GraftShims {
   def sortedIntersectCountColumn(a: Column, b: Column): Column =
     ExpressionUtils.column(SortedIntersectCount(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  def minhashColumn(shingles: Column, numHashes: Int): Column =
-    ExpressionUtils.column(MinHashSignature(ExpressionUtils.expression(shingles), numHashes))
-
   def minhashTextColumn(text: Column, shingleLen: Int, numHashes: Int): Column =
     ExpressionUtils.column(MinHashFromText(ExpressionUtils.expression(text), shingleLen, numHashes))
 

@@ -44,7 +44,7 @@ class LshBucketCapSpec extends SparkSpec {
     assert(none.exceptAll(all).count() == 0L && all.exceptAll(none).count() == 0L)
   }
 
-  test("lshBands returns a materialized barrier and releases only its own signature cache") {
+  test("lshBands returns a checkpointed relation, leaves no cache behind and keeps a caller-held cache") {
     def cached(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
       .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).nonEmpty
     // the returned relation is an ExistingRDD: no minhash expression is
@@ -55,9 +55,9 @@ class LshBucketCapSpec extends SparkSpec {
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
       s"lshBands must return a checkpointed relation:\n${bands.queryExecution.analyzed}")
     assert(bands.count() == 4L * 43)
-    // an uncached signature input is cached for the call only
+    // an uncached signature input is left uncached
     assert(!cached(uncached),
-      "lshBands must release the signature cache it took")
+      "lshBands must leave no cache behind on an uncached input")
     // a caller-cached input keeps its cache (and its lifetime)
     val held = sigs.cache()
     Dedup.lshBands(held)

@@ -1,5 +1,10 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.graftshims.ListenerShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.SparkSpec
 
 /** Guards the pageRank lineage-cut discipline: 20 iterations must produce
@@ -65,5 +70,32 @@ class PageRankDepthSpec extends SparkSpec {
       s"bfs(20) plan ${planSize(deep)} nodes vs bfs(2) $shallowSize: lineage accumulating")
     val got = deep.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (0L to 20L).map(i => i -> i).toMap)
+  }
+
+  test("every job a pageRank(iters = 4) call starts carries its job description, restored afterwards") {
+    val s = spark
+    import s.implicits._
+    val e = edges.toDF("src", "dst")
+    val descs = mutable.ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = descs.synchronized {
+        descs += js.properties.getProperty("spark.job.description")
+      }
+    }
+    val sc = spark.sparkContext
+    sc.setJobDescription("outer")
+    ListenerShim.waitUntilEmpty(sc, 30000)
+    sc.addSparkListener(listener)
+    try {
+      // iters > 3: the edge checkpoint and the iteration-3 rank cut run inside the call
+      val ranks = Graphs.pageRank(e, iters = 4)
+      assert(ranks.count() == 4)
+      ListenerShim.waitUntilEmpty(sc, 30000)
+    } finally sc.removeSparkListener(listener)
+    assert(sc.getLocalProperty("spark.job.description") == "outer")
+    sc.setJobDescription(null)
+    // the checkpoints inside the call, then the caller's count outside it
+    val (inside, after) = descs.synchronized(descs.toList).span(_ == "Graphs.pageRank")
+    assert(inside.nonEmpty && after.nonEmpty && after.forall(_ == "outer"), inside ++ after)
   }
 }
