@@ -21,7 +21,7 @@ object Graft {
     // r10 (guide §3.1): AQE can rewrite a sort-merge join to a shuffled
     // HASH join when every post-shuffle build partition is under this
     // threshold of SHUFFLE bytes. Default OFF (Spark's own default): the
-    // closing session's ScaleCheck re-cert OOMed in
+    // closing session's `check` scale re-cert OOMed in
     // ShuffledHashJoinExec.buildHashedRelation with the mid-round 64m
     // default — the threshold bounds compressed shuffle bytes, not the
     // built hash map (several × larger), and with 32 concurrent tasks

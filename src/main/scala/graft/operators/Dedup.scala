@@ -465,7 +465,7 @@ object Dedup {
 
   /** [[connectedComponentsCounted]] with the finish gate as an argument:
     * a negative gate forces the distributed fallback (ConnectedComponentsSpec
-    * and CcBench compare the two paths).
+    * and the `cc` family of graft.tools.Scale compare the two paths).
     */
   private[graft] def connectedComponentsGated(pairs: DataFrame, maxIter: Int,
       finishMaxRows: Long): (DataFrame, Long) =
@@ -661,7 +661,8 @@ object Dedup {
       // (63-round = 46 s at 1M vertices). From round 3 on, each round
       // also follows one label-of-label hop, so reached distance DOUBLES
       // per round and any graph converges in O(log diameter) rounds
-      // (CcBench: the 1M-vertex chain-of-64 graph drops 46.7 s → ~8 s).
+      // (Scale's chain64_fallback: the 1M-vertex chain-of-64 graph drops
+      // 46.7 s → ~8 s).
       // Rounds 1-2 stay plain so the common shallow case never pays the
       // extra |V|-sized join. (r10 measured the onset: delaying doubling
       // to round 4 just moves which round pays the join on the sf0.1
@@ -696,7 +697,8 @@ object Dedup {
     // rounds means the loop is broken, never legitimate data. The pre-r9
     // loop SILENTLY returned unconverged labels here (a diameter-63 chain
     // at maxIter=50 reported 13× the true component count — caught by
-    // CcBench's chain shape); wrong labels must never leave this method.
+    // the `cc` scale family's chain shape); wrong labels must never leave
+    // this method.
     if (changed)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")

@@ -33,6 +33,24 @@ object Similarity {
   private val IdxFactor = 1L << 21
   private val IdxMask = (1L << 21) - 1
 
+  /** The packed score of every centroid struct in the row's `cents` array:
+    * `-floor(Scale·dot/(‖x‖·‖c‖))·IdxFactor + i`, where `dot(c)` is the
+    * row's exact scaled dot with centroid `c`, `xNorm` the row's scaled
+    * self-dot and field `cNorm` the centroid's. The smallest packed value
+    * is the highest scaled cosine, ties to the earlier array index; with a
+    * `cents` array sorted by centroid id, that is the smaller id.
+    * [[packedCentroid]] reads the centroid back.
+    */
+  private def packedScores(xNorm: Column, cNorm: String)(dot: Column => Column): Column =
+    transform(col("cents"), (c, i) =>
+      (-floor(lit(Scale) * dot(c).cast("double") /
+          (sqrt(xNorm.cast("double")) * sqrt(c.getField(cNorm).cast("double"))))
+        .cast("long")) * lit(IdxFactor) + i.cast("long"))
+
+  /** The `cents` struct a [[packedScores]] value names. */
+  private def packedCentroid(packed: Column): Column =
+    element_at(col("cents"), packed.bitwiseAND(lit(IdxMask)).cast("int") + 1)
+
   /** Element scaled to an exact integer: floor(x · 10^6). */
   private def sInt(x: Column): Column =
     floor(x.cast("double") * lit(Scale)).cast("long")
@@ -128,28 +146,19 @@ object Similarity {
     // array row (cid-ASCENDING, so packed index order == cid order), and
     // reassignment is a PROJECTION over embArr — the former window path
     // shuffled n·C scored rows per Lloyd round (at 1M vectors × 244
-    // cells that exchange alone is 244M rows). Each (negccos, idx) packs
-    // into one monotone long, so min packed == the window's (ccos DESC,
-    // cid ASC) head; the per-centroid dot is the native long_dot fused
-    // loop (the interpreted zip_with twin measured 226s for 3 rounds at
-    // 1M×64-d — the lambda overhead WAS the runtime). Packing bounds C
-    // at 2^21 centroids — far above any Lloyd fan-in this engine runs.
+    // cells that exchange alone is 244M rows). The min packed score is
+    // the window's (ccos DESC, cid ASC) head; the per-centroid dot is the
+    // native long_dot fused loop (the interpreted zip_with twin measured
+    // 226s for 3 rounds at 1M×64-d — the lambda overhead WAS the runtime).
+    // The scores are probeCells', over the pre-scaled long arrays.
     def withCell(centArr: DataFrame): DataFrame = {
       val centsArr = centArr
         .agg(sort_array(collect_list(struct(col("cid"), col("ca"), col("cnrm"))))
           .as("cents"))
-      val packed = transform(col("cents"), (c, i) =>
-        (-floor(lit(1000000.0) *
-            graft.plans.GraftFunctions.longDot(col("xa"), c.getField("ca"))
-              .cast("double") /
-            (sqrt(col("xnrm").cast("double")) *
-              sqrt(c.getField("cnrm").cast("double"))))
-          .cast("long")) * lit(IdxFactor) + i.cast("long"))
+      val packed = packedScores(col("xnrm"), "cnrm")(c =>
+        graft.plans.GraftFunctions.longDot(col("xa"), c.getField("ca")))
       embArr.crossJoin(broadcast(centsArr))
-        .withColumn("cell",
-          element_at(col("cents"),
-            array_min(packed).bitwiseAND(lit(IdxMask)).cast("int") + 1)
-            .getField("cid"))
+        .withColumn("cell", packedCentroid(array_min(packed)).getField("cid"))
     }
     def assign(centArr: DataFrame): DataFrame =
       withCell(centArr).select(col("vec_id"), col("cell"))
@@ -224,22 +233,18 @@ object Similarity {
     * primitive O(C·nProbe) pass: packed index order == ccid order, so
     * the k smallest packed are the (ccos DESC, ccid ASC) head. An
     * array_sort over C structs per row paid O(C log C) boxed
-    * comparisons instead and OOM'd the 1M ScaleCheck. The row norm is
-    * projected below the cross join, so it is computed once per row.
+    * comparisons instead and OOM'd the 1M `check` scale run. The row
+    * norm is projected below the cross join, so it is computed once per
+    * row.
     */
   private def probeCells(rows: DataFrame, centroids: DataFrame, nProbe: Int)(
       out: Column => Column): DataFrame = {
     val cents = centroids.agg(sort_array(
       collect_list(struct(col("ccid"), col("cemb"), col("cnrm0")))).as("cents"))
-    val packed = transform(col("cents"), (c, i) =>
-      (-floor(lit(Scale) *
-          scaledDot(col("embedding"), c.getField("cemb")).cast("double") /
-          (sqrt(col("__nrm").cast("double")) *
-            sqrt(c.getField("cnrm0").cast("double"))))
-        .cast("long")) * lit(IdxFactor) + i.cast("long"))
+    val packed = packedScores(col("__nrm"), "cnrm0")(c =>
+      scaledDot(col("embedding"), c.getField("cemb")))
     val cells = transform(graft.plans.GraftFunctions.minKLong(packed, lit(nProbe)),
-      p => element_at(col("cents"), p.bitwiseAND(lit(IdxMask)).cast("int") + 1)
-        .getField("ccid"))
+      p => packedCentroid(p).getField("ccid"))
     rows.withColumn("__nrm", scaledDot(col("embedding"), col("embedding")))
       .crossJoin(broadcast(cents))
       .select(rows.columns.map(col) :+ out(cells): _*)

@@ -72,9 +72,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     // a 120-vertex path has diameter 119 — far past the default
     // maxIter=50, so plain per-round propagation CANNOT finish: the
     // pre-r9 loop silently returned unconverged labels on this graph
-    // (caught by CcBench's 1M chain shape: 13× the true component
-    // count). Path-shortcutting must converge it in O(log 119) rounds
-    // and label every vertex with the true minimum.
+    // (caught by the `cc` scale family's 1M chain shape: 13× the true
+    // component count). Path-shortcutting must converge it in O(log 119)
+    // rounds and label every vertex with the true minimum.
     val pairs = (1L until 120L).map(i => (i, i + 1)).toDF("d1", "d2")
     val comp = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

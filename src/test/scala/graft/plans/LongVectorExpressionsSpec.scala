@@ -6,7 +6,7 @@ import graft.SparkSpec
 import graft.core.Tables
 
 /** Pins the r6 native long-array primitives behind the 1M-vector
-  * ScaleCheck paths: `long_dot` (k-means per-centroid dot over the
+  * scale paths: `long_dot` (k-means per-centroid dot over the
   * once-scaled corpus) and `min_k_long` (in-row multi-probe selection
   * over packed (score, index) longs). Both must agree bit-for-bit with
   * their declarative twins and with their own interpreted eval.
