@@ -88,6 +88,12 @@ object ChunkPlanner {
   def lexRange(keys: Seq[Column], lower: Seq[Column], upper: Seq[Column]): Column =
     lexGreater(keys, lower, orEqual = true) && !lexGreater(keys, upper, orEqual = true)
 
+  /** [[collatedPlan]]'s default NDV guard: at or below it the divider is
+    * one exact window over the distinct keys, above it the distributed
+    * range-shuffle prefix sum.
+    */
+  val NdvGuard = 1000000L
+
   /** Collation-aware equi-depth chunk plan over a STRING key (SURVEY §7.3
     * hard part 1 — the reference renders NLSSORT(col, 'NLS_SORT=...')
     * range predicates so chunk boundaries respect the column's collation,
@@ -113,7 +119,7 @@ object ChunkPlanner {
       key: String,
       nChunks: Int,
       collation: String = "UTF8_LCASE",
-      ndvGuard: Long = 1000000L): DataFrame = {
+      ndvGuard: Long = NdvGuard): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val grouped = df
       .groupBy(expr(s"collate($key, '$collation')").as("kc"))

@@ -162,10 +162,10 @@ object Dedup {
     * [[bandedHammingPairs]], or an IVF cell index read as one band
     * (Similarity.ivfCandidatePairs): distinct (d1, d2) pairs sharing a
     * bucket, `maxBucket`-capped as documented on [[minhashCandidates]],
-    * materialized by an eager localCheckpoint. A composition that also
-    * probes the same index (q604/q605/q609's shape: corpus CC from the
-    * full pair set, THEN a shard admission against the same bands) builds
-    * `lshBands(sig)` ONCE and feeds both kernels. `bands` must not carry
+    * materialized by an eager localCheckpoint. [[IngestState.rebuild]]
+    * labels a band index through this kernel, and [[ingest]] probes the
+    * same bands with a shard, so one `lshBands(sig)` feeds both kernels.
+    * `bands` must not carry
     * an expression-derived key over an expensive lazy plan — [[lshBands]]
     * output is materialized, and a persisted index is a plain scan.
     */
@@ -272,10 +272,9 @@ object Dedup {
     * from-scratch rebuild, which MaterializedIndexSpec proves through a
     * disk round-trip (in production the append is a partition-local
     * parquet append: new files land in matched band partitions, existing
-    * files are never rewritten — the spec asserts that too). q609 chains
-    * two shards through the maintained index end-to-end, materializing
-    * the shard bands once for both the probe ([[incrementalCandidates]])
-    * and this append.
+    * files are never rewritten — the spec asserts that too). [[ingest]]
+    * appends the shard bands it probed with, so one band build serves
+    * both the probe ([[incrementalCandidates]]) and this append.
     */
   def appendBands(indexBands: DataFrame, shardBands: DataFrame): DataFrame =
     indexBands.select("doc_id", "band", "bucket")
@@ -735,11 +734,16 @@ object Dedup {
   def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
       maxIter: Int = 50): DataFrame = {
     val (meta, newLabeled) = labelDelta(labels, newPairs, maxIter)
-    labels
-      .join(meta, col("component") === col("mv"), "left_outer")
-      .select(col("doc_id"), coalesce(col("mc"), col("component")).as("component"))
-      .unionAll(newLabeled)
+    relabel(labels, meta).unionAll(newLabeled)
   }
+
+  /** (doc_id, component) with each component the `meta` labeling (mv →
+    * mc) touches remapped to its merge target: the one relabel join of
+    * [[incrementalComponents]] and [[prunedLabelRewrite]].
+    */
+  private def relabel(labels: DataFrame, meta: DataFrame): DataFrame =
+    labels.join(meta, col("component") === col("mv"), "left_outer")
+      .select(col("doc_id"), coalesce(col("mc"), col("component")).as("component"))
 
   /** The DELTA a shard's admitted edges induce on an existing labeling —
     * [[incrementalComponents]]' internals, exposed so a production store
@@ -825,15 +829,82 @@ object Dedup {
     */
   def prunedLabelRewrite(labels: DataFrame, meta: DataFrame, nParts: Int,
       partCol: String = "lblpart"): DataFrame = {
-    val parts = meta
-      .select(explode(array(pmod(col("mv"), lit(nParts.toLong)),
+    val parts = affectedLabelParts(meta, nParts)
+    relabel(labels.where(col(partCol).isin(parts.toSeq: _*)), broadcast(meta))
+      .withColumn(partCol, pmod(col("component"), lit(nParts.toLong)))
+  }
+
+  /** The label-store partitions [[prunedLabelRewrite]] reads and
+    * rewrites: pmod(mv | mc, nParts) over `meta`, collected driver-side.
+    */
+  private[graft] def affectedLabelParts(meta: DataFrame, nParts: Int): Set[Long] =
+    meta.select(explode(array(pmod(col("mv"), lit(nParts.toLong)),
         pmod(col("mc"), lit(nParts.toLong)))).as("p"))
-      .distinct().collect().map(_.getLong(0))
-    val newComp = coalesce(col("mc"), col("component"))
-    labels.where(col(partCol).isin(parts: _*))
-      .join(broadcast(meta), col("component") === col("mv"), "left_outer")
-      .select(col("doc_id"), newComp.as("component"),
-        pmod(newComp, lit(nParts.toLong)).as(partCol))
+      .distinct().collect().map(_.getLong(0)).toSet
+
+  /** The persisted state of continuous text ingestion: the LSH band index
+    * ([[lshBands]] rows; in production a band-partitioned parquet
+    * relation) and the component labels over it, (doc_id, component)
+    * with each component its minimum member id. `labels` is by-name and
+    * evaluated once, on first use: [[ingest]] forces it on a forked
+    * thread while the shard probes `bands`, so labels still to be
+    * computed — a corpus CC, or the previous ingest's merge — are
+    * computed beside the probe.
+    */
+  final class IngestState(val bands: DataFrame, labelsOf: => DataFrame) {
+    lazy val labels: DataFrame = labelsOf
+  }
+
+  object IngestState {
+    /** A corpus's one-shot state: `bands` and [[connectedComponents]]
+      * over `verify` of its full capped candidate pairs
+      * ([[minhashCandidatesBanded]]) — what [[ingest]] must reproduce
+      * over the union of the corpus and every ingested shard.
+      */
+    def rebuild(bands: DataFrame, maxBucket: Option[Int] = None,
+        verify: DataFrame => DataFrame = identity): IngestState =
+      new IngestState(bands,
+        connectedComponents(verify(minhashCandidatesBanded(bands, maxBucket))))
+  }
+
+  /** One ingest step over persisted state: admit a shard's bands against
+    * the index ([[incrementalCandidates]]), `verify` the candidates
+    * (identity, or a Jaccard screen over [[jaccardVerify]]), merge the
+    * admitted edges into the labels ([[incrementalComponents]]) and
+    * append the shard's bands to the index ([[appendBands]]). Returns
+    * the next state and the admitted edges (d1, d2).
+    *
+    * The state's labels and the shard's probe are independent until the
+    * merge, so the labels are forced on a forked thread while the
+    * calling thread builds `shardBands` (by-name, evaluated once), probes
+    * and verifies ([[graft.core.Par]]). Verified edges are materialized
+    * on that leg, so the overlap covers the verify work; the identity
+    * returns the already-checkpointed candidates as they are. The next
+    * state's labels are lazy: their merge runs when the next ingest forks
+    * them, or at the caller's first read, and they materialize at their
+    * first action (a lazy checkpoint), since a following ingest reads
+    * them three times. The next bands are the plain union of two
+    * materialized relations.
+    *
+    * Exact against [[IngestState.rebuild]] over the union: bands are
+    * per-document, and [[incrementalComponents]] equals CC over the
+    * old ∪ new edges. Under `maxBucket` a bucket's members stay connected
+    * on either side of the cap (all pairs, or hub-star edges to the
+    * union's min), so the labels compose across ingests without
+    * `verify`; with it, only when every bucket that spans ingest states
+    * stays on one side of the cap (IngestSpec).
+    */
+  def ingest(state: IngestState, shardBands: => DataFrame,
+      maxBucket: Option[Int] = None,
+      verify: DataFrame => DataFrame = identity): (IngestState, DataFrame) = {
+    val (labels, (shard, edges)) = graft.core.Par.two(state.labels) {
+      val shard = shardBands
+      val cand = incrementalCandidates(state.bands, shard, maxBucket)
+      val verified = verify(cand)
+      (shard, if (verified eq cand) cand else verified.localCheckpoint(true))
+    }
+    (new IngestState(appendBands(state.bands, shard),
+      incrementalComponents(labels, edges).localCheckpoint(false)), edges)
   }
 
   /** Near-dup pairs over a MULTI-LANE fingerprint (perceptual image

@@ -895,14 +895,7 @@ object EmbeddingQueries {
          |  FROM cand c JOIN dl x ON x.doc_id = c.d1 JOIN dl y ON y.doc_id = c.d2
          |  WHERE bit_count(xor(x.d0, y.d0)) + bit_count(xor(x.d1, y.d1))
          |      + bit_count(xor(x.d2, y.d2)) + bit_count(xor(x.d3, y.d3)) <= 3),
-         |sym AS (SELECT d1 AS src, d2 AS dst FROM vp
-         |        UNION SELECT d2, d1 FROM vp),
-         |reach(v, w) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.w = s.src),
-         |comp AS (SELECT v AS doc_id, LEAST(v, MIN(w)) AS component
-         |         FROM reach GROUP BY v)
+         |${TextQueries.componentsSql("vp")}
          |SELECT c.doc_id, c.component, n.n_members,
          |  c.doc_id = c.component AS keep
          |FROM comp c

@@ -353,22 +353,11 @@ object ExtendedQueries {
     QueryDef.sql(
       "q68_dedup_clusters",
       s"""WITH RECURSIVE ${TextQueries.sigSql},
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+         |${TextQueries.bandsSql},
          |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
          |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |sym AS (SELECT d1 AS src, d2 AS dst FROM cand
-         |        UNION SELECT d2, d1 FROM cand),
-         |reach(v, w) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.w = s.src),
-         |comp AS (SELECT v AS doc_id, LEAST(v, MIN(w)) AS component
-         |         FROM reach GROUP BY v)
+         |${TextQueries.componentsSql("cand")}
          |SELECT c.doc_id, c.component, n.n_members
          |FROM comp c
          |JOIN (SELECT component, COUNT(*) AS n_members
@@ -393,22 +382,11 @@ object ExtendedQueries {
     QueryDef.sql(
       "q584_dedup_savings",
       s"""WITH RECURSIVE ${TextQueries.sigSql},
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+         |${TextQueries.bandsSql},
          |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
          |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |sym AS (SELECT d1 AS src, d2 AS dst FROM cand
-         |        UNION SELECT d2, d1 FROM cand),
-         |reach(v, w) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.w = s.src),
-         |comp AS (SELECT v AS doc_id, LEAST(v, MIN(w)) AS component
-         |         FROM reach GROUP BY v),
+         |${TextQueries.componentsSql("cand")},
          |clus AS (SELECT component, COUNT(*) AS sz FROM comp GROUP BY component),
          |singles AS (SELECT COUNT(*) AS n FROM (${TextQueries.nearDupSql}) d
          |            WHERE doc_id NOT IN (SELECT doc_id FROM comp)),
@@ -1051,11 +1029,7 @@ object ExtendedQueries {
     QueryDef.sql(
       "q592_fuzzy_leakage",
       s"""WITH ${TextQueries.sigSql},
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+         |${TextQueries.bandsSql},
          |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
          |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),

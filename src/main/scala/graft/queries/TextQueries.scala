@@ -67,6 +67,31 @@ object TextQueries {
 
   private[queries] val sigSql = sigSqlFor(nearDupSql)
 
+  /** Shared oracle CTE over [[sigSqlFor]]'s `sig`: the four 2-row LSH
+    * bands as (doc_id, band, bucket), the engine's `Dedup.lshBands`.
+    */
+  private[queries] val bandsSql =
+    """bands AS (
+      |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
+      |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
+      |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
+      |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig)""".stripMargin
+
+  /** Shared oracle CTEs (under WITH RECURSIVE): connected components of
+    * the undirected (d1, d2) edge CTE named `edges`, as comp(doc_id,
+    * component) labeled by the least member id — a transitive closure,
+    * the reference for `Dedup.connectedComponents`.
+    */
+  private[queries] def componentsSql(edges: String): String =
+    s"""sym AS (SELECT d1 AS src, d2 AS dst FROM $edges
+       |        UNION SELECT d2, d1 FROM $edges),
+       |reach(v, w) AS (
+       |  SELECT src, dst FROM sym
+       |  UNION
+       |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.w = s.src),
+       |comp AS (SELECT v AS doc_id, LEAST(v, MIN(w)) AS component
+       |         FROM reach GROUP BY v)""".stripMargin
+
   /** Shared DSIR oracle (q613 full / q615 incremental — the sigSqlFor
     * pattern): raw corpus parameterized via `rawSql`, target fixed to
     * the index's lexicographically-first source, `restrict` narrows the
@@ -146,11 +171,7 @@ object TextQueries {
     */
   private val cappedCandSql =
     s"""${sigSqlFor(cloneDocsSql)},
-       |bands AS (
-       |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-       |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-       |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-       |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+       |$bandsSql,
        |stats AS (SELECT band, bucket, COUNT(*) AS bsz, MIN(doc_id) AS hub
        |          FROM bands GROUP BY band, bucket),
        |sized AS (SELECT b.doc_id, b.band, b.bucket, s.bsz, s.hub
@@ -277,11 +298,7 @@ object TextQueries {
     QueryDef.sql(
       "q26_minhash_pairs",
       s"""WITH $sigSql,
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig)
+         |$bandsSql
          |SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |FROM bands x JOIN bands y
          |  ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id
@@ -294,11 +311,7 @@ object TextQueries {
     QueryDef.sql(
       "q27_ngram_jaccard",
       s"""WITH $sigSql,
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+         |$bandsSql,
          |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
          |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
@@ -348,14 +361,7 @@ object TextQueries {
     QueryDef.sql(
       "q599_lsh_cap_clusters",
       s"""WITH RECURSIVE $cappedCandSql,
-         |sym AS (SELECT d1 AS src, d2 AS dst FROM cand
-         |        UNION SELECT d2, d1 FROM cand),
-         |reach(v, w) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.w = s.src),
-         |comp AS (SELECT v AS doc_id, LEAST(v, MIN(w)) AS component
-         |         FROM reach GROUP BY v)
+         |${componentsSql("cand")}
          |SELECT c.doc_id, c.component, n.n_members
          |FROM comp c
          |JOIN (SELECT component, COUNT(*) AS n_members
@@ -382,11 +388,7 @@ object TextQueries {
     QueryDef.sql(
       "q601_incremental_dedup",
       s"""WITH $sigSql,
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+         |$bandsSql,
          |idx AS (SELECT * FROM bands WHERE doc_id < 100000),
          |shd AS (SELECT * FROM bands WHERE doc_id >= 100000),
          |probe AS (SELECT LEAST(s.doc_id, i.doc_id) AS d1, GREATEST(s.doc_id, i.doc_id) AS d2
@@ -433,11 +435,7 @@ object TextQueries {
         val isShd = (c: String) =>
           s"($c >= 400000 OR ($c >= 100000 AND $c < 200000))"
         s"""WITH ${sigSqlFor(unionSql)},
-           |bands AS (
-           |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-           |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-           |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-           |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+           |$bandsSql,
            |stats AS (SELECT band, bucket, COUNT(*) AS bsz, MIN(doc_id) AS hub
            |          FROM bands GROUP BY band, bucket),
            |sized AS (SELECT b.doc_id, b.band, b.bucket, s.bsz, s.hub
@@ -492,22 +490,11 @@ object TextQueries {
             |SELECT doc_id + 100000 AS doc_id, substr(text, 21) AS text
             |FROM documents WHERE doc_id % 29 = 0""".stripMargin
         s"""WITH RECURSIVE ${sigSqlFor(uSql)},
-           |bands AS (
-           |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-           |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-           |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-           |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+           |$bandsSql,
            |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
            |  FROM bands x JOIN bands y
            |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-           |sym AS (SELECT d1 AS src, d2 AS dst FROM cand
-           |        UNION SELECT d2, d1 FROM cand),
-           |reach(v, w) AS (
-           |  SELECT src, dst FROM sym
-           |  UNION
-           |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.w = s.src),
-           |comp AS (SELECT v AS doc_id, LEAST(v, MIN(w)) AS component
-           |         FROM reach GROUP BY v)
+           |${componentsSql("cand")}
            |SELECT doc_id, component FROM comp ORDER BY doc_id""".stripMargin
       }) { (s, dir) =>
       val base = Tables(s, dir).documents
@@ -517,18 +504,12 @@ object TextQueries {
       val shard = base.where(col("doc_id") % 29 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
           expr("substring(text, 21)").as("text"))
-      // the corpus BAND relation materializes once (r10 optimization):
-      // the full pairing and the shard probe share one lshBands pass
-      // instead of each re-deriving the corpus-sized band relation
-      val bands0 = Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text"))
-      // corpus CC ∥ shard probe — independent until the merge (core.Par,
-      // guide §2.6; q605's composition note)
-      val (labels, newPairs) = graft.core.Par.two(
-        Dedup.connectedComponents(Dedup.minhashCandidatesBanded(bands0))) {
-        Dedup.incrementalCandidates(bands0,
-          Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")))
-      }
-      Dedup.incrementalComponents(labels, newPairs).orderBy("doc_id")
+      // one corpus band pass feeds the corpus CC and the shard probe;
+      // ingest computes the CC beside the probe
+      val state = Dedup.IngestState.rebuild(
+        Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text")))
+      Dedup.ingest(state, Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")))
+        ._1.labels.orderBy("doc_id")
     },
 
     // The 100-TB ingestion loop as ONE oracle-checked query: shard →
@@ -544,11 +525,7 @@ object TextQueries {
     QueryDef.sql(
       "q605_incremental_pipeline",
       s"""WITH RECURSIVE $sigSql,
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+         |$bandsSql,
          |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
          |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
@@ -568,14 +545,7 @@ object TextQueries {
          |  WHERE CAST(FLOOR(100000.0 * coalesce(i.n_inter, 0) /
          |    (na.n + nb.n - coalesce(i.n_inter, 0))) AS BIGINT) >= 50000),
          |allp AS (SELECT d1, d2 FROM idxp UNION ALL SELECT d1, d2 FROM ver),
-         |sym AS (SELECT d1 AS src, d2 AS dst FROM allp
-         |        UNION SELECT d2, d1 FROM allp),
-         |reach(v, w) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.w = s.src),
-         |comp AS (SELECT v AS doc_id, LEAST(v, MIN(w)) AS component
-         |         FROM reach GROUP BY v),
+         |${componentsSql("allp")},
          |clus AS (SELECT component, COUNT(*) AS sz FROM comp GROUP BY component),
          |singles AS (SELECT COUNT(*) AS n FROM docs
          |            WHERE doc_id NOT IN (SELECT doc_id FROM comp)),
@@ -592,24 +562,15 @@ object TextQueries {
         .select((col("doc_id") + 100000).as("doc_id"),
           expr("substring(text, 21)").as("text"))
       val union = index.unionAll(shard)
-      // ONE shared band materialization (q604's composition note)
-      val bands0 = Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text"))
-      // corpus CC and the shard probe/verify are data-independent until
-      // the cluster merge — overlap them (core.Par, guide §2.6): both
-      // legs are chains of small sequential jobs whose barriers leave
-      // executors idle, and FIFO scheduling backfills one leg's idle
-      // capacity with the other's tasks. The verify leg materializes its
-      // edges inside the branch so the overlap covers the expensive
-      // intersect work, not just the candidate probe.
-      val (labels, verified) = graft.core.Par.two(
-        Dedup.connectedComponents(Dedup.minhashCandidatesBanded(bands0))) {
-        val cand = Dedup.incrementalCandidates(bands0,
-          Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")))
-        Dedup.jaccardVerify(cand, union, "doc_id", "text")
-          .where(col("jaccard_scaled") >= 50000).select("d1", "d2")
-          .localCheckpoint(true)
-      }
-      val updated = Dedup.incrementalComponents(labels, verified)
+      // the corpus CC (unverified, as the oracle's idxp) runs beside the
+      // shard probe and its Jaccard verify
+      val state = Dedup.IngestState.rebuild(
+        Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text")))
+      val updated = Dedup.ingest(state,
+          Dedup.lshBands(Dedup.minhashSignatures(shard, "doc_id", "text")),
+          verify = Dedup.jaccardVerify(_, union, "doc_id", "text")
+            .where(col("jaccard_scaled") >= 50000).select("d1", "d2"))
+        ._1.labels
       val clus = updated.groupBy("component").agg(count(lit(1)).as("sz"))
       val singles = union.select("doc_id")
         .join(updated.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -648,22 +609,11 @@ object TextQueries {
             |SELECT doc_id + 100000 AS doc_id, substr(text, 21) AS text
             |FROM documents WHERE doc_id % 29 = 0""".stripMargin
         s"""WITH RECURSIVE ${sigSqlFor(uSql)},
-           |bands AS (
-           |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-           |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-           |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-           |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+           |$bandsSql,
            |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
            |  FROM bands x JOIN bands y
            |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-           |sym AS (SELECT d1 AS src, d2 AS dst FROM cand
-           |        UNION SELECT d2, d1 FROM cand),
-           |reach(v, w) AS (
-           |  SELECT src, dst FROM sym
-           |  UNION
-           |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.w = s.src),
-           |comp AS (SELECT v AS doc_id, LEAST(v, MIN(w)) AS component
-           |         FROM reach GROUP BY v)
+           |${componentsSql("cand")}
            |SELECT c.doc_id, c.component, n.n_members
            |FROM comp c
            |JOIN (SELECT component, COUNT(*) AS n_members
@@ -677,30 +627,14 @@ object TextQueries {
       val shard2 = base.where(col("doc_id") % 29 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
           expr("substring(text, 21)").as("text"))
-      // the persisted state: band index + labels (the corpus band
-      // relation materializes ONCE for the full pairing and both shard
-      // probes)
-      val bands0 = Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text"))
-      // corpus CC ∥ (shard1 admit + index APPEND) — independent until the
-      // first merge (core.Par, guide §2.6): the persisted state between
-      // ingests (labels + appended bands) materializes as before, in
-      // production both are on-disk relations. r11: shard1's band
-      // relation materializes ONCE and feeds both the probe and the
-      // append — one shard band pass, not one per consumer.
-      val (labels0, (cand1, bands1)) = graft.core.Par.two(
-        Dedup.connectedComponents(Dedup.minhashCandidatesBanded(bands0))) {
-        val sb1 = Dedup.lshBands(Dedup.minhashSignatures(shard1, "doc_id", "text"))
-        (Dedup.incrementalCandidates(bands0, sb1),
-          Dedup.appendBands(bands0, sb1).localCheckpoint(true))
-      }
-      // shard1's label merge ∥ shard2's probe of the MAINTAINED index —
-      // the merge needs (labels0, cand1), the probe needs bands1 only
-      val (labels1, cand2) = graft.core.Par.two(
-        Dedup.incrementalComponents(labels0, cand1).localCheckpoint(true)) {
-        Dedup.incrementalCandidates(bands1,
-          Dedup.lshBands(Dedup.minhashSignatures(shard2, "doc_id", "text")))
-      }
-      val labels2 = Dedup.incrementalComponents(labels1, cand2)
+      // the corpus CC runs beside shard 1's probe, and shard 1's label
+      // merge beside shard 2's probe of the appended index
+      val state0 = Dedup.IngestState.rebuild(
+        Dedup.lshBands(Dedup.minhashSignatures(index, "doc_id", "text")))
+      val (state1, _) = Dedup.ingest(state0,
+        Dedup.lshBands(Dedup.minhashSignatures(shard1, "doc_id", "text")))
+      val labels2 = Dedup.ingest(state1,
+        Dedup.lshBands(Dedup.minhashSignatures(shard2, "doc_id", "text")))._1.labels
       val sizes = labels2.groupBy("component").agg(count(lit(1)).as("n_members"))
       labels2.join(sizes, Seq("component"))
         .select(col("doc_id"), col("component"), col("n_members"))
@@ -892,11 +826,7 @@ object TextQueries {
     QueryDef.sql(
       "q618_jaccard_capped",
       s"""WITH ${sigSqlFor(bigDocsSql)},
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, m0::VARCHAR || '_' || m1::VARCHAR AS bucket FROM sig
-         |  UNION ALL SELECT doc_id, 1, m2::VARCHAR || '_' || m3::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 2, m4::VARCHAR || '_' || m5::VARCHAR FROM sig
-         |  UNION ALL SELECT doc_id, 3, m6::VARCHAR || '_' || m7::VARCHAR FROM sig),
+         |$bandsSql,
          |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
          |  FROM bands x JOIN bands y
          |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id

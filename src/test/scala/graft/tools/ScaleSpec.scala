@@ -60,6 +60,12 @@ class ScaleSpec extends SparkSpec {
     assert(Scale.parse(Seq("1")).map(_._2.size) == Right(Scale.registry.size))
   }
 
+  test("collated_chunks_unique passes below the NDV guard, on the exact-window path") {
+    val (out, failed) = runAll(Scale.registry.filter(_.name == "collated_chunks_unique"): _*)
+    assert(failed.isEmpty, out)
+    assert(out.size == 1 && !out.head.contains("\"error\""), out)
+  }
+
   test("uniform prints the key set of the old ScaleCheck line") {
     val (out, failed) = runAll(Scale.registry.filter(_.name == "uniform"): _*)
     assert(failed.isEmpty, out)
