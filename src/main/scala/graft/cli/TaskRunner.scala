@@ -107,7 +107,7 @@ object TaskRunner {
 
   /** Full-table row copy (the reference's stmt_migrate): canonicalized
     * projection written as parquet; safeMode=true merges onto an existing
-    * target by key (REPLACE INTO ≡ anti-join + append).
+    * target by key (REPLACE INTO: `Migrate.mergeApply` with no op column).
     */
   def stmtMigrate(spark: SparkSession, conf: Map[String, String]): Unit = {
     val src = spark.read.parquet(conf("src"))
@@ -120,7 +120,7 @@ object TaskRunner {
       if (conf.get("safeMode").contains("true")) {
         val target = spark.read.parquet(conf("dst"))
         val keys = conf("keys").split(",").map(_.trim).toSeq
-        Migrate.safeModeApply(target, canon, keys)
+        Migrate.mergeApply(target, canon, keys, opCol = None)
       } else canon
     result.write.mode("overwrite").parquet(s"$dir/migrated")
   }
@@ -179,14 +179,17 @@ object TaskRunner {
   }
 
   /** Batch CDC apply: change events (opCol: U/D/I semantics per
-    * Migrate.mergeApply) merged onto the target parquet.
+    * Migrate.mergeApply) merged onto the target parquet. The apply is
+    * lazy, so its jobs run in the write, named after it.
     */
   def cdcApply(spark: SparkSession, conf: Map[String, String]): Unit = {
     val target = spark.read.parquet(conf("dst"))
     val events = spark.read.parquet(conf("events"))
     val keys = conf("keys").split(",").map(_.trim).toSeq
-    val applied = Migrate.mergeApply(target, events, keys, conf.getOrElse("opCol", "op"))
-    applied.write.mode("overwrite").parquet(s"${out(conf)}/applied")
+    val applied = Migrate.mergeApply(target, events, keys, Some(conf.getOrElse("opCol", "op")))
+    Graft.span("Migrate.mergeApply") {
+      applied.write.mode("overwrite").parquet(s"${out(conf)}/applied")
+    }
   }
 
   def dataScan(spark: SparkSession, conf: Map[String, String]): Unit = {
@@ -228,7 +231,7 @@ object TaskRunner {
     if (conf.get("safeMode").contains("true")) {
       val keys = conf("keys").split(",").map(_.trim).toSeq
       val target = spark.read.parquet(conf("dst"))
-      val merged = Migrate.safeModeApply(target, res, keys).cache()
+      val merged = Migrate.mergeApply(target, res, keys, opCol = None).cache()
       merged.count() // materialize before overwriting the lazily-read target
       merged.write.mode("overwrite").parquet(s"$dir/applied")
     } else {

@@ -60,14 +60,9 @@ final class CompareRunner(
       case Some(prev) =>
         val failed = prev.where(col("status") =!= "EQUAL").select("chunk_id")
         if (failed.isEmpty) return prev
-        def restrict(df: DataFrame): DataFrame =
-          df.withColumn("__chunk", chunkId)
-            .join(broadcast(failed.withColumnRenamed("chunk_id", "__chunk")), Seq("__chunk"), "left_semi")
-            .drop("__chunk")
+        def restrict(df: DataFrame) = DataCompare.restrictToChunks(df, chunkId, failed)
         val fresh = DataCompare.compareChunks(restrict(src), restrict(dst), chunkId, cols)
-        val merged = prev.join(fresh.select(col("chunk_id")), Seq("chunk_id"), "left_anti")
-          .unionByName(fresh)
-        persist(merged)
+        persist(Migrate.mergeApply(prev, fresh, Seq("chunk_id"), opCol = None))
     }
   }
 

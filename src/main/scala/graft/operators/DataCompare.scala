@@ -21,11 +21,11 @@ import graft.functions.{Canonical, Checksums}
   *  2. chunk statuses come from one broadcast-able full-outer join on
   *     chunk_id (O(chunks) rows on both sides);
   *  3. the row-level rescan is restricted to mismatched chunks with a
-  *     broadcast semi-join filter before the expensive exceptAll — at a
-  *     0.1% mismatch rate the rescan reads 0.1% of chunks, mirroring the
-  *     reference's only-failed-chunks Resume (O9);
-  *  4. `exceptAll` keeps multiset semantics (duplicate counts) exactly as
-  *     `Cmp`'s sv-dv arithmetic does.
+  *     broadcast semi-join filter ([[restrictToChunks]]) before the row
+  *     diff — at a 0.1% mismatch rate the rescan reads 0.1% of chunks,
+  *     mirroring the reference's only-failed-chunks Resume (O9);
+  *  4. the row diff is one tagged union and one aggregate, multiset-exact
+  *     (duplicate counts) as `Cmp`'s sv-dv arithmetic is.
   */
 object DataCompare {
 
@@ -106,12 +106,12 @@ object DataCompare {
   /** Multiset row diff (J1): rows to add to dst (src∖dst) and rows to
     * delete from dst (dst∖src), duplicate-count aware. This is the
     * reference's `Cmp` sv−dv arithmetic (`data_compare_row.go:2137-2152`)
-    * distributed: ONE count-aggregate per side and ONE full-outer join
-    * produce both directions — half the shuffles of exceptAll×2, and the
+    * distributed: ONE sum(±1) aggregate over the tagged union of both sides
+    * produces both directions — half the shuffles of exceptAll×2, and the
     * aggregate collapses rows map-side before the shuffle. Rows with a
     * count delta are re-expanded |sv−dv| times, so the result is
     * multiset-identical to (src EXCEPT ALL dst) ∪ (dst EXCEPT ALL src).
-    * `mismatchedChunks` restricts the rescan (left-semi on chunk_id).
+    * `mismatchedChunks` restricts the rescan ([[restrictToChunks]]).
     */
   def rowDiff(
       src: DataFrame,
@@ -120,10 +120,7 @@ object DataCompare {
       chunkId: Option[Column] = None,
       mismatchedChunks: Option[DataFrame] = None): DataFrame = {
     def restrict(df: DataFrame): DataFrame = (chunkId, mismatchedChunks) match {
-      case (Some(cid), Some(mc)) =>
-        df.withColumn("__chunk", cid)
-          .join(broadcast(mc.select(col("chunk_id").as("__chunk"))), Seq("__chunk"), "left_semi")
-          .drop("__chunk")
+      case (Some(cid), Some(mc)) => restrictToChunks(df, cid, mc)
       case _ => df
     }
     // tagged union, ONE aggregate: src rows carry +1, dst rows −1, and
@@ -140,6 +137,15 @@ object DataCompare {
       .withColumn("__dup", explode(sequence(lit(1L), abs(col("__delta")))))
       .select(cols.map(col) :+ col("side"): _*)
   }
+
+  /** The rows of `df` whose computed `chunkId` is one of `chunks`'
+    * `chunk_id`s (a broadcast left-semi join): the one chunk restriction of
+    * [[rowDiff]] and `CompareRunner.resume`.
+    */
+  def restrictToChunks(df: DataFrame, chunkId: Column, chunks: DataFrame): DataFrame =
+    df.withColumn("__chunk", chunkId)
+      .join(broadcast(chunks.select(col("chunk_id").as("__chunk"))), Seq("__chunk"), "left_semi")
+      .drop("__chunk")
 
   /** Repair statement generation (J4, `data_compare_row.go:1289-1340`):
     * ADD → INSERT INTO target, DEL → DELETE FROM target, values rendered

@@ -4,14 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Graft
+
 /** Data migration sinks/sources (SURVEY S5/S6, §3.2):
   *
   *  - CSV export with the reference's option matrix (separator, quote,
   *    escape-backslash, NULL token, header — `csv_migrate_row.go:161-219`,
   *    value formatting `database/oracle/data_migrate.go:845-1010`);
-  *  - safe-mode apply (`REPLACE INTO` semantics,
-  *    `stmt_migrate_row.go:206-303`): key-based delete+insert, idempotent
-  *    under replay — the batch wins, unmatched target rows survive.
+  *  - one keyed apply, [[mergeApply]]: safe-mode REPLACE INTO
+  *    (`stmt_migrate_row.go:206-303`) and op-tagged MERGE / CDC apply
+  *    (`consumer.go:692-792`) are the same anti-join + append — the batch
+  *    wins, unmatched target rows survive, replay is a no-op.
   *
   * As one lazy plan: read → canonical projection → partitioned write; the
   * reference's chunk×thread pipeline collapses into Spark partitioning.
@@ -26,37 +29,28 @@ object Migrate {
       header: Boolean = true,
       timestampFormat: String = "yyyy-MM-dd HH:mm:ss.SSSSSS")
 
+  private def csvOptions(o: CsvOptions): Map[String, String] = Map(
+    "sep" -> o.sep, "quote" -> o.quote, "escape" -> o.escape,
+    "nullValue" -> o.nullValue, "header" -> o.header.toString,
+    "timestampFormat" -> o.timestampFormat,
+    "timestampNTZFormat" -> o.timestampFormat)
+
   def writeCsv(df: DataFrame, dir: String, o: CsvOptions = CsvOptions()): Unit =
-    df.write.mode("overwrite")
-      .option("sep", o.sep).option("quote", o.quote).option("escape", o.escape)
-      .option("nullValue", o.nullValue).option("header", o.header.toString)
-      .option("timestampFormat", o.timestampFormat)
-      .option("timestampNTZFormat", o.timestampFormat)
-      .csv(dir)
+    Graft.span("Migrate.writeCsv") {
+      df.write.mode("overwrite").options(csvOptions(o)).csv(dir)
+    }
 
   def readCsv(spark: SparkSession, dir: String, schema: StructType,
       o: CsvOptions = CsvOptions()): DataFrame =
-    spark.read.schema(schema)
-      .option("sep", o.sep).option("quote", o.quote).option("escape", o.escape)
-      .option("nullValue", o.nullValue).option("header", o.header.toString)
-      .option("timestampFormat", o.timestampFormat)
-      .option("timestampNTZFormat", o.timestampFormat)
-      .csv(dir)
-
-  /** Safe-mode upsert: REPLACE INTO ≡ anti-join out the batch's keys, then
-    * append the batch. Replay-safe: applying the same batch twice is a
-    * no-op the second time.
-    */
-  def safeModeApply(target: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame =
-    target.join(batch.select(keys.map(col): _*), keys, "left_anti")
-      .unionByName(batch)
+    spark.read.schema(schema).options(csvOptions(o)).csv(dir)
 
   /** Change-data capture between two snapshots — the inverse of
     * [[mergeApply]]: full-outer join on the keys comparing the value
     * columns, emitting one event row per difference with `op` ∈
     * {'I' (new key), 'D' (key gone), 'U' (values changed)}. Unchanged
     * rows produce nothing. `mergeApply(old, changeCapture(old, new), keys)`
-    * reconstructs `new` exactly.
+    * reconstructs `new` exactly. It must see both sides, so it keeps its
+    * full-outer join; it is not an apply.
     */
   def changeCapture(oldDf: DataFrame, newDf: DataFrame, keys: Seq[String]): DataFrame = {
     val valueCols = oldDf.columns.filterNot(keys.contains).toSeq
@@ -74,32 +68,24 @@ object Migrate {
         valueCols.map(c => coalesce(col(s"__n_$c"), col(c)).as(c))): _*)
   }
 
-  /** Full MERGE semantics without a table format: source rows carry an
-    * `opCol` — matched 'D' deletes the target row, any other matched op
-    * updates it (source values win), unmatched source rows insert, and
-    * untouched target rows pass through. One full-outer shuffle join on
-    * the keys (AQE skew-splits it); the SQL-equivalent is
-    * `MERGE INTO t USING s ON keys WHEN MATCHED AND op='D' THEN DELETE
-    * WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`.
-    * Source and target must share the non-key value columns; `op` is
-    * dropped from the result.
+  /** The one keyed apply (REPLACE INTO, or `MERGE INTO t USING s ON keys
+    * WHEN MATCHED AND op='D' THEN DELETE WHEN MATCHED THEN UPDATE SET *
+    * WHEN NOT MATCHED THEN INSERT *`): a left-anti join drops every target
+    * row whose key the batch carries, then the batch's upsert rows append —
+    * every row with `opCol = None`, else those whose op is not 'D', so an
+    * unmatched 'D' is a no-op and a NULL op acts as 'D'. NULL keys never
+    * match; a target that repeats a key keeps only the batch's rows for it.
+    * The result is keys ++ the target's value columns. Spark picks the join:
+    * a broadcast hash join for a small batch (the target is not shuffled),
+    * a sort-merge anti-join for a large one.
     */
   def mergeApply(target: DataFrame, source: DataFrame, keys: Seq[String],
-      opCol: String = "op"): DataFrame = {
-    val valueCols = target.columns.filterNot(keys.contains).toSeq
-    require(valueCols.forall(source.columns.contains),
-      s"source must carry target's value columns ${valueCols.mkString(",")}")
-    val t = target.select((keys ++ valueCols).map(col): _*)
-      .withColumn("__t", lit(true))
-    val sCols = keys.map(col) ++ valueCols.map(c => col(c).as(s"__s_$c")) :+ col(opCol).as("__op")
-    val s = source.select(sCols: _*).withColumn("__s", lit(true))
-    t.join(s, keys, "full_outer")
-      .where(!(coalesce(col("__t"), lit(false)) && coalesce(col("__s"), lit(false)) &&
-        col("__op") === "D"))
-      // unmatched 'D' ops are no-ops, not inserts
-      .where(coalesce(col("__t"), lit(false)) || col("__op") =!= "D")
-      .select((keys.map(col) ++ valueCols.map(c =>
-        when(col("__s").isNotNull, col(s"__s_$c")).otherwise(col(c)).as(c))): _*)
+      opCol: Option[String] = Some("op")): DataFrame = {
+    val cols = (keys ++ target.columns.filterNot(keys.contains)).map(col)
+    val upserts = opCol.fold(source)(op => source.where(col(op) =!= "D"))
+    target.select(cols: _*)
+      .join(source.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(upserts.select(cols: _*))
   }
 
   /** Hive-style partitioned parquet layout — the 100 TB fact-table

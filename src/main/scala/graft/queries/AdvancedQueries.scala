@@ -290,10 +290,11 @@ object AdvancedQueries {
     },
 
     // Full MERGE semantics (WHEN MATCHED AND op='D' DELETE / WHEN MATCHED
-    // UPDATE SET * / WHEN NOT MATCHED INSERT *) as one full-outer join —
-    // Migrate.mergeApply. The source batch updates every 50th order,
-    // deletes every 200th, and inserts fresh keys; the oracle spells the
-    // same decision table out with CASE over the joined sides.
+    // UPDATE SET * / WHEN NOT MATCHED INSERT *) as Migrate.mergeApply's
+    // left-anti join on the keys plus an append of the non-'D' batch rows.
+    // The source batch updates every 50th order, deletes every 200th, and
+    // inserts fresh keys; the oracle spells the same decision table out
+    // with CASE over a full-outer join of the two sides.
     QueryDef.sql(
       "q122_merge",
       """WITH tgt AS (SELECT o_orderkey AS k, o_orderstatus AS st,

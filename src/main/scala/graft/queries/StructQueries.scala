@@ -277,8 +277,8 @@ object StructQueries {
       val batch = o.where(col("o_orderkey") % 100 === 0)
         .select(col("o_orderkey"), col("o_custkey"),
           lit("R").as("o_orderstatus"), (col("o_totalprice") + 1).as("o_totalprice"))
-      val once  = Migrate.safeModeApply(o, batch, Seq("o_orderkey"))
-      val twice = Migrate.safeModeApply(once, batch, Seq("o_orderkey"))
+      val once  = Migrate.mergeApply(o, batch, Seq("o_orderkey"), opCol = None)
+      val twice = Migrate.mergeApply(once, batch, Seq("o_orderkey"), opCol = None)
       twice.orderBy("o_orderkey")
     },
 

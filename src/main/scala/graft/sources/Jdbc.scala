@@ -17,9 +17,9 @@ import graft.operators.Migrate
   * chunk predicate, fetched by executors in parallel; the batched INSERT
   * loop IS `df.write.option("batchsize", …).jdbc(...)` (DataFrameWriter
   * issues addBatch/executeBatch per partition); REPLACE-INTO safe mode is
-  * the same anti-join + append used by [[Migrate.safeModeApply]], applied
-  * through a read-modify-overwrite cycle when the target lacks native
-  * upsert.
+  * the engine's one keyed apply, [[Migrate.mergeApply]] with no op column
+  * (anti-join + append), applied through a read-modify-overwrite cycle
+  * when the target lacks native upsert.
   */
 object Jdbc {
 
@@ -116,9 +116,9 @@ object Jdbc {
       .jdbc(url, table, props)
 
   /** Safe-mode apply against a JDBC target without native REPLACE INTO:
-    * read the live table, anti-join out the batch's keys, append the
-    * batch, land the merged relation in a STAGING table, then swap the
-    * contents in-database (`DELETE FROM target; INSERT INTO target
+    * read the live table, anti-join out the batch's keys and append the
+    * batch ([[Migrate.mergeApply]], `opCol = None`), land the merged
+    * relation in a STAGING table, then swap the contents in-database (`DELETE FROM target; INSERT INTO target
     * SELECT * FROM stage`) over one driver connection — the merged rows
     * never pass through the driver, so the shape holds at any table
     * size. Idempotent under replay — the second application of the same
@@ -129,7 +129,7 @@ object Jdbc {
       batch: DataFrame, keys: Seq[String],
       props: Properties = new Properties()): Unit = {
     val stage = s"${table}_STAGE"
-    val merged = Migrate.safeModeApply(spark.read.jdbc(url, table, props), batch, keys)
+    val merged = Migrate.mergeApply(spark.read.jdbc(url, table, props), batch, keys, opCol = None)
     merged.write.mode("overwrite").jdbc(url, stage, props)
     swapFromStage(url, table, stage, props)
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Migrate
+
 /** The cdc_consume taskflow as Structured Streaming (SURVEY §2.9/§3.3;
   * `database/taskflow/cdc_consume.go`, `message/tidb/consumer.go`).
   *
@@ -114,9 +116,9 @@ object CdcPipeline {
 
   /** Idempotent keyed apply (ST8/J3, `consumer.go:692-792`): last event
     * per key wins inside the batch (UPDATE ≡ DELETE+INSERT), then the
-    * batch merges into the target: matched keys are replaced (or removed
-    * on DELETE), unmatched target rows survive. Replay-safe: applying the
-    * same batch twice is a no-op the second time.
+    * batch goes through `Migrate.mergeApply`: matched keys are replaced
+    * (or removed on DELETE), unmatched target rows survive. Replay-safe:
+    * applying the same batch twice is a no-op the second time.
     */
   def applyBatch(spark: SparkSession, target: DataFrame, batch: Seq[ChangeEvent],
       keyCol: String, valueCols: Seq[String]): DataFrame = {
@@ -128,16 +130,12 @@ object CdcPipeline {
       .groupBy { case (e, _) => e.key }
       .map { case (_, evs) => evs.maxBy { case (e, i) => (e.commitTs, i.toLong) }._1 }
       .toSeq
-    val upserts = lastPerKey.filter(e => e.queryType == "INSERT" || e.queryType == "UPDATE")
-      .map(e => (e.uniqKeys(keyCol), valueCols.map(c => e.columns.getOrElse(c, null))))
-    val touched = lastPerKey.map(_.uniqKeys(keyCol))
-    val touchedDf = touched.toDF(keyCol)
-    val upsertDf = upserts
-      .map { case (k, vs) => (k, vs) }
-      .toDF(keyCol, "__vals")
-      .select(col(keyCol) +: valueCols.zipWithIndex.map { case (c, i) =>
+    val ops = lastPerKey
+      .map(e => (e.uniqKeys(keyCol), if (e.queryType == "DELETE") "D" else "U",
+        valueCols.map(c => e.columns.getOrElse(c, null))))
+      .toDF(keyCol, "__op", "__vals")
+      .select(col(keyCol) +: col("__op") +: valueCols.zipWithIndex.map { case (c, i) =>
         col("__vals").getItem(i).as(c) }: _*)
-    target.join(broadcast(touchedDf), Seq(keyCol), "left_anti")
-      .unionByName(upsertDf)
+    Migrate.mergeApply(target, ops, Seq(keyCol), Some("__op"))
   }
 }
